@@ -38,6 +38,31 @@ def test_doc_stats_match_bruteforce(spark, index_dir, oracle):
     assert row["avgdl"] == pytest.approx(oracle.avgdl, rel=1e-12)
 
 
+def test_doc_stats_read_skips_empty_part_files(spark, index_dir, tmp_path):
+    """A Spark-written doc_stats dir can hold an empty part-00000 ahead
+    of the file with the row: the driver-side read takes the first file
+    that holds a row, and returns None (caller falls back to Spark)
+    when no file does."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from theoremsearch_spark.query import load_index_meta
+    from theoremsearch_spark.stats import read_doc_stats_row
+
+    want = load_index_meta(spark, f"{index_dir}/index")
+    src = f"{index_dir}/index/doc_stats/part-00000.parquet"
+    stats = tmp_path / "idx" / "doc_stats"
+    stats.mkdir(parents=True)
+    pq.write_table(pq.read_schema(src).empty_table(), stats / "part-00000.parquet")
+    assert read_doc_stats_row(str(stats)) is None
+    shutil.copy(src, stats / "part-00001.parquet")
+    assert read_doc_stats_row(str(stats)) == read_doc_stats_row(
+        f"{index_dir}/index/doc_stats"
+    )
+    assert load_index_meta(spark, str(tmp_path / "idx")) == want
+
+
 def test_term_stats_match_bruteforce(spark, index_dir, oracle):
     ts = spark.read.parquet(f"{index_dir}/index/term_stats").toPandas()
     got = dict(zip(ts["term"], ts["df"]))

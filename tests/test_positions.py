@@ -133,3 +133,23 @@ def test_positional_snippets_match_text_path(spark, index_dir, oracle, positions
     )
     assert len(a) > 0
     pd.testing.assert_frame_equal(a, b)
+
+
+def test_footer_row_count_none_when_no_files_seen(
+    spark, index_dir, positions_dir, tmp_path, monkeypatch
+):
+    """The driver-side footer walk only sees a local filesystem: on a
+    root where it finds no data file it returns None (never a silent 0),
+    and build_positions then counts the sidecar with Spark."""
+    from theoremsearch_spark import positions as P
+
+    n = P._footer_row_count(positions_dir)
+    assert n == spark.read.parquet(positions_dir).count() > 0
+    assert P._footer_row_count("s3a://bucket/index/positions") is None
+    assert P._footer_row_count(str(tmp_path)) is None
+
+    monkeypatch.setattr(P, "_footer_row_count", lambda root: None)
+    res = P.build_positions(
+        spark.read.parquet(f"{index_dir}/docs"), str(tmp_path / "idx")
+    )
+    assert res["position_rows"] == n

@@ -70,6 +70,23 @@ POSTINGS_SCHEMA = T.StructType(
     ]
 )
 
+# the columns serving reads: block metadata and the three byte streams
+# the scorer decodes (block_bytes, bucket and task_wall_ms are build
+# lineage and never cross into the Python scorer)
+SERVE_POSTINGS_SCHEMA = T.StructType(
+    [f for f in POSTINGS_SCHEMA if f.name not in ("block_bytes", "bucket", "task_wall_ms")]
+)
+
+# term_stats/: the term dictionary, one row per distinct term. Readers
+# pass it to spark.read so no footer-inference job runs per read.
+TERM_STATS_SCHEMA = T.StructType(
+    [
+        T.StructField("term", T.StringType(), True),
+        T.StructField("df", T.LongType(), False),
+        T.StructField("term_id", T.LongType(), False),
+    ]
+)
+
 MANIFEST_SCHEMA = T.StructType(
     [
         T.StructField("bucket", T.IntegerType(), False),
@@ -495,7 +512,8 @@ def build_index(
             # result is joined BEFORE the manifest commit, so a collision
             # still aborts the build with no bucket marked done.
             return (
-                spark.read.parquet(f"{out_dir}/term_stats")
+                spark.read.schema(TERM_STATS_SCHEMA)
+                .parquet(f"{out_dir}/term_stats")
                 .groupBy("term_id")
                 .agg(F.count_distinct("term").alias("n"))
                 .filter(F.col("n") > 1)
@@ -511,7 +529,7 @@ def build_index(
             meta = spark.read.parquet(f"{out_dir}/doc_stats").collect()[0]
         avgdl = float(meta["avgdl"])
 
-    tstats = spark.read.parquet(f"{out_dir}/term_stats")
+    tstats = spark.read.schema(TERM_STATS_SCHEMA).parquet(f"{out_dir}/term_stats")
 
     _check_bucket_rule(out_dir, done)
     salted = salt_segments(rows, tstats.select("term_id", "df"), salt_threshold, n_segments)

@@ -49,6 +49,16 @@ from theoremsearch_spark.extract import tokenize
 
 POS_BUCKETS = 32
 
+# positions/pb=<bucket>/ files; serving reads them with this schema (no
+# footer-inference job)
+POSITIONS_SCHEMA = T.StructType(
+    [
+        T.StructField("term_id", T.LongType(), False),
+        T.StructField("doc_id", T.LongType(), False),
+        T.StructField("pos", T.ArrayType(T.IntegerType(), True), True),
+    ]
+)
+
 @F.pandas_udf(T.StringType())
 def term_positions_udf(text: pd.Series) -> pd.Series:
     """text → "term:p1,p2 term2:p3 …" — one Python pass per doc,
@@ -144,24 +154,48 @@ def build_positions(
     # row count from the just-written parquet FOOTERS (driver-side
     # metadata walk, zero data read) — the previous
     # read.parquet(...).count() launched a full extra scan of the
-    # sidecar (∝ corpus: 4.4 M rows at sf0.1) just to report a number
+    # sidecar (∝ corpus: 4.4 M rows at sf0.1) just to report a number.
+    # A root the local walk cannot see (a non-local filesystem) falls
+    # back to that Spark count rather than reporting 0 rows.
     n = _footer_row_count(f"{out_dir}/positions")
+    if n is None:
+        n = (
+            docs.sparkSession.read.schema(POSITIONS_SCHEMA)
+            .parquet(f"{out_dir}/positions")
+            .count()
+        )
     return {"position_rows": int(n), "buckets": int(n_buckets)}
 
 
-def _footer_row_count(root: str) -> int:
+def _footer_row_count(root: str) -> int | None:
     """Sum of parquet-footer num_rows over every data file under
-    `root` — one driver-side metadata pass, no Spark job."""
+    `root` — one driver-side metadata pass, no Spark job. None when the
+    walk sees no data file (the root is not on the local filesystem, or
+    holds nothing): the caller then counts with Spark."""
     import os
 
     import pyarrow.parquet as pq
 
-    total = 0
+    total, seen = 0, False
     for dirpath, _dirs, files in os.walk(root):
         for f in files:
             if f.endswith(".parquet"):
+                seen = True
                 total += pq.ParquetFile(os.path.join(dirpath, f)).metadata.num_rows
-    return total
+    return total if seen else None
+
+
+_VOCAB_SCHEMA = T.StructType([T.StructField("t", T.StringType(), False)])
+
+# one row per (phrase query, token offset): the broadcast verify side
+_PHRASE_TERMS_SCHEMA = T.StructType(
+    [
+        T.StructField("query_id", T.IntegerType(), False),
+        T.StructField("term_id", T.LongType(), False),
+        T.StructField("offset", T.IntegerType(), False),
+        T.StructField("n_req", T.IntegerType(), False),
+    ]
+)
 
 
 def phrase_verify_positional(
@@ -188,23 +222,22 @@ def phrase_verify_positional(
     rows of the phrase terms within the candidate set."""
     from pyspark.sql import Window as W
 
-    from theoremsearch_spark.query import TOPK_SCHEMA
+    from theoremsearch_spark.query import TOPK_SCHEMA, local_frame
 
-    # phrase tokens → stored term_ids, via the SAME JVM xxhash64 the
-    # builder used (one tiny local-relation job — no lookup join and no
-    # driver-side hash reimplementation to drift)
     tok_lists = {
         int(qid): tokenize(str(txt))
         for qid, txt in zip(queries["query_id"], queries["query_text"])
     }
     vocab = sorted({t for toks in tok_lists.values() for t in toks})
     if not vocab:
-        return spark.createDataFrame([], TOPK_SCHEMA)
+        return local_frame(spark, TOPK_SCHEMA)
     # term → (term_id, murmur3(term_id)) via the SAME JVM functions the
-    # builder used (one tiny local-relation job — no driver-side hash
-    # reimplementation to drift); mm feeds the murmur3 pb rule below
+    # builder used (no driver-side hash reimplementation to drift); the
+    # optimizer evaluates this projection of a local relation on the
+    # driver, so the collect runs no Spark job. mm feeds the murmur3 pb
+    # rule below
     id_rows = (
-        spark.createDataFrame([(t,) for t in vocab], "t string")
+        local_frame(spark, _VOCAB_SCHEMA, pd.DataFrame({"t": vocab}))
         .select(
             "t",
             F.xxhash64("t").alias("tid"),
@@ -221,9 +254,10 @@ def phrase_verify_positional(
         for off, t in enumerate(toks)
     ]
     if not pt_rows:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    pt = spark.createDataFrame(
-        pt_rows, "query_id int, term_id long, offset int, n_req int"
+        return local_frame(spark, TOPK_SCHEMA)
+    pt = local_frame(
+        spark, _PHRASE_TERMS_SCHEMA,
+        pd.DataFrame(pt_rows, columns=_PHRASE_TERMS_SCHEMA.fieldNames()),
     )
     all_tids = {r[1] for r in pt_rows}
 
@@ -248,9 +282,9 @@ def phrase_verify_positional(
             p for b in pbs if os.path.isdir(p := f"{root}/pb={b}")
         )
     if not paths:
-        return spark.createDataFrame([], TOPK_SCHEMA)
+        return local_frame(spark, TOPK_SCHEMA)
     pos = (
-        spark.read.parquet(*paths)
+        spark.read.schema(POSITIONS_SCHEMA).parquet(*paths)
         .filter(F.col("term_id").isin([int(t) for t in all_tids]))
     )
 

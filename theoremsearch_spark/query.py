@@ -62,6 +62,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F, types as T
 
 from theoremsearch_spark import codec
+from theoremsearch_spark.build import SERVE_POSTINGS_SCHEMA, TERM_STATS_SCHEMA
 from theoremsearch_spark.extract import tokenize
 
 TOPK_SCHEMA = T.StructType(
@@ -95,6 +96,43 @@ def idf(n_docs: int, df: np.ndarray) -> np.ndarray:
 
 
 _E3 = (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.int64))
+
+
+def local_frame(
+    spark: SparkSession, schema: T.StructType, pdf: pd.DataFrame | None = None
+) -> DataFrame:
+    """Driver-side rows as a JVM LocalRelation: the columns cross once
+    as an Arrow table and Spark plans a LocalTableScan, with no job and
+    no Python worker. `spark.createDataFrame` on a Python list (and on
+    an EMPTY pandas frame, which skips the Arrow path) goes through
+    `sc.parallelize` instead; running that plan re-pickles the rows in
+    Python workers forked per default-parallelism slice, a fixed CPU
+    cost per request that no result size justifies.
+    `pdf` supplies the schema's columns by name; None = no rows."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    if pdf is None:
+        table = arrow_schema.empty_table()
+    else:
+        table = pa.Table.from_pandas(
+            pdf[schema.fieldNames()], schema=arrow_schema, preserve_index=False
+        )
+    return spark.createDataFrame(table, schema=schema)
+
+
+def serve_postings(spark: SparkSession, *paths: str) -> DataFrame:
+    """Posting blocks under `paths`, read with the declared serve schema:
+    no footer-inference job, and the build-lineage columns never reach
+    the scorer. The bucket=N dirs are read as plain files (serving
+    filters on term_id, pushed to row-group stats, never on bucket; and
+    multi-root partition discovery would reject several postings roots)."""
+    return (
+        spark.read.option("recursiveFileLookup", "true")
+        .schema(SERVE_POSTINGS_SCHEMA)
+        .parquet(*paths)
+    )
 
 
 class _Cols:
@@ -643,18 +681,14 @@ def topk_frames(
         queries, tstats, fgroups, salt_threshold, n_segments, not_terms=not_terms
     )
     if qterm is None:
-        return spark.createDataFrame(
-            [], _GROUP_SCHEMA if not rank else TOPK_SCHEMA
-        )
+        return local_frame(spark, _GROUP_SCHEMA if not rank else TOPK_SCHEMA)
     ids = [int(x) for x in qterm["term_id"].unique()]
 
     allowed_bc = None
     if allowed_docs is not None:
         arr = np.unique(np.asarray(list(allowed_docs), dtype=np.int64))
         if arr.size == 0:
-            return spark.createDataFrame(
-                [], _GROUP_SCHEMA if not rank else TOPK_SCHEMA
-            )
+            return local_frame(spark, _GROUP_SCHEMA if not rank else TOPK_SCHEMA)
         allowed_bc = spark.sparkContext.broadcast(arr)
 
     excluded_bc = None
@@ -792,7 +826,9 @@ def _serve_prep(
     its filters / must-nots) touches, plus the lazy postings frame.
 
     The doc_stats metadata is a driver-side pyarrow read (zero Spark
-    jobs), so prep costs exactly ONE job — the term-dictionary scan.
+    jobs) and both tables are read with their declared schemas (no
+    footer-inference job), so prep costs exactly ONE job — the
+    term-dictionary scan.
     Chunked serving (`topk_batched`) calls this once for the WHOLE
     batch and reuses the result for every chunk, so serve prep is O(1)
     in the chunk count — the same serve-prep-runs-once discipline
@@ -804,7 +840,8 @@ def _serve_prep(
 
     meta = load_index_meta(spark, index_dir)
     tstats = (
-        spark.read.parquet(f"{index_dir}/term_stats")
+        spark.read.schema(TERM_STATS_SCHEMA)
+        .parquet(f"{index_dir}/term_stats")
         .filter(F.col("term").isin(all_terms))
         .toPandas()
     )
@@ -820,7 +857,7 @@ def _serve_prep(
         )
     return {
         "tstats": tstats,
-        "blocks": spark.read.parquet(f"{index_dir}/postings"),
+        "blocks": serve_postings(spark, f"{index_dir}/postings"),
         "frame_kwargs": dict(
             n_docs=int(meta["n_docs"]),
             avgdl=float(meta["avgdl"]),
@@ -915,7 +952,7 @@ def topk_batched(
             parts.append(pdf)
             if chunk_times is not None:
                 chunk_times.append(dt)
-    return spark.createDataFrame(pd.concat(parts, ignore_index=True), schema=TOPK_SCHEMA)
+    return local_frame(spark, TOPK_SCHEMA, pd.concat(parts, ignore_index=True))
 
 
 def phrase_topk(
@@ -988,17 +1025,7 @@ def phrase_topk(
             return ranked
         ranked = _localize_hits(spark, ranked)  # final k·Q rows — tiny
         docs = _pruned_doc_meta(spark, docs_dir, ranked, [text_col])
-        needles = [
-            (int(qid), " " + " ".join(tokenize(str(txt))) + " ")
-            for qid, txt in zip(queries["query_id"], queries["query_text"])
-        ]
-        ndf = spark.createDataFrame(needles, "query_id int, needle string")
-        return (
-            ranked.join(docs, "doc_id")
-            .join(F.broadcast(ndf), "query_id")
-            .withColumn("snippet", _snippet_expr(text_col, snippet_pad))
-            .select("query_id", "rank", "doc_id", "score", "snippet")
-        )
+        return _snippets(spark, ranked, docs, queries, text_col, snippet_pad)
     # two consumers (file pruning + verify join): one EXECUTOR-side
     # materialization so the scoring pipeline runs once. Lazy: the
     # pruning aggregate triggers it, so checkpointing adds no extra job
@@ -1024,16 +1051,11 @@ def _verify_phrase(
     (score DESC, doc_id ASC). `snippet_pad` adds a `snippet` column:
     the normalized text window of ±pad chars around the FIRST phrase
     occurrence (locate + substring — still pure codegen)."""
-    needles = [
-        (int(qid), " " + " ".join(tokenize(str(txt))) + " ")
-        for qid, txt in zip(queries["query_id"], queries["query_text"])
-    ]
-    ndf = spark.createDataFrame(needles, "query_id int, needle string")
     norm = F.expr(_norm_sql(text_col))
     verified = (
         cand.select("query_id", "doc_id", "score")
         .join(docs, "doc_id")
-        .join(F.broadcast(ndf), "query_id")
+        .join(F.broadcast(_needles(spark, queries)), "query_id")
         .filter(F.contains(norm, F.col("needle")))
     )
     out_cols = ["query_id", "rank", "doc_id", "score"]
@@ -1047,6 +1069,37 @@ def _verify_phrase(
         verified.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(*out_cols)
+    )
+
+
+_NEEDLE_SCHEMA = T.StructType(
+    [
+        T.StructField("query_id", T.IntegerType(), False),
+        T.StructField("needle", T.StringType(), False),
+    ]
+)
+
+
+def _needles(spark: SparkSession, queries: pd.DataFrame) -> DataFrame:
+    """(query_id, ' t1 t2 … ') per phrase query — the normalized needle
+    the contains verification and the snippet window search for."""
+    return local_frame(spark, _NEEDLE_SCHEMA, pd.DataFrame({
+        "query_id": queries["query_id"].to_numpy(),
+        "needle": [" " + " ".join(tokenize(str(t))) + " " for t in queries["query_text"]],
+    }))
+
+
+def _snippets(
+    spark: SparkSession, ranked: DataFrame, docs: DataFrame,
+    queries: pd.DataFrame, text_col: str, pad: int,
+) -> DataFrame:
+    """Final positional-verified hits (localized, k·Q rows) joined to
+    their text and cut to the ±pad snippet window."""
+    return (
+        ranked.join(docs, "doc_id")
+        .join(F.broadcast(_needles(spark, queries)), "query_id")
+        .withColumn("snippet", _snippet_expr(text_col, pad))
+        .select("query_id", "rank", "doc_id", "score", "snippet")
     )
 
 
@@ -1123,7 +1176,7 @@ def _localize_hits(spark: SparkSession, hits: DataFrame) -> DataFrame:
     a local relation so the metadata-join consumers can (a) derive the
     doc_id bounds for scan pruning and (b) reuse it without re-running
     the whole scoring pipeline."""
-    return spark.createDataFrame(hits.toPandas(), schema=TOPK_SCHEMA)
+    return local_frame(spark, TOPK_SCHEMA, hits.toPandas())
 
 
 def _pruned_doc_meta(

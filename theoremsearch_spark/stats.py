@@ -266,17 +266,21 @@ def prepare_docs(
 def read_doc_stats_row(path: str) -> dict | None:
     """The one-row doc_stats sidecar read DRIVER-side with pyarrow —
     serving metadata lookups cost zero Spark jobs (a collect job for 7
-    scalars measured ~0.2 s of pure scheduling). None when the dir is
-    not a local glob-able path (caller falls back to spark.read)."""
+    scalars measured ~0.2 s of pure scheduling). The row comes from the
+    first file that holds one: a Spark-written dir can carry empty
+    part files (one per empty partition) ahead of it. None when no
+    local file holds a row (a non-local path, or an empty dir) — the
+    caller falls back to spark.read."""
     import glob as _glob
 
     import pyarrow.parquet as pq
 
-    files = sorted(_glob.glob(f"{path}/*.parquet"))
-    if not files:
-        return None
-    t = pq.read_table(files[0])
-    return {c: t.column(c)[0].as_py() for c in t.column_names}
+    for f in sorted(_glob.glob(f"{path}/*.parquet")):
+        pf = pq.ParquetFile(f)
+        if pf.metadata.num_rows > 0:
+            t = pf.read()
+            return {c: t.column(c)[0].as_py() for c in t.column_names}
+    return None
 
 
 ID_RANGES_MANIFEST = "_id_ranges.json"

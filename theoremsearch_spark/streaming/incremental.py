@@ -24,7 +24,7 @@ makes it viable on an unbounded 100 TB/day stream.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from theoremsearch_spark.corpus import DOCUMENTS_SCHEMA
 
@@ -179,9 +179,9 @@ def _prior_version_rows(
         )
         parts.append(_tombstone_rows(old.join(F.broadcast(urls_df), "url")))
     if not parts:
-        return spark.createDataFrame(
-            [], "doc_id long, url string, doc_len int, terms array<string>"
-        )
+        from theoremsearch_spark.query import local_frame
+
+        return local_frame(spark, TOMBSTONE_SCHEMA)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -508,6 +508,19 @@ def _with_filter_terms(docs: DataFrame, filter_cols) -> tuple[DataFrame, list[st
     return docs, cols
 
 
+# the columns `_tombstone_rows` projects; serving reads tombstones/ with
+# this schema (no footer-inference job). Hand-built roots that wrote no
+# url read it as NULL — only doc_id, doc_len and terms are ever used.
+TOMBSTONE_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), False),
+        T.StructField("url", T.StringType(), True),
+        T.StructField("doc_len", T.IntegerType(), True),
+        T.StructField("terms", T.ArrayType(T.StringType(), True), True),
+    ]
+)
+
+
 def _tombstone_rows(docs_df: DataFrame) -> DataFrame:
     """Project a docs frame into tombstone rows: (doc_id, url, doc_len,
     distinct terms parsed out of the stored "term:tf …" string) — the
@@ -561,12 +574,12 @@ def delete_documents(spark: SparkSession, out_dir: str, urls) -> dict:
     # already-tombstoned versions must not be re-corrected
     tomb_paths = _tombstone_paths(out_dir, [g["gen"] for g in gens])
     if tomb_paths:
-        prior = spark.read.parquet(*tomb_paths).select("doc_id")
+        prior = spark.read.schema(TOMBSTONE_SCHEMA).parquet(*tomb_paths).select("doc_id")
         dead = dead.join(prior, "doc_id", "left_anti")
     new_gen = _next_negative_gen(out_dir)
     gen_dir = f"{out_dir}/gen_{new_gen}"
     dead.write.mode("overwrite").parquet(f"{gen_dir}/tombstones")
-    n_dead = spark.read.parquet(f"{gen_dir}/tombstones").count()
+    n_dead = spark.read.schema(TOMBSTONE_SCHEMA).parquet(f"{gen_dir}/tombstones").count()
     if not n_dead:
         # nothing newly dead → no generation: empty delete-only commits
         # would grow the manifest forever, one per no-op run
@@ -669,7 +682,11 @@ def incremental_index(
             # subtract that doc from the serving stat corrections
             prior_paths = _tombstone_paths(out_dir, [g["gen"] for g in gens])
             if prior_paths:
-                prior = spark.read.parquet(*prior_paths).select("doc_id")
+                prior = (
+                    spark.read.schema(TOMBSTONE_SCHEMA)
+                    .parquet(*prior_paths)
+                    .select("doc_id")
+                )
                 dead = dead.join(prior, "doc_id", "left_anti")
             dead.write.mode("overwrite").parquet(f"{gen_dir}/tombstones")
         commit_generation(
@@ -748,6 +765,17 @@ def _tombstone_artifact(dead: DataFrame, count_terms=None):
     return mask, n, sum(int(r["dl"]) for r in mask_rows), dfc
 
 
+# one row per (generation, batch term): the scoring job's broadcast side
+_GEN_TERMS_SCHEMA = T.StructType(
+    [
+        T.StructField("gen", T.IntegerType(), False),
+        T.StructField("term_id", T.LongType(), False),
+        T.StructField("is_salted", T.BooleanType(), False),
+        T.StructField("ub_scale", T.DoubleType(), False),
+    ]
+)
+
+
 def topk_all_generations(
     spark: SparkSession, out_dir: str, queries, k: int = 10,
     filters=None, allowed_docs=None, max_batch: int = 0,
@@ -772,10 +800,14 @@ def topk_all_generations(
     chunk. Results are bitwise identical to unchunked serving: scoring
     is per-query and global statistics don't depend on the batch split.
     """
-    import pandas as pd
-
+    from theoremsearch_spark.build import TERM_STATS_SCHEMA
     from theoremsearch_spark.extract import tokenize
-    from theoremsearch_spark.query import _normalize_filters, topk_frames
+    from theoremsearch_spark.query import (
+        _normalize_filters,
+        local_frame,
+        serve_postings,
+        topk_frames,
+    )
 
     gens = sorted(_generations(spark, out_dir), key=lambda g: g["gen"])
     if not gens:
@@ -865,7 +897,11 @@ def topk_all_generations(
     dead = None
     tomb_paths = _tombstone_paths(out_dir, tomb_gen_ids)
     if tomb_paths:
-        dead = spark.read.parquet(*tomb_paths).dropDuplicates(["doc_id"])
+        dead = (
+            spark.read.schema(TOMBSTONE_SCHEMA)
+            .parquet(*tomb_paths)
+            .dropDuplicates(["doc_id"])
+        )
 
     # segment-sharded serving across generations: saltedness is a
     # PER-GENERATION property (each generation salted at its own df
@@ -887,8 +923,6 @@ def topk_all_generations(
     # salt thresholds are pure build-time metadata — applied in pandas
     # to the collected per-generation term rows below (no salt_info
     # join inside a Spark job)
-    import pandas as pd  # noqa: F811 — local alias for frame building
-
     thr = {
         int(g): (
             int(m["salt_threshold"])
@@ -907,7 +941,8 @@ def topk_all_generations(
     # salted_flags broadcast; now the flags enter the scoring plan as a
     # local relation and term_stats is read exactly once.
     tstats_plan = (
-        spark.read.parquet(*[f"{out_dir}/gen_{g}/index/term_stats" for g in gen_ids])
+        spark.read.schema(TERM_STATS_SCHEMA)
+        .parquet(*[f"{out_dir}/gen_{g}/index/term_stats" for g in gen_ids])
         .withColumn("gen", gen_col)
         .filter(F.col("term").isin(all_terms))
         .select("gen", "term", "term_id", "df")
@@ -945,48 +980,32 @@ def topk_all_generations(
         # a physical layout property, not a statistic)
         merged["df"] = merged["df"] - merged["term"].map(dfc).fillna(0).astype(int)
 
-    # block-max rescale factor needs the CORRECTED avgdl (block
-    # max_tf_norm was computed with the GENERATION's avgdl; tf_norm is
-    # monotonically increasing in avgdl, bounded by the denominator
-    # ratio ≤ avgdl_serve/avgdl_gen — the scale keeps pruning sound
-    # under merged+corrected statistics), so this frame is built after
-    # the artifact job resolves; `blocks` stays lazy, evaluated only
-    # inside the scoring job
-    ub_info = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "gen": list(metas),
-                "ub_scale": [
-                    max(1.0, avgdl / float(m["avgdl"])) for m in metas.values()
-                ],
-            }
-        )
-    )
-    # per-generation salted-routing flags as a LOCAL relation (collected
-    # with the term dictionary above) — no term_stats re-scan inside the
-    # scoring job
-    salted_flags = spark.createDataFrame(
-        [
-            (int(r.gen), int(r.term_id), bool(r.any_salted))
-            for r in per_gen.itertuples()
-        ],
-        "gen int, term_id long, is_salted boolean",
+    # per-(generation, term) routing and bound data as ONE local
+    # relation, collected with the term dictionary above (no term_stats
+    # scan inside the scoring job, one broadcast join): the
+    # salted-routing flag, and the block-max rescale factor.
+    # The factor needs the CORRECTED avgdl (block max_tf_norm was
+    # computed with the GENERATION's avgdl; tf_norm is monotonically
+    # increasing in avgdl, bounded by the denominator ratio ≤
+    # avgdl_serve/avgdl_gen — the scale keeps pruning sound under
+    # merged+corrected statistics), so this frame is built after the
+    # artifact job resolves; `blocks` stays lazy, evaluated only inside
+    # the scoring job
+    ub_scale = {g: max(1.0, avgdl / float(m["avgdl"])) for g, m in metas.items()}
+    gen_terms = local_frame(
+        spark, _GEN_TERMS_SCHEMA,
+        per_gen.assign(
+            is_salted=per_gen["any_salted"], ub_scale=per_gen["gen"].map(ub_scale)
+        ),
     )
     blocks = (
-        # recursiveFileLookup: the postings roots are bucket-partitioned
-        # (bucket=N dirs) and multi-root partition discovery rejects
-        # them; serving never reads the bucket column (it filters on
-        # term_id, pushed to row-group stats), so skipping partition
-        # inference loses nothing
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(*[f"{out_dir}/gen_{g}/index/postings" for g in gen_ids])
+        serve_postings(spark, *[f"{out_dir}/gen_{g}/index/postings" for g in gen_ids])
         .withColumn("gen", gen_col)
-        .join(F.broadcast(ub_info), "gen")
+        .join(F.broadcast(gen_terms), ["gen", "term_id"])
         .withColumn(
             "max_tf_norm", (F.col("max_tf_norm") * F.col("ub_scale")).cast("float")
         )
-        .drop("ub_scale")
-        .join(F.broadcast(salted_flags), ["gen", "term_id"])
+        .drop("ub_scale", "gen")
     )
     common = dict(
         n_docs=int(n_docs), avgdl=float(avgdl), k1=k1, b=b, k=k,
@@ -1004,6 +1023,8 @@ def topk_all_generations(
     # over the shared lazy `blocks` plan and the already-merged term
     # stats; chunk results are k rows/query — concatenating them on the
     # driver is tiny by construction
+    import pandas as pd
+
     from theoremsearch_spark.query import _GROUP_SCHEMA, TOPK_SCHEMA
 
     excl = excluded_mask
@@ -1016,9 +1037,9 @@ def topk_all_generations(
         ).toPandas()
         for i in range(0, len(queries), max_batch)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark, TOPK_SCHEMA if rank else _GROUP_SCHEMA,
         pd.concat(parts, ignore_index=True),
-        schema=TOPK_SCHEMA if rank else _GROUP_SCHEMA,
     )
 
 
@@ -1138,7 +1159,7 @@ def phrase_topk_all_generations(
     False=doc-text verify."""
     import os
 
-    from theoremsearch_spark.query import _localize_hits, _verify_phrase
+    from theoremsearch_spark.query import _localize_hits, _snippets, _verify_phrase
 
     # the k=0 conjunctive pool stays DISTRIBUTED (unranked — phrase
     # verification re-ranks): for common-token phrases it is a corpus
@@ -1174,21 +1195,7 @@ def phrase_topk_all_generations(
         ranked = _localize_hits(spark, ranked)
         ids = [int(r["doc_id"]) for r in ranked.select("doc_id").distinct().collect()]
         docs = pruned_generation_docs(spark, out_dir, ids, cols=[text_col])
-        from pyspark.sql import Window as W
-        from theoremsearch_spark.extract import tokenize
-        from theoremsearch_spark.query import _snippet_expr
-
-        needles = [
-            (int(qid), " " + " ".join(tokenize(str(txt))) + " ")
-            for qid, txt in zip(queries["query_id"], queries["query_text"])
-        ]
-        ndf = spark.createDataFrame(needles, "query_id int, needle string")
-        return (
-            ranked.join(docs, "doc_id")
-            .join(F.broadcast(ndf), "query_id")
-            .withColumn("snippet", _snippet_expr(text_col, snippet_pad))
-            .select("query_id", "rank", "doc_id", "score", "snippet")
-        )
+        return _snippets(spark, ranked, docs, queries, text_col, snippet_pad)
     # doc-text verify: two consumers (pruning aggregate + verify join) —
     # one executor-side materialization so scoring runs once; the driver
     # sees only the coarse-bucket aggregate, never the pool
