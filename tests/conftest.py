@@ -61,3 +61,17 @@ def oracle(docs_pdf, corpus_pdf):
         corpus_pdf[["url", "text"]], on="url", validate="one_to_one"
     )
     return BM25Oracle(truth)
+
+
+@pytest.fixture()
+def tiny_arrow_batches(spark):
+    """Arrow batches of 3 rows for the test's duration: scoring groups
+    then straddle batch boundaries, the case the batched scorer must
+    carry across batches. The session value is restored afterwards."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, before)

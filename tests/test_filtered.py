@@ -186,8 +186,9 @@ def test_light_query_stays_single_task(spark, filter_index):
 
 def test_merge_shuffle_is_k_rows_per_segment(spark, filter_index):
     """The per-(query, segment) stage emits ≤ k rows each — the global
-    merge moves O(segments·k) rows, not O(postings)."""
-    from theoremsearch_spark.query import _GROUP_SCHEMA, _score_group, load_index_meta
+    merge moves O(segments·k) rows, not O(postings). Runs the
+    production scoring stage (`_score_fan`) over the test's fan."""
+    from theoremsearch_spark.query import _score_fan, load_index_meta
 
     idx = f"{filter_index}/index"
     meta = load_index_meta(spark, idx)
@@ -198,13 +199,30 @@ def test_merge_shuffle_is_k_rows_per_segment(spark, filter_index):
         F.col("term_id").isin([int(x) for x in qterm["term_id"].unique()])
     )
     fan = _fan(spark, blocks, qterm, SALT)
-
-    def score(key, pdf):
-        return _score_group(
-            pdf, n_docs=int(meta["n_docs"]), avgdl=float(meta["avgdl"]),
-            k1=float(meta["k1"]), b=float(meta["b"]), k=K,
-        )
-
-    part = fan.groupBy("query_id", "serve_seg").applyInPandas(score, schema=_GROUP_SCHEMA)
+    part = _score_fan(
+        fan, n_docs=int(meta["n_docs"]), avgdl=float(meta["avgdl"]),
+        k1=float(meta["k1"]), b=float(meta["b"]), k=K,
+    )
     n = part.count()
     assert 0 < n <= NSEG * K
+
+
+def test_filters_with_straddling_groups(
+    spark, filter_index, fdocs_pdf, foracle, tiny_arrow_batches
+):
+    """Filtered serving under 3-row Arrow batches (scoring groups
+    straddle batches): a salted filter list and an OR-group both still
+    equal the oracle."""
+    lang = fdocs_pdf["lang"]
+    for filters, allowed in (
+        (["lang=en"], lang == "en"),
+        ([["lang=de", "lang=fr"]], lang.isin(["de", "fr"])),
+    ):
+        allowed_ids = fdocs_pdf.loc[allowed, "doc_id"].to_numpy()
+        hits = topk(
+            spark, f"{filter_index}/index", QS, k=K, filters=filters
+        ).toPandas()
+        for qid, row in QS.set_index("query_id").iterrows():
+            want = oracle_filtered_topk(foracle, row["query_text"], allowed_ids, K)
+            got = hits[hits["query_id"] == qid].sort_values("rank")
+            _compare_topk(got, want, qid)

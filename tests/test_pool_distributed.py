@@ -11,8 +11,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import DataFrame
 
+from theoremsearch_spark.build import TERM_STATS_SCHEMA
 from theoremsearch_spark.query import phrase_topk, topk
 
 K = 10
@@ -29,17 +29,35 @@ def _common_phrase(oracle) -> str:
 
 
 @pytest.fixture()
-def forbid_topandas(monkeypatch):
+def forbid_topandas(spark, monkeypatch):
     """Any toPandas during the serving call is a driver localization —
-    fail loudly with the offending plan's column set."""
+    fail loudly with the offending plan's column set. The fence patches
+    the DataFrame class the session actually serves (Spark 4's classic
+    DataFrame defines its own toPandas, so patching the
+    `pyspark.sql.DataFrame` base would never fire). The term-dictionary
+    rows of serve prep (a few rows per query term) are the one collect
+    serving needs; they go through."""
+    cls = type(spark.range(1))
+    orig = cls.toPandas
+    term_dict = TERM_STATS_SCHEMA.fieldNames()
 
-    def boom(self, *a, **kw):  # pragma: no cover - failure path
+    def fence(self, *a, **kw):
+        if self.columns == term_dict:
+            return orig(self, *a, **kw)
         raise AssertionError(
             f"driver localization (toPandas) of a DataFrame with columns "
             f"{self.columns} during pool serving"
         )
 
-    monkeypatch.setattr(DataFrame, "toPandas", boom)
+    monkeypatch.setattr(cls, "toPandas", fence)
+
+
+def test_fence_fails_on_pool_topandas(spark, index_dir, oracle, forbid_topandas):
+    """The fence is live: localizing the candidate pool trips it."""
+    qs = pd.DataFrame([(0, _common_phrase(oracle))], columns=["query_id", "query_text"])
+    pool = topk(spark, f"{index_dir}/index", qs, k=0, mode="and", rank=False)
+    with pytest.raises(AssertionError, match="driver localization"):
+        pool.toPandas()
 
 
 def test_phrase_doc_text_path_never_localizes(

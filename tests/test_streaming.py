@@ -737,6 +737,7 @@ def test_generation_serving_job_count_is_constant(spark, tmp_path):
     the SAME number of Spark jobs for G=2 and G=4 (multi-path scans +
     one grouped scoring job — never per-generation reads, which would
     grow the query plan linearly with streaming uptime)."""
+    from tests.test_serve_fixed_costs import jobs_launched
     from theoremsearch_spark.build import build_index
     from theoremsearch_spark.stats import prepare_docs
     from theoremsearch_spark.streaming.incremental import commit_generation
@@ -759,17 +760,15 @@ def test_generation_serving_job_count_is_constant(spark, tmp_path):
     root4 = make_root("g4", [0, 200, 400, 600, 800])
     qs = query_set(800)[["query_id", "query_text"]].head(5)
 
-    def count_jobs(root, tag):
-        sc = spark.sparkContext
-        sc.setJobGroup(tag, tag)
-        try:
-            topk_all_generations(spark, root, qs, k=5).toPandas()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(tag))
+    def count_jobs(root):
+        # job-id advance, not a job group: the prep passes run on
+        # worker threads, which a thread-local job group never sees
+        return jobs_launched(
+            spark, lambda: topk_all_generations(spark, root, qs, k=5).toPandas()
+        )
 
-    j2 = count_jobs(root2, "jobs_g2")
-    j4 = count_jobs(root4, "jobs_g4")
+    j2 = count_jobs(root2)
+    j4 = count_jobs(root4)
     assert j4 == j2, f"serving jobs grew with generation count: {j2} -> {j4}"
 
 

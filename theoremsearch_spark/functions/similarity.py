@@ -21,10 +21,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window as W, functions as F
+from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
 from theoremsearch_spark.functions.widen import widen_small_input as _widen
 from theoremsearch_spark.operators.relational import t
+from theoremsearch_spark.query import local_frame
 
 N_QUERY_VECS = 5
 LSH_BITS = 8
@@ -212,6 +213,28 @@ def _dot(col, vec: "np.ndarray"):
     )
 
 
+_PROBE_SCHEMA = T.StructType([
+    T.StructField("query_id", T.LongType()),
+    T.StructField("cell", T.IntegerType()),
+])
+_QVEC_SCHEMA = T.StructType([
+    T.StructField("query_id", T.LongType()),
+    T.StructField("qvec", T.ArrayType(T.DoubleType())),
+])
+
+
+def _probe_frames(spark, probe_rows, query_ids, Q: np.ndarray) -> tuple:
+    """(query_id, cell) probes and (query_id, qvec) query vectors as JVM
+    local relations (`query.local_frame`): no `sc.parallelize`, so no
+    Python workers re-pickle the rows when the serve plan runs."""
+    probes = pd.DataFrame(probe_rows, columns=["query_id", "cell"])
+    qv = pd.DataFrame({"query_id": np.asarray(query_ids), "qvec": list(Q)})
+    return (
+        local_frame(spark, _PROBE_SCHEMA, probes),
+        local_frame(spark, _QVEC_SCHEMA, qv),
+    )
+
+
 def ann_ivf_topk(
     emb: DataFrame, queries_pdf, dim: int, k: int = 10,
     n_centroids: int = N_CENTROIDS, n_probe: int = N_PROBE,
@@ -271,11 +294,7 @@ def ann_ivf_topk(
         for qid, row in zip(queries_pdf["query_id"], sims)
         for c in np.argsort(-row)[:n_probe]
     ]
-    probes = spark.createDataFrame(probe_rows, "query_id long, cell int")
-    qv = spark.createDataFrame(
-        [(int(q), [float(x) for x in v]) for q, v in zip(queries_pdf["query_id"], Q)],
-        "query_id long, qvec array<double>",
-    )
+    probes, qv = _probe_frames(spark, probe_rows, queries_pdf["query_id"], Q)
     cand = cells.join(F.broadcast(probes.join(qv, "query_id")), "cell")
     scored_c = cand.select(
         "query_id", "vec_id", F.round(_cosine("qvec", "embedding"), 4).alias("cos")
@@ -606,7 +625,10 @@ def _latest_versions(spark, out_dir: str, ids_df: DataFrame, n_gens: int) -> Dat
         for p in _committed_gen_dirs(out_dir, "keyindex", n_gens, leaf=f"vb={b}")
     ]
     if not paths:
-        return spark.createDataFrame([], "vec_id long, gen int")
+        return local_frame(spark, T.StructType([
+            T.StructField("vec_id", T.LongType()),
+            T.StructField("gen", T.IntegerType()),
+        ]))
     ki = spark.read.option("basePath", f"{out_dir}/keyindex").parquet(*paths)
     return (
         ki.join(ids_df, "vec_id")
@@ -1024,10 +1046,15 @@ def ann_ivf_search(
         for p in _committed_gen_dirs(out_dir, "cells", n_gens, leaf=f"cell={c}")
     ]
     if not paths:
-        cols = "query_id long, vec_id long, cos double, rnk int"
+        fields = [
+            T.StructField("query_id", T.LongType()),
+            T.StructField("vec_id", T.LongType()),
+            T.StructField("cos", T.DoubleType()),
+        ]
         if rescore_col is not None:
-            cols = "query_id long, vec_id long, cos double, wscore double, rnk int"
-        return spark.createDataFrame([], cols)
+            fields.append(T.StructField("wscore", T.DoubleType()))
+        fields.append(T.StructField("rnk", T.IntegerType()))
+        return local_frame(spark, T.StructType(fields))
     # basePath keeps the gen/cell partition columns parseable from the
     # selected subdirectories
     cells = spark.read.option("basePath", f"{out_dir}/cells").parquet(*paths)
@@ -1043,14 +1070,10 @@ def ann_ivf_search(
             cells = _exclude_tombstoned_mask(cells, tomb)
         else:
             cells = _exclude_tombstoned(cells, tomb)
-    probes = spark.createDataFrame(probe_rows, "query_id long, cell int")
     # ship the UNIT query vectors: cosine then needs only the candidate
     # norm per row (_cosine_unitq) — the query norm is divided out here
     # once instead of per candidate row by codegen
-    qv = spark.createDataFrame(
-        [(int(q), [float(x) for x in v]) for q, v in zip(queries_pdf["query_id"], Qn)],
-        "query_id long, qvec array<double>",
-    )
+    probes, qv = _probe_frames(spark, probe_rows, queries_pdf["query_id"], Qn)
     cand = cells.join(F.broadcast(probes.join(qv, "query_id")), "cell")
     extra = [rescore_col] if rescore_col else []
     cos_col = (
@@ -1157,7 +1180,7 @@ def ann_ivf_search_batched(
             parts.append(pdf)
             if chunk_times is not None:
                 chunk_times.append(dt)
-    return spark.createDataFrame(pd.concat(parts, ignore_index=True), schema=schema)
+    return local_frame(spark, schema, pd.concat(parts, ignore_index=True))
 
 
 def ann_rescored_topk(

@@ -12,16 +12,21 @@ retrieval:
      reads a few MB of a multi-TB index;
   3. fan blocks out to queries with a broadcast (term → query) join;
   4. **segment-sharded scoring**: queries that touch a salted (heavy /
-     stopword) term are scored in one task per doc-segment
-     (`groupBy(query_id, serve_seg)`). A heavy term's segment-s blocks
-     route to exactly task (q, s) — never replicated — so no task ever
-     receives a whole stopword posting list; light lists (df ≤
-     salt_threshold, bounded bytes by construction) are replicated to
-     the S tasks and filtered to the task's doc residue. Segments are
+     stopword) term are scored as one group per doc-segment, keyed
+     (query_id, serve_seg). A heavy term's segment-s blocks route to
+     exactly group (q, s) — never replicated — so no group ever holds
+     a whole stopword posting list; light lists (df ≤ salt_threshold,
+     bounded bytes by construction) are replicated to the S groups
+     and filtered to the group's doc residue. Segments are
      doc-disjoint (build salts by doc_id % S), so per-segment top-k is
      exact for its docs; the global answer is a tiny merge of S·k rows
-     per query. Queries with no heavy term keep the single-task path.
-  5. inside the task: vectorized block-max pruning (MaxScore/WAND
+     per query. Queries with no heavy term keep the single-group path.
+     The fan is hash-partitioned and sorted by the group key and scored
+     by one `mapInPandas` pass (`_score_fan`): each Arrow batch is
+     converted to numpy once and cut into groups at key changes, and a
+     group that straddles a batch is carried into the next one — no
+     per-group pandas↔Arrow round trip;
+  5. per group: vectorized block-max pruning (MaxScore/WAND
      family): terms are processed rarest-first with exact partial
      scores; once the summed upper bound (idf·max_tf_norm) of the
      remaining lists falls below the running kth score, those lists are
@@ -96,6 +101,7 @@ def idf(n_docs: int, df: np.ndarray) -> np.ndarray:
 
 
 _E3 = (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.int64))
+_E2 = (np.empty(0, np.int64), np.empty(0, np.float64))
 
 
 def local_frame(
@@ -137,9 +143,10 @@ def serve_postings(spark: SparkSession, *paths: str) -> DataFrame:
 
 class _Cols:
     """One (query, segment) group's fan rows as plain numpy/array
-    columns, sorted by (term_id, segment, block_id). The pandas frame is
-    touched exactly once — per-group pandas groupby/sort/getitem
-    machinery measured ~3× the actual decode+score cost."""
+    columns, sorted by (term_id, segment, block_id). Built from the
+    group's column arrays (slices of one Arrow batch's conversion), so
+    no pandas machinery runs per group — per-group pandas
+    groupby/sort/getitem measured ~3× the actual decode+score cost."""
 
     __slots__ = (
         "term_id", "segment", "block_id", "df", "first_doc", "last_doc",
@@ -147,38 +154,34 @@ class _Cols:
         "is_filter", "fgroup", "is_not", "id2term",
     )
 
-    def __init__(self, pdf: pd.DataFrame):
-        term_id = pdf["term_id"].to_numpy(np.int64)
-        segment = pdf["segment"].to_numpy(np.int64)
-        block_id = pdf["block_id"].to_numpy(np.int64)
+    def __init__(self, cols: dict[str, np.ndarray]):
+        term_id = np.asarray(cols["term_id"], np.int64)
+        segment = np.asarray(cols["segment"], np.int64)
+        block_id = np.asarray(cols["block_id"], np.int64)
         o = np.lexsort((block_id, segment, term_id))
         self.term_id = term_id[o]
         self.segment = segment[o]
         self.block_id = block_id[o]
-        self.df = pdf["df"].to_numpy(np.int64)[o]
-        self.first_doc = pdf["first_doc"].to_numpy(np.int64)[o]
-        self.last_doc = pdf["last_doc"].to_numpy(np.int64)[o]
-        self.n_docs = pdf["n_docs"].to_numpy(np.int64)[o]
-        self.max_norm = pdf["max_tf_norm"].to_numpy(np.float64)[o]
-        db = pdf["doc_bytes"].to_numpy()
-        tb = pdf["tf_bytes"].to_numpy()
-        lb = pdf["dl_bytes"].to_numpy()
-        self.doc_bytes = db[o]
-        self.tf_bytes = tb[o]
-        self.dl_bytes = lb[o]
-        if "is_filter" in pdf.columns:
-            self.is_filter = pdf["is_filter"].to_numpy(bool)[o]
-            self.fgroup = pdf["fgroup"].to_numpy(np.int64)[o]
+        self.df = np.asarray(cols["df"], np.int64)[o]
+        self.first_doc = np.asarray(cols["first_doc"], np.int64)[o]
+        self.last_doc = np.asarray(cols["last_doc"], np.int64)[o]
+        self.n_docs = np.asarray(cols["n_docs"], np.int64)[o]
+        self.max_norm = np.asarray(cols["max_tf_norm"], np.float64)[o]
+        self.doc_bytes = cols["doc_bytes"][o]
+        self.tf_bytes = cols["tf_bytes"][o]
+        self.dl_bytes = cols["dl_bytes"][o]
+        if "is_filter" in cols:
+            self.is_filter = np.asarray(cols["is_filter"], bool)[o]
+            self.fgroup = np.asarray(cols["fgroup"], np.int64)[o]
         else:
-            self.is_filter = np.zeros(len(pdf), dtype=bool)
-            self.fgroup = np.full(len(pdf), -1, dtype=np.int64)
-        if "is_not" in pdf.columns:
-            self.is_not = pdf["is_not"].to_numpy(bool)[o]
+            self.is_filter = np.zeros(o.size, dtype=bool)
+            self.fgroup = np.full(o.size, -1, dtype=np.int64)
+        if "is_not" in cols:
+            self.is_not = np.asarray(cols["is_not"], bool)[o]
         else:
-            self.is_not = np.zeros(len(pdf), dtype=bool)
-        self.id2term = dict(
-            zip(pdf["term_id"].to_numpy(np.int64), pdf["term"].to_numpy())
-        )
+            self.is_not = np.zeros(o.size, dtype=bool)
+        self.id2term = dict(zip(term_id, cols["term"]))
+
 
 class _ColSlice:
     """Index view over _Cols rows for one term's (already ordered)
@@ -284,12 +287,39 @@ def _score_group(
     """
     if pdf.empty:
         return _EMPTY_GROUP
-    qid = int(pdf["query_id"].iloc[0])
-    q_segs = int(pdf["q_segs"].iloc[0]) if "q_segs" in pdf else 1
-    seg = int(pdf["serve_seg"].iloc[0]) if "serve_seg" in pdf else 0
-    n_fgroups = int(pdf["n_fgroups"].iloc[0]) if "n_fgroups" in pdf else 0
+    ids, sc = _score_cols(
+        {c: pdf[c].to_numpy() for c in pdf.columns},
+        n_docs=n_docs, avgdl=avgdl, k1=k1, b=b, k=k,
+        allowed_global=allowed_global, excluded_global=excluded_global,
+        mode=mode,
+    )
+    if not ids.size:
+        return _EMPTY_GROUP
+    return pd.DataFrame(
+        {"query_id": int(pdf["query_id"].iloc[0]), "doc_id": ids, "score": sc}
+    )
 
-    c = _Cols(pdf)  # one pandas→numpy conversion; everything below is numpy
+
+def _score_cols(
+    cols: dict[str, np.ndarray],
+    *,
+    n_docs: int,
+    avgdl: float,
+    k1: float,
+    b: float,
+    k: int,
+    allowed_global: np.ndarray | None = None,
+    excluded_global: np.ndarray | None = None,
+    mode: str = "or",
+) -> tuple[np.ndarray, np.ndarray]:
+    """`_score_group` over one group's column arrays: returns the
+    segment's top-k as (doc_ids, scores), ordered by (score DESC,
+    doc_id ASC)."""
+    q_segs = int(cols["q_segs"][0]) if "q_segs" in cols else 1
+    seg = int(cols["serve_seg"][0]) if "serve_seg" in cols else 0
+    n_fgroups = int(cols["n_fgroups"][0]) if "n_fgroups" in cols else 0
+
+    c = _Cols(cols)
 
     def term_slices(mask: np.ndarray) -> list[tuple[int, np.ndarray]]:
         """[(term_id, row idx array)] for rows under `mask`, grouped by
@@ -339,7 +369,7 @@ def _score_group(
         fg_present = np.unique(c.fgroup[c.is_filter])
         if fg_present.size < n_fgroups:
             # a required group has no postings in this segment → empty
-            return _EMPTY_GROUP
+            return _E2
         for fg in fg_present:
             g_ids: np.ndarray | None = None
             for _, tidx in term_slices(c.is_filter & (c.fgroup == fg)):
@@ -348,12 +378,12 @@ def _score_group(
                 ))
                 g_ids = di if g_ids is None else np.union1d(g_ids, di)
             if g_ids is None or g_ids.size == 0:
-                return _EMPTY_GROUP
+                return _E2
             allowed = g_ids if allowed is None else np.intersect1d(
                 allowed, g_ids, assume_unique=True
             )
             if allowed.size == 0:
-                return _EMPTY_GROUP
+                return _E2
 
     # ---- must-not terms: fold their postings into the excluded mask ----
     if c.is_not.any():
@@ -374,7 +404,7 @@ def _score_group(
 
     score_terms = term_slices(~c.is_filter & ~c.is_not)
     if not score_terms:
-        return _EMPTY_GROUP
+        return _E2
 
     # per-term metadata (a term's segments all share df/idf), processed
     # rarest-first (cheapest exact scoring first → early threshold);
@@ -400,9 +430,9 @@ def _score_group(
         # no doc of this residue contains it). Rarest-first intersection
         # with restrict-pushdown: term i+1's blocks outside the current
         # candidate range are never decoded.
-        n_req = int(pdf["n_req"].iloc[0]) if "n_req" in pdf else 0
+        n_req = int(cols["n_req"][0]) if "n_req" in cols else 0
         if len(score_terms) < n_req:
-            return _EMPTY_GROUP
+            return _E2
         cand: np.ndarray | None = allowed
         for j in order:
             di, tf, dl = drop_dead(_decode_run(
@@ -410,11 +440,11 @@ def _score_group(
                 restrict=cand,
             ))
             if di.size == 0:
-                return _EMPTY_GROUP
+                return _E2
             decoded[t_str[j]] = (di, tf, dl)
             cand = di  # restrict guarantees di ⊆ previous candidates
         cand_sorted = cand
-        return _exact_rescore(qid, cand_sorted, decoded, term_idf, tf_norm, k)
+        return _exact_rescore(cand_sorted, decoded, term_idf, tf_norm, k)
 
     # phase 1: exact partial scoring, rarest-first, with suffix-UB cutoff
     # (vectorized sorted-merge accumulation — no per-posting Python)
@@ -459,17 +489,16 @@ def _score_group(
             _ColSlice(c, score_terms[j][1]), q_segs=q_segs, seg=seg, restrict=cand_sorted
         ))
 
-    return _exact_rescore(qid, cand_sorted, decoded, term_idf, tf_norm, k)
+    return _exact_rescore(cand_sorted, decoded, term_idf, tf_norm, k)
 
 
 def _exact_rescore(
-    qid: int,
     cand_sorted: np.ndarray,
     decoded: dict,
     term_idf: dict,
     tf_norm,
     k: int,
-) -> pd.DataFrame:
+) -> tuple[np.ndarray, np.ndarray]:
     """Exact re-score of candidates in canonical (lexicographic) term
     order — bitwise-reproducible vs the single-node oracle — then top-k
     by (score DESC, doc_id ASC). `k <= 0` keeps every scored candidate
@@ -490,7 +519,96 @@ def _exact_rescore(
     take = ids.size if k <= 0 else min(k, ids.size)
     # top-k by (score DESC, doc_id ASC); ids ascending → stable mergesort
     o = np.argsort(-sc, kind="stable")[:take]
-    return pd.DataFrame({"query_id": qid, "doc_id": ids[o], "score": sc[o]})
+    return ids[o], sc[o]
+
+
+def _score_fan(
+    fan: DataFrame,
+    *,
+    allowed_bc=None,
+    excluded_bc=None,
+    **score_kw,
+) -> DataFrame:
+    """The scoring stage: fan rows (see `_fan`) → every (query, segment)
+    group's exact top-k as (query_id, doc_id, score) rows, scored by
+    `_score_group`'s kernel with `score_kw` (n_docs, avgdl, k1, b, k,
+    mode). `allowed_bc` / `excluded_bc` are the broadcast allowed set
+    and tombstone mask (a sorted id array or a `codec.PackedDocIdSet`).
+
+    The rows are hash-partitioned by (query_id, serve_seg) and sorted by
+    it within each partition, so every group arrives contiguous in one
+    task: AQE may coalesce those partitions but never splits a key. The
+    Python side converts each Arrow batch to numpy once, cuts groups at
+    key changes and emits one frame per batch (`_scored_batches`). A
+    grouped `applyInPandas` over the same exchange and sort would pay a
+    pandas↔Arrow round trip per group, measured at about 6 ms of worker
+    CPU a group on 4 cores."""
+
+    def run(batches):
+        allowed = None if allowed_bc is None else allowed_bc.value
+        excl = None if excluded_bc is None else excluded_bc.value
+        if isinstance(excl, codec.PackedDocIdSet):
+            excl = excl.decode()  # once per worker process (memoized)
+
+        def score(cols):
+            return _score_cols(
+                cols, allowed_global=allowed, excluded_global=excl, **score_kw
+            )
+
+        return _scored_batches(batches, score)
+
+    return (
+        fan.repartition("query_id", "serve_seg")
+        .sortWithinPartitions("query_id", "serve_seg")
+        .mapInPandas(run, schema=_GROUP_SCHEMA)
+    )
+
+
+def _scored_batches(batches, score):
+    """Yield one (query_id, doc_id, score) frame per pandas batch of a
+    stream clustered by (query_id, serve_seg). `score(cols)` runs once
+    per group on the group's column arrays (slices of the batch's one
+    pandas→numpy conversion) and returns (doc_ids, scores). The group
+    still open at a batch's end may continue in the next batch, so it
+    is carried over and scored once its key changes or the stream
+    ends."""
+    open_parts: list[dict] = []  # pieces of the group open at the last batch end
+    open_key = None
+    for pdf in batches:
+        if pdf.empty:
+            continue
+        cols = {c: pdf[c].to_numpy() for c in pdf.columns}
+        q, s = cols["query_id"], cols["serve_seg"]
+        cuts = np.flatnonzero((q[1:] != q[:-1]) | (s[1:] != s[:-1])) + 1
+        bounds = [0, *cuts, q.size]
+        hits = []
+        if open_parts and open_key != (q[0], s[0]):  # it ended with the last batch
+            hits.append(_scored(score, open_parts))
+            open_parts = []
+        for lo, hi in zip(bounds[:-2], bounds[1:-1]):
+            piece = {c: a[lo:hi] for c, a in cols.items()}
+            hits.append(_scored(score, [*open_parts, piece]))
+            open_parts = []
+        open_parts.append({c: a[bounds[-2]:] for c, a in cols.items()})
+        open_key = (q[-1], s[-1])
+        if hits:
+            yield _hits_frame(hits)
+    if open_parts:
+        yield _hits_frame([_scored(score, open_parts)])
+
+
+def _scored(score, parts: list[dict]) -> tuple:
+    """(query_ids, doc_ids, scores) of one group given as column pieces."""
+    cols = parts[0] if len(parts) == 1 else {
+        c: np.concatenate([p[c] for p in parts]) for c in parts[0]
+    }
+    ids, sc = score(cols)
+    return np.full(ids.size, cols["query_id"][0], np.int32), ids, sc
+
+
+def _hits_frame(hits: list[tuple]) -> pd.DataFrame:
+    qid, doc, sc = (np.concatenate(x) for x in zip(*hits))
+    return pd.DataFrame({"query_id": qid, "doc_id": doc, "score": sc})
 
 
 def load_index_meta(spark: SparkSession, index_dir: str) -> dict:
@@ -721,25 +839,10 @@ def topk_frames(
     blocks = blocks.filter(F.col("term_id").isin(ids))
     fan = _fan(spark, blocks, qterm, salt_threshold)
 
-    def score(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        excl = None
-        if excluded_bc is not None:
-            excl = excluded_bc.value
-            if isinstance(excl, codec.PackedDocIdSet):
-                excl = excl.decode()  # once per worker process (memoized)
-        return _score_group(
-            pdf,
-            n_docs=n_docs,
-            avgdl=avgdl,
-            k1=k1,
-            b=b,
-            k=k,
-            allowed_global=None if allowed_bc is None else allowed_bc.value,
-            excluded_global=excl,
-            mode=mode,
-        )
-
-    part = fan.groupBy("query_id", "serve_seg").applyInPandas(score, schema=_GROUP_SCHEMA)
+    part = _score_fan(
+        fan, n_docs=n_docs, avgdl=avgdl, k1=k1, b=b, k=k, mode=mode,
+        allowed_bc=allowed_bc, excluded_bc=excluded_bc,
+    )
     if not rank:
         return part  # exact candidate pool — no global window (see docstring)
     # global merge: ≤ S·k tiny rows per query (TakeOrdered-shaped window);
@@ -888,6 +991,11 @@ def topk_batched(
     `chunk_times`: optional list that receives each chunk's measured
     wall seconds (bench.py derives the REAL serving-latency p50/p95
     from these instead of estimating from total wall / Q).
+
+    Each chunk is one `topk_frames` plan: a scoring stage with one
+    Python task per non-empty fan partition, each scoring its groups
+    batch by batch (`_score_fan`), so a chunk's Python cost is its
+    groups' scoring plus a fixed cost per task, not per group.
 
     Why this exists: the scorer's fan working set (posting blocks ×
     queries) grows linearly with the batch while per-core heap is

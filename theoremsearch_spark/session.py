@@ -24,6 +24,9 @@ def _warm_python_workers(spark: SparkSession, cores: int) -> None:
     init makes every *query* pay steady-state cost instead of charging
     the whole pool spin-up to whichever operator happens to run first.
     One trivial job over `cores` partitions touches every worker slot.
+    Each task imports the engine package, which installs the worker's
+    lazy zip-directory invalidation (see theoremsearch_spark/__init__)
+    before any serving task runs.
     Set TS_NO_WORKER_WARMUP=1 to skip (short-lived CLI helpers)."""
     if os.environ.get("TS_NO_WORKER_WARMUP"):
         return
@@ -32,6 +35,8 @@ def _warm_python_workers(spark: SparkSession, cores: int) -> None:
     import pandas as pd  # noqa: F401 — imported in the workers below
 
     def _ident(batches):
+        import theoremsearch_spark  # noqa: F401 — per-worker set-up
+
         for pdf in batches:
             yield pdf
 
