@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
@@ -72,7 +73,12 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = SparkSession.builder.appName("ts-query-topk").getOrCreate()
     from theoremsearch_spark.corpus import query_set
-    from theoremsearch_spark.query import topk_batched, topk_with_urls
+    from theoremsearch_spark.query import (
+        open_index,
+        serve_phrase,
+        serve_topk,
+        with_doc_meta,
+    )
 
     if args.synth_queries:
         qs = query_set(args.synth_queries)[["query_id", "query_text"]]
@@ -83,87 +89,31 @@ def main(argv: list[str] | None = None) -> int:
 
     if bool(args.index) == bool(args.gens):
         p.error("exactly one of --index / --gens is required")
-    filters = [g.split(",") if "," in g else g for g in args.filter]
-    not_terms = args.not_term or None
+    filters = [g.split(",") if "," in g else g for g in args.filter] or None
 
     t0 = time.monotonic()
     if args.gens:
-        from pyspark.sql import functions as F
+        from theoremsearch_spark.streaming.incremental import open_root
 
-        from theoremsearch_spark.streaming.incremental import (
-            phrase_topk_all_generations,
-            pruned_generation_docs,
-            topk_all_generations,
-        )
-
-        from theoremsearch_spark.query import _localize_hits
-
-        if args.phrase:
-            ranked = _localize_hits(
-                spark,
-                phrase_topk_all_generations(
-                    spark, args.gens, qs, k=args.k, filters=filters or None
-                ),
-            )
-        else:
-            ranked = _localize_hits(
-                spark,
-                topk_all_generations(
-                    spark, args.gens, qs, k=args.k, filters=filters or None,
-                    max_batch=args.max_batch, mode=args.mode, not_terms=not_terms,
-                ),
-            )
-        # same output schema as the --index branches: ranked ids joined
-        # back to document metadata (whatever columns the root's docs
-        # tables carry), reading only the parquet files whose recorded
-        # id span holds a hit (per-generation point-lookup pruning)
-        ids = sorted(
-            int(r["doc_id"])
-            for r in ranked.select("doc_id").distinct().collect()
-        )
-        docs = pruned_generation_docs(spark, args.gens, ids)
-        meta_cols = [c for c in ("url", "lang", "warc_ts") if c in docs.columns]
-        hits = ranked.join(
-            docs.select("doc_id", *meta_cols), "doc_id", "left"
-        ).orderBy("query_id", F.col("rank"))
-    elif filters or args.max_batch or args.phrase or not_terms or args.mode != "or":
-        from pyspark.sql import functions as F
-
-        from theoremsearch_spark.query import _localize_hits, _pruned_doc_meta
-
-        if args.phrase:
-            import os
-
-            from theoremsearch_spark.query import phrase_topk
-
-            # auto-detect the positional sidecar (build_index
-            # --positions): positional adjacency verify, no doc fetch
-            pos_dir = f"{args.index}/index/positions"
-            ranked = _localize_hits(
-                spark,
-                phrase_topk(
-                    spark, f"{args.index}/index", f"{args.index}/docs", qs,
-                    k=args.k, filters=filters or None,
-                    positions_dir=pos_dir if os.path.isdir(pos_dir) else None,
-                ),
-            )
-        else:
-            ranked = _localize_hits(
-                spark,
-                topk_batched(
-                    spark, f"{args.index}/index", qs, k=args.k,
-                    max_batch=args.max_batch, filters=filters or None,
-                    mode=args.mode, not_terms=not_terms,
-                ),
-            )
-        # doc_id-range-pruned metadata lookup — the same scan bound the
-        # no-filter path gets via topk_with_urls
-        docs = _pruned_doc_meta(
-            spark, f"{args.index}/docs", ranked, ["url", "lang", "warc_ts"]
-        )
-        hits = ranked.join(docs, "doc_id", "left").orderBy("query_id", F.col("rank"))
+        view = open_root(spark, args.gens)
     else:
-        hits = topk_with_urls(spark, f"{args.index}/index", f"{args.index}/docs", qs, k=args.k)
+        # auto-detect the positional sidecar (build_index --positions):
+        # phrase verification then reads positions, no doc fetch
+        pos_dir = f"{args.index}/index/positions"
+        view = open_index(
+            spark, f"{args.index}/index", f"{args.index}/docs",
+            pos_dir if os.path.isdir(pos_dir) else None,
+        )
+    if args.phrase:
+        ranked = serve_phrase(spark, view, qs, k=args.k, filters=filters)
+    else:
+        ranked = serve_topk(
+            spark, view, qs, k=args.k, filters=filters, mode=args.mode,
+            not_terms=args.not_term or None, max_batch=args.max_batch,
+        )
+    # ranked ids joined back to document metadata, reading only the
+    # parquet files whose recorded id span holds a hit
+    hits = with_doc_meta(spark, view, ranked)
     if args.out:
         hits.write.mode("overwrite").parquet(args.out)
         n = spark.read.parquet(args.out).count()

@@ -23,7 +23,8 @@ from theoremsearch_spark.query import (
     _score_cols,
     _score_group,
     _scored_batches,
-    _serve_prep,
+    open_index,
+    serve_prep,
     phrase_topk,
     topk,
     topk_batched,
@@ -93,18 +94,15 @@ def test_batch_splits_equal_per_group_scoring(spark, index_dir, oracle):
     exactly on a batch boundary, score like whole groups."""
     idx = f"{index_dir}/index"
     qs = _queries(oracle)
-    prep = _serve_prep(spark, idx, qs)
-    kw = prep["frame_kwargs"]
-    qterm = _build_qterms(qs, prep["tstats"], [], kw["salt_threshold"], kw["n_segments"])
+    prep = serve_prep(spark, open_index(spark, idx), qs)
+    qterm = _build_qterms(qs, prep.tstats, [], prep.n_segments)
     fan = (
-        _fan(spark, prep["blocks"], qterm, kw["salt_threshold"])
+        _fan(spark, prep.blocks, qterm)
         .toPandas()
         .sort_values(["query_id", "serve_seg"], kind="stable")
         .reset_index(drop=True)
     )
-    score_kw = dict(
-        n_docs=kw["n_docs"], avgdl=kw["avgdl"], k1=kw["k1"], b=kw["b"], k=K
-    )
+    score_kw = dict(n_docs=prep.n_docs, avgdl=prep.avgdl, k1=prep.k1, b=prep.b, k=K)
     want = pd.concat(
         [_score_group(g, **score_kw) for _, g in fan.groupby(["query_id", "serve_seg"])],
         ignore_index=True,

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from tests.oracle import BM25Oracle
 from tests.test_engine import _compare_topk
 from theoremsearch_spark.build import build_index
-from theoremsearch_spark.query import _build_qterms, _fan, topk
+from theoremsearch_spark.query import _build_qterms, _fan, open_index, serve_prep, topk
 from theoremsearch_spark.stats import prepare_docs
 
 K = 10
@@ -144,13 +144,13 @@ def test_foreign_k1_b_rejected(spark, filter_index):
 
 def _fan_counts(spark, filter_index, query_text):
     idx = f"{filter_index}/index"
-    tstats = spark.read.parquet(f"{idx}/term_stats").toPandas()
     qs = pd.DataFrame({"query_id": [0], "query_text": [query_text]})
-    qterm = _build_qterms(qs, tstats, [], SALT, NSEG)
+    tstats = serve_prep(spark, open_index(spark, idx), qs).tstats
+    qterm = _build_qterms(qs, tstats, [], NSEG)
     blocks = spark.read.parquet(f"{idx}/postings").filter(
         F.col("term_id").isin([int(x) for x in qterm["term_id"].unique()])
     )
-    fan = _fan(spark, blocks, qterm, SALT)
+    fan = _fan(spark, blocks, qterm)
     got = {
         r["term"]: r["n"]
         for r in fan.groupBy("term").agg(F.count("*").alias("n")).collect()
@@ -192,13 +192,13 @@ def test_merge_shuffle_is_k_rows_per_segment(spark, filter_index):
 
     idx = f"{filter_index}/index"
     meta = load_index_meta(spark, idx)
-    tstats = spark.read.parquet(f"{idx}/term_stats").toPandas()
     qs = pd.DataFrame({"query_id": [0], "query_text": ["the w00500"]})
-    qterm = _build_qterms(qs, tstats, [], SALT, NSEG)
+    tstats = serve_prep(spark, open_index(spark, idx), qs).tstats
+    qterm = _build_qterms(qs, tstats, [], NSEG)
     blocks = spark.read.parquet(f"{idx}/postings").filter(
         F.col("term_id").isin([int(x) for x in qterm["term_id"].unique()])
     )
-    fan = _fan(spark, blocks, qterm, SALT)
+    fan = _fan(spark, blocks, qterm)
     part = _score_fan(
         fan, n_docs=int(meta["n_docs"]), avgdl=float(meta["avgdl"]),
         k1=float(meta["k1"]), b=float(meta["b"]), k=K,

@@ -106,7 +106,7 @@ def test_doc_meta_lookup_reads_only_touched_files(spark, index_dir):
     import glob
     import os
 
-    from theoremsearch_spark.query import TOPK_SCHEMA, _pruned_doc_meta
+    from theoremsearch_spark.query import TOPK_SCHEMA, _localized_docs, open_index
     from theoremsearch_spark.stats import ID_RANGES_MANIFEST
 
     docs_dir = f"{index_dir}/docs"
@@ -122,7 +122,8 @@ def test_doc_meta_lookup_reads_only_touched_files(spark, index_dir):
         ),
         schema=TOPK_SCHEMA,
     )
-    meta = _pruned_doc_meta(spark, docs_dir, hits, ["url"])
+    view = open_index(spark, f"{index_dir}/index", docs_dir)
+    _, meta = _localized_docs(spark, view, hits, ["url"])
     read = set(meta.inputFiles())
     assert 0 < len(read) <= 2 < n_files, (len(read), n_files)
     got = meta.filter(F.col("doc_id").isin([3, 1996])).count()
@@ -134,7 +135,7 @@ def test_doc_meta_lookup_reads_only_touched_files(spark, index_dir):
     bak = os.path.join(docs_dir, ID_RANGES_MANIFEST)
     _sh.move(bak, bak + ".off")
     try:
-        meta2 = _pruned_doc_meta(spark, docs_dir, hits, ["url"])
+        _, meta2 = _localized_docs(spark, view, hits, ["url"])
         assert len(set(meta2.inputFiles())) == n_files
         assert meta2.filter(F.col("doc_id").isin([3, 1996])).count() == 2
     finally:

@@ -109,10 +109,10 @@ def test_unranked_pool_equals_ranked_candidate_set(spark, index_dir, oracle):
 
 
 def test_pool_file_pruning_covers_all_candidates(spark, index_dir, oracle):
-    """_pruned_doc_meta_pool's coarse-bucket file selection is a
+    """pool_doc_rows's coarse-bucket file selection is a
     SUPERSET of the candidate ids (no false negatives), and the join
     against it returns one metadata row per candidate."""
-    from theoremsearch_spark.query import _pruned_doc_meta_pool
+    from theoremsearch_spark.query import open_index, pool_doc_rows
 
     qs = pd.DataFrame([(0, _common_phrase(oracle))], columns=["query_id", "query_text"])
     cand = topk(
@@ -120,7 +120,8 @@ def test_pool_file_pruning_covers_all_candidates(spark, index_dir, oracle):
     ).localCheckpoint()
     n_cand = cand.count()
     assert n_cand > 500
-    meta = _pruned_doc_meta_pool(spark, f"{index_dir}/docs", cand, ["url"])
+    view = open_index(spark, f"{index_dir}/index", f"{index_dir}/docs")
+    meta = pool_doc_rows(spark, view, cand, ["url"])
     joined = cand.join(meta, "doc_id").count()
     assert joined == n_cand
 

@@ -177,6 +177,29 @@ def test_warm_serving_never_parallelizes(
     assert len(again) == len(warm)
 
 
+def test_warm_ann_delete_never_parallelizes(spark, ann, monkeypatch, tmp_path):
+    """`delete_from_ann_index` builds its id relation as a local
+    relation too: a warm delete that tombstones a live vector makes no
+    `sc.parallelize` call."""
+    import shutil
+
+    from theoremsearch_spark.functions.similarity import delete_from_ann_index
+
+    out = str(tmp_path / "ann")
+    shutil.copytree(ann["out"], out)
+    assert delete_from_ann_index(spark, out, [3, 17])["deleted"] == 0  # warm
+    seen = []
+    orig = SparkContext.parallelize
+
+    def spy(self, *a, **kw):
+        seen.append(1)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(SparkContext, "parallelize", spy)
+    assert delete_from_ann_index(spark, out, [5])["deleted"] == 1
+    assert seen == [], f"{len(seen)} sc.parallelize call(s) in a warm delete"
+
+
 def _jobs_in_group(spark, tag: str, fn) -> int:
     sc = spark.sparkContext
     sc.setJobGroup(tag, tag)
@@ -226,6 +249,24 @@ def test_generation_prep_jobs_bounded(spark, gens_root):
         spark, lambda: topk_all_generations(spark, gens_root["out"], qs, k=K)
     )
     assert 2 <= n <= 3, f"topk_all_generations prep launched {n} Spark jobs"
+
+
+def test_doc_lookup_after_localizing_adds_no_job(spark, single):
+    """Localizing a top-k result and looking up its docs costs what
+    collecting the result costs, plus at most the one job the docs read
+    spends inferring its schema (docs tables have no declared schema
+    yet): the lookup takes its ids from the collected rows instead of
+    re-collecting them from the local relation (2 more jobs)."""
+    from theoremsearch_spark.query import _localized_docs, open_index, serve_topk
+
+    view = open_index(spark, single["idx"], single["docs"])
+    qs = _bm25_queries(4)
+    _localized_docs(spark, view, serve_topk(spark, view, qs, K), ["url"])  # warm
+    collect = jobs_launched(spark, lambda: serve_topk(spark, view, qs, K).toPandas())
+    lookup = jobs_launched(
+        spark, lambda: _localized_docs(spark, view, serve_topk(spark, view, qs, K), ["url"])
+    )
+    assert lookup - collect <= 1, (lookup, collect)
 
 
 def _live_oracle(spark, root):

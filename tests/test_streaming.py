@@ -1303,6 +1303,19 @@ def test_multi_generation_chunked_serving_identical(spark, upsert_index):
         f"prep jobs not shared across chunks (prep={prep}, j2={j2}, j4={j4})"
     )
 
+    # the unranked k=0 conjunctive pool chunks too, with its own schema
+    def pool(**kw):
+        return (
+            topk_all_generations(spark, out, qs, k=0, mode="and", rank=False, **kw)
+            .toPandas()
+            .sort_values(["query_id", "doc_id"])
+            .reset_index(drop=True)
+        )
+
+    whole_pool = pool()
+    assert len(whole_pool) > 0
+    pd.testing.assert_frame_equal(whole_pool, pool(max_batch=4), check_dtype=False)
+
 
 def test_vacuum_reclaims_superseded_generations(spark, stream_index):
     """stream -> compact -> vacuum: superseded gen_*/ dirs are deleted

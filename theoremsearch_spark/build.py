@@ -332,34 +332,6 @@ def _block_builder(avgdl: float, k1: float, b: float, block_size: int):
     return build
 
 
-def _block_builder_sorting(avgdl: float, k1: float, b: float, block_size: int):
-    """Builder over an UNSORTED hash-partitioned stream: materializes the
-    partition (all-int columns, ~50 MB per bucket at our sizes), numpy-
-    lexsorts by (term_id, segment, doc_id), then emits blocks in one
-    vectorized pass via the sorted builder's `process`.
-
-    Moving the sort from the JVM (UnsafeExternalSorter) into numpy costs
-    ~0.2 s per million postings and lets the map side use the bypass
-    hash shuffle writer — no Tungsten sort in the hot path at all."""
-    inner = _block_builder(avgdl, k1, b, block_size)
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts = [pdf for pdf in batches if not pdf.empty]
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True)
-        order = np.lexsort(
-            (
-                pdf["doc_id"].to_numpy(np.int64),
-                pdf["segment"].to_numpy(np.int32),
-                pdf["term_id"].to_numpy(np.int64),
-            )
-        )
-        yield from inner(iter([pdf.iloc[order]]))
-
-    return build
-
-
 def _write_doc_stats(
     path: str, n_docs: int, avgdl: float, k1: float, b: float,
     block_size: int, n_segments: int, salt_threshold: int,
@@ -444,7 +416,6 @@ def build_index(
     block_size: int = codec.BLOCK_SIZE,
     resume: bool = True,
     fail_after_buckets: int | None = None,
-    sort_in_python: bool = False,
 ) -> dict:
     """Build (or resume) the inverted index under ``out_dir``.
 
@@ -558,16 +529,10 @@ def build_index(
     # above); on a resume over a bucket subset, partitions may span
     # buckets — the dynamic partitionBy writer still splits correctly,
     # at the cost of a few extra files in the resumed buckets.
-    if sort_in_python:
-        # hash exchange only (bypass-merge shuffle writer); the builder
-        # numpy-lexsorts each bucket partition — see _block_builder_sorting
-        shuffled = todo.repartition(len(pending), "term_id", "segment")
-        builder = _block_builder_sorting(avgdl, k1, b, block_size)
-    else:
-        shuffled = todo.repartition(
-            len(pending), "term_id", "segment"
-        ).sortWithinPartitions("term_id", "segment", "doc_id")
-        builder = _block_builder(avgdl, k1, b, block_size)
+    shuffled = todo.repartition(
+        len(pending), "term_id", "segment"
+    ).sortWithinPartitions("term_id", "segment", "doc_id")
+    builder = _block_builder(avgdl, k1, b, block_size)
     blocks = shuffled.mapInPandas(builder, schema=POSTINGS_SCHEMA)
     try:
         # dynamic partition overwrite = crash-atomic bucket commit: a driver

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
 from theoremsearch_spark.functions.widen import widen_small_input as _widen
 from theoremsearch_spark.operators.relational import t
-from theoremsearch_spark.query import local_frame
+from theoremsearch_spark.query import collect_chunks, local_frame
 
 N_QUERY_VECS = 5
 LSH_BITS = 8
@@ -201,18 +201,6 @@ def _kmeans_spherical(X: np.ndarray, k: int, iters: int = KMEANS_ITERS) -> np.nd
     return C
 
 
-def _dot(col, vec: "np.ndarray"):
-    return F.aggregate(
-        F.zip_with(
-            F.col(col) if isinstance(col, str) else col,
-            F.array(*[F.lit(float(v)) for v in vec]),
-            lambda x, y: x.cast("double") * y,
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 _PROBE_SCHEMA = T.StructType([
     T.StructField("query_id", T.LongType()),
     T.StructField("cell", T.IntegerType()),
@@ -221,6 +209,7 @@ _QVEC_SCHEMA = T.StructType([
     T.StructField("query_id", T.LongType()),
     T.StructField("qvec", T.ArrayType(T.DoubleType())),
 ])
+_VEC_IDS_SCHEMA = T.StructType([T.StructField("vec_id", T.LongType())])
 
 
 def _probe_frames(spark, probe_rows, query_ids, Q: np.ndarray) -> tuple:
@@ -769,8 +758,8 @@ def delete_from_ann_index(spark, out_dir: str, vec_ids) -> dict:
     /root/reference/ec2/parse_arxiv_papers/__main__.py:269-283)."""
     import shutil
 
-    ids_df = spark.createDataFrame(
-        [(int(v),) for v in vec_ids], "vec_id long"
+    ids_df = local_frame(
+        spark, _VEC_IDS_SCHEMA, pd.DataFrame({"vec_id": [int(v) for v in vec_ids]})
     )
     meta = _read_ivf_meta(out_dir)
     gen = int(meta["generations"])
@@ -1144,43 +1133,21 @@ def ann_ivf_search_batched(
     local-relation tombstone table (the round-5 verdict's O(churn)
     Rows-through-the-driver-per-chunk finding).
 
-    `chunk_times` receives each chunk's measured wall seconds —
-    bench.py derives real serving-latency p50/p95 from these."""
+    Chunks run `max_inflight` at a time through `query.collect_chunks`,
+    which also fills `chunk_times`."""
     if not max_batch or len(queries_pdf) <= max_batch:
         return ann_ivf_search(spark, out_dir, queries_pdf, k=k, **search_kwargs)
-    import time
-
     meta = _read_ivf_meta(out_dir)
     tomb = _visible_tombstones(spark, out_dir, int(meta["generations"]))
     mask = _tombstone_mask_artifact(tomb) if tomb is not None else None
     mask_bc = spark.sparkContext.broadcast(mask) if mask is not None else None
-
-    def run_chunk(chunk):
-        t0 = time.monotonic()
-        res = ann_ivf_search(
-            spark, out_dir, chunk, k=k, _prep=(meta, mask_bc), **search_kwargs,
-        )
-        return res.schema, res.toPandas(), time.monotonic() - t0
-
-    # up to max_inflight chunk jobs in flight (guide §2.6 — the next
-    # chunk back-fills the current chunk's task tail); order-preserving
-    # map keeps re-assembly deterministic and the co-resident working
-    # set bounded by max_inflight chunks
-    from concurrent.futures import ThreadPoolExecutor
-
-    chunks = [
-        queries_pdf.iloc[i : i + max_batch]
-        for i in range(0, len(queries_pdf), max_batch)
-    ]
-    parts = []
-    schema = None
-    with ThreadPoolExecutor(max_workers=max(1, max_inflight)) as pool:
-        for sch, pdf, dt in pool.map(run_chunk, chunks):
-            schema = sch
-            parts.append(pdf)
-            if chunk_times is not None:
-                chunk_times.append(dt)
-    return local_frame(spark, schema, pd.concat(parts, ignore_index=True))
+    return collect_chunks(
+        spark,
+        lambda chunk: ann_ivf_search(
+            spark, out_dir, chunk, k=k, _prep=(meta, mask_bc), **search_kwargs
+        ),
+        queries_pdf, max_batch, max_inflight, chunk_times,
+    )
 
 
 def ann_rescored_topk(

@@ -805,18 +805,17 @@ def q_facet_counts(spark, sf_dir):
     needs a rank, so the global window over the full AND set is
     skipped) and stay DISTRIBUTED: the metadata join is cluster-side
     against the coarse-bucket file-pruned docsmeta scan
-    (query._pruned_doc_meta_pool) — the driver never holds the match
-    set, which for common-token queries is a corpus fraction."""
-    from theoremsearch_spark.query import _pruned_doc_meta_pool
+    (query.pool_doc_rows) — the driver never holds the match set,
+    which for common-token queries is a corpus fraction."""
+    from theoremsearch_spark.query import open_index, pool_doc_rows, serve_topk
 
     idx = _ensure_index(spark, sf_dir)
+    view = open_index(spark, idx, os.path.join(idx, "docsmeta"))
     qs = pd.DataFrame(HARNESS_QUERIES, columns=["query_id", "query_text"])
-    cand = topk(spark, idx, qs, k=0, mode="and", rank=False).localCheckpoint(
+    cand = serve_topk(spark, view, qs, k=0, mode="and", rank=False).localCheckpoint(
         eager=False  # the pruning aggregate materializes it — no extra job
     )
-    meta = _pruned_doc_meta_pool(
-        spark, os.path.join(idx, "docsmeta"), cand, ["lang"]
-    )
+    meta = pool_doc_rows(spark, view, cand, ["lang"])
     return (
         cand.join(meta, "doc_id")
         .groupBy("query_id", "lang")

@@ -58,9 +58,21 @@ pushdown paths, both applied before any scoring:
 
 Both prune at the block level too: blocks whose [first_doc, last_doc]
 range contains no allowed doc are never decoded.
+
+Serving view: every entry point serves a `ServeView` — a list of index
+generations (index, docs and optional positions dirs, doc_stats
+metadata) with their merged statistics, plus the tombstone dirs whose
+dead doc versions are masked out of scoring. A plain index dir is a
+one-generation view with no tombstones (`open_index`); a generation
+root opens from its gens manifest (`streaming.incremental.open_root`).
+One `serve_prep` reads a batch's term statistics for either, and
+chunked batches (BM25 and ANN alike) go through `collect_chunks`.
 """
 
 from __future__ import annotations
+
+import time
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -126,19 +138,6 @@ def local_frame(
             pdf[schema.fieldNames()], schema=arrow_schema, preserve_index=False
         )
     return spark.createDataFrame(table, schema=schema)
-
-
-def serve_postings(spark: SparkSession, *paths: str) -> DataFrame:
-    """Posting blocks under `paths`, read with the declared serve schema:
-    no footer-inference job, and the build-lineage columns never reach
-    the scorer. The bucket=N dirs are read as plain files (serving
-    filters on term_id, pushed to row-group stats, never on bucket; and
-    multi-root partition discovery would reject several postings roots)."""
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .schema(SERVE_POSTINGS_SCHEMA)
-        .parquet(*paths)
-    )
 
 
 class _Cols:
@@ -622,6 +621,229 @@ def load_index_meta(spark: SparkSession, index_dir: str) -> dict:
     return {k: row[k] for k in keys if k in row}
 
 
+@dataclass(frozen=True)
+class Generation:
+    """One index generation of a serving view. `filter_cols` is what
+    its manifest records as indexed filter columns (None = unrecorded,
+    trusted to carry its own filter_terms)."""
+
+    gen: int
+    index: str
+    docs: str | None
+    positions: str | None
+    meta: dict
+    filter_cols: list[str] | None = None
+
+
+class ServeView:
+    """The generations a serve reads, their merged statistics and the
+    tombstone dirs whose doc versions are dead. Merged statistics are
+    what a from-scratch build over the union corpus would record: N and
+    avgdl add up (tombstones correct them per batch, in `serve_prep`);
+    sharded routing needs every generation to agree on the segment
+    modulus, else queries score unsharded — correct, just one task."""
+
+    def __init__(self, gens: list[Generation], tombstones: list[str] = ()):
+        self.gens = list(gens)
+        self.tombstones = list(tombstones)
+        metas = [g.meta for g in self.gens]
+        self.n_docs = sum(int(m["n_docs"]) for m in metas)
+        self.avgdl = float(metas[0]["avgdl"]) if len(metas) == 1 else sum(
+            float(m["avgdl"]) * int(m["n_docs"]) for m in metas
+        ) / max(self.n_docs, 1)
+        self.k1, self.b = float(metas[0]["k1"]), float(metas[0]["b"])
+        moduli = {int(m.get("n_segments") or 1) for m in metas}
+        self.n_segments = moduli.pop() if len(moduli) == 1 else 1
+
+
+def open_index(
+    spark: SparkSession,
+    index_dir: str,
+    docs_dir: str | None = None,
+    positions_dir: str | None = None,
+) -> ServeView:
+    """A plain index dir as a one-generation view without tombstones.
+    `docs_dir` is where doc lookups (phrase text, result metadata) read;
+    `positions_dir` a `positions.build_positions` sidecar."""
+    return ServeView([Generation(
+        0, index_dir, docs_dir, positions_dir, load_index_meta(spark, index_dir)
+    )])
+
+
+@dataclass(frozen=True)
+class ServePrep:
+    """One batch's serving state: the lazy postings frame, the batch's
+    merged term rows (term, term_id, df, any_salted) and the scoring
+    statistics, all corrected for tombstoned docs, whose mask is
+    broadcast once (`excluded_bc`) and shared by every chunk."""
+
+    blocks: DataFrame
+    tstats: pd.DataFrame
+    n_docs: int
+    avgdl: float
+    k1: float
+    b: float
+    n_segments: int
+    excluded_bc: object = None
+
+
+# one row per (generation, batch term): the multi-generation scoring
+# job's broadcast side
+_GEN_TERMS_SCHEMA = T.StructType(
+    [
+        T.StructField("gen", T.IntegerType(), False),
+        T.StructField("term_id", T.LongType(), False),
+        T.StructField("is_salted", T.BooleanType(), False),
+        T.StructField("ub_scale", T.DoubleType(), False),
+    ]
+)
+
+
+def serve_prep(
+    spark: SparkSession,
+    view: ServeView,
+    queries: pd.DataFrame,
+    *,
+    filters=None,
+    not_terms: list[str] | None = None,
+    k1: float | None = None,
+    b: float | None = None,
+) -> ServePrep:
+    """Serving state for a whole batch, loaded ONCE (chunked serving
+    reuses it for every chunk — the term set is the union over all
+    queries, and a chunk's _build_qterms merge ignores the other
+    chunks' rows): ONE term-dictionary scan over every generation for
+    the batch's terms (plus its filter and must-not terms) and, when
+    the view has tombstones, ONE concurrent pass building the dead-doc
+    mask and the per-term dead-doc counts. Both tables are read with
+    declared schemas (no footer-inference job), so a plain index costs
+    exactly one prep job.
+
+    Saltedness is decided per generation at ITS build threshold, on its
+    own df (a layout property, never the corrected statistic). With one
+    generation it is a per-term flag and comes from the term side, so
+    the postings plan carries no generation column; with several, a
+    per-(generation, term) relation is joined onto the blocks. The
+    block-max bounds are rescaled per generation by max(1, serve avgdl
+    / generation avgdl): tf_norm grows with avgdl, so bounds computed
+    at build time stay sound under merged, corrected statistics.
+
+    k1/b overrides that differ from the build-time values are rejected:
+    stored per-block `max_tf_norm` upper bounds are computed with the
+    build parameters, and pruning with foreign k1/b could silently drop
+    true top-k members."""
+    for name, want, have in (("k1", k1, view.k1), ("b", b, view.b)):
+        if want is not None and abs(float(want) - have) > 1e-12:
+            raise ValueError(
+                f"{name}={want} differs from index build {name}={have}; "
+                "block-max pruning bounds would be unsound — rebuild the index"
+            )
+    all_terms = sorted({t for q in queries["query_text"] for t in tokenize(q)})
+    fkeys = set()
+    for g in _normalize_filters(filters):
+        all_terms.extend(g)
+        fkeys |= {t.split("=", 1)[0] for t in g}
+    all_terms.extend(not_terms or [])
+    for g in view.gens:
+        # a generation that did not index a filter's posting list would
+        # silently exclude ALL its docs from filtered results
+        if fkeys and g.filter_cols is not None and not fkeys <= set(g.filter_cols):
+            raise ValueError(
+                f"generation {g.gen} indexed filter_cols={g.filter_cols} but the "
+                f"query filters on {sorted(fkeys)} — filtered serving "
+                "would silently drop that generation's documents; "
+                "rebuild/compact with consistent filter_cols"
+            )
+
+    multi = len(view.gens) > 1
+    tstats_plan = spark.read.schema(TERM_STATS_SCHEMA).parquet(
+        *[f"{g.index}/term_stats" for g in view.gens]
+    )
+    if multi:
+        tstats_plan = tstats_plan.withColumn("gen", _gen_col())
+    tstats_plan = tstats_plan.filter(F.col("term").isin(all_terms))
+    n_docs, avgdl, mask, dfc = view.n_docs, view.avgdl, None, {}
+    if view.tombstones:
+        from concurrent.futures import ThreadPoolExecutor
+
+        from theoremsearch_spark.streaming.incremental import (
+            TOMBSTONE_SCHEMA,
+            _tombstone_artifact,
+        )
+
+        dead = (
+            spark.read.schema(TOMBSTONE_SCHEMA)
+            .parquet(*view.tombstones)
+            .dropDuplicates(["doc_id"])
+        )
+        # two independent tiny jobs: overlapping them collapses their
+        # walls into ~one
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            fut = pool.submit(tstats_plan.toPandas)
+            mask, n_dead, dl_dead, dfc = _tombstone_artifact(dead, all_terms)
+            per_gen = fut.result()
+        if n_dead:
+            total_len = avgdl * n_docs - dl_dead
+            n_docs -= n_dead
+            avgdl = total_len / max(n_docs, 1)
+    else:
+        per_gen = tstats_plan.toPandas()
+    if not multi:
+        per_gen["gen"] = view.gens[0].gen
+
+    thr = {
+        g.gen: 2**62 if g.meta.get("salt_threshold") is None
+        else int(g.meta["salt_threshold"])
+        for g in view.gens
+    }
+    per_gen["any_salted"] = per_gen["df"] > per_gen["gen"].map(thr)
+    tstats = per_gen.groupby(["term", "term_id"], as_index=False).agg(
+        df=("df", "sum"), any_salted=("any_salted", "max")
+    )
+    tstats["any_salted"] = tstats["any_salted"].astype(bool)
+    if dfc:
+        tstats["df"] = tstats["df"] - tstats["term"].map(dfc).fillna(0).astype(int)
+
+    ub_scale = {g.gen: max(1.0, avgdl / float(g.meta["avgdl"])) for g in view.gens}
+    # postings read with the declared serve schema: the build-lineage
+    # columns never reach the scorer, and the bucket=N dirs are plain
+    # files (serving filters on term_id, pushed to row-group stats, never
+    # on bucket; multi-root partition discovery would reject the roots)
+    blocks = (
+        spark.read.option("recursiveFileLookup", "true")
+        .schema(SERVE_POSTINGS_SCHEMA)
+        .parquet(*[f"{g.index}/postings" for g in view.gens])
+    )
+    if multi:
+        gen_terms = local_frame(spark, _GEN_TERMS_SCHEMA, per_gen.assign(
+            is_salted=per_gen["any_salted"], ub_scale=per_gen["gen"].map(ub_scale)
+        ))
+        blocks = (
+            blocks.withColumn("gen", _gen_col())
+            .join(F.broadcast(gen_terms), ["gen", "term_id"])
+            .withColumn(
+                "max_tf_norm", (F.col("max_tf_norm") * F.col("ub_scale")).cast("float")
+            )
+            .drop("ub_scale", "gen")
+        )
+    elif ub_scale[view.gens[0].gen] > 1.0:
+        blocks = blocks.withColumn("max_tf_norm", (
+            F.col("max_tf_norm") * F.lit(ub_scale[view.gens[0].gen])
+        ).cast("float"))
+    return ServePrep(
+        blocks=blocks, tstats=tstats, n_docs=int(n_docs), avgdl=float(avgdl),
+        k1=view.k1, b=view.b, n_segments=view.n_segments,
+        excluded_bc=spark.sparkContext.broadcast(mask) if mask is not None else None,
+    )
+
+
+def _gen_col():
+    """Generation id of a row read from a multi-generation root, parsed
+    from its file path: each table is ONE multi-path scan however many
+    generations the root holds."""
+    return F.regexp_extract(F.input_file_name(), r"gen_(-?\d+)/index", 1).cast("int")
+
+
 def _normalize_filters(filters) -> list[list[str]]:
     """filters: list of conjunctive groups; each group a term (AND) or a
     list of terms (OR-of-terms within the group)."""
@@ -635,26 +857,27 @@ def _build_qterms(
     queries: pd.DataFrame,
     tstats: pd.DataFrame,
     fgroups: list[list[str]],
-    salt_threshold: int,
     n_segments: int,
     not_terms: list[str] | None = None,
 ) -> pd.DataFrame | None:
-    """(query_id, term, term_id, df, is_filter, fgroup, is_not, n_req,
-    q_segs, n_fgroups) — the broadcast fan side. Returns None when a
-    required filter group has no indexed term (conjunction
+    """(query_id, term, term_id, df, any_salted, is_filter, fgroup,
+    is_not, n_req, q_segs, n_fgroups) — the broadcast fan side. Returns
+    None when a required filter group has no indexed term (conjunction
     unsatisfiable). `not_terms` are batch-global MUST-NOT terms — rows
     flagged is_not; an unindexed must-not term excludes nothing, so it
     drops out at the tstats merge. `n_req` is the query's pre-merge
     distinct scoring-token count (conjunctive serving needs it to tell
-    unindexed-term-in-query apart from indexed-but-elsewhere)."""
+    unindexed-term-in-query apart from indexed-but-elsewhere). A query
+    touching any salted term is segment-sharded (`q_segs`)."""
     qt = queries.assign(terms=queries["query_text"].map(lambda s: sorted(set(tokenize(s)))))
     nreq_map = dict(zip(qt["query_id"], qt["terms"].map(len)))
     pairs = qt[["query_id", "terms"]].explode("terms").dropna()
-    pairs = pairs.rename(columns={"terms": "term"})
-    pairs["is_filter"] = False
-    pairs["fgroup"] = -1
-    pairs["is_not"] = False
+    pairs = pairs.rename(columns={"terms": "term"}).assign(
+        is_filter=False, fgroup=-1, is_not=False
+    )
 
+    # filter and must-not rows apply to every query of the batch
+    batch_rows = []
     if fgroups:
         frows = pd.DataFrame(
             [(gi, t) for gi, g in enumerate(fgroups) for t in g],
@@ -664,37 +887,22 @@ def _build_qterms(
         missing = set(range(len(fgroups))) - set(indexed["fgroup"].unique())
         if missing:
             return None  # an AND-group matches nothing in the index
-        qids = pd.DataFrame({"query_id": queries["query_id"].unique()})
-        f = frows.merge(qids, how="cross")
-        f["is_filter"] = True
-        f["is_not"] = False
-        pairs = pd.concat(
-            [pairs, f[["query_id", "term", "is_filter", "fgroup", "is_not"]]],
-            ignore_index=True,
-        )
-
+        batch_rows.append(frows.assign(is_filter=True, is_not=False))
     if not_terms:
-        nrows = pd.DataFrame({"term": sorted(set(not_terms))})
+        batch_rows.append(pd.DataFrame({"term": sorted(set(not_terms))}).assign(
+            is_filter=False, fgroup=-1, is_not=True
+        ))
+    if batch_rows:
         qids = pd.DataFrame({"query_id": queries["query_id"].unique()})
-        nr = nrows.merge(qids, how="cross")
-        nr["is_filter"] = False
-        nr["fgroup"] = -1
-        nr["is_not"] = True
         pairs = pd.concat(
-            [pairs, nr[["query_id", "term", "is_filter", "fgroup", "is_not"]]],
+            [pairs, *(r.merge(qids, how="cross")[pairs.columns] for r in batch_rows)],
             ignore_index=True,
         )
 
     qterm = pairs.merge(tstats, on="term")  # drops unindexed scoring terms
     if qterm.empty:
         return None
-    if "any_salted" in qterm.columns:
-        # multi-generation serving: saltedness was decided per generation
-        # at ITS build threshold — the merged flag, not the merged df,
-        # says whether sharded routing is needed
-        heavy = qterm.groupby("query_id")["any_salted"].max().astype(bool)
-    else:
-        heavy = qterm.groupby("query_id")["df"].max() > salt_threshold
+    heavy = qterm.groupby("query_id")["any_salted"].max().astype(bool)
     q_segs = heavy.map(lambda h: n_segments if h else 1).rename("q_segs")
     qterm = qterm.merge(q_segs.reset_index(), on="query_id")
     qterm["n_fgroups"] = len(fgroups)
@@ -702,27 +910,23 @@ def _build_qterms(
     return qterm
 
 
-def _fan(spark: SparkSession, blocks: DataFrame, qterm: pd.DataFrame, salt_threshold: int) -> DataFrame:
+def _fan(spark: SparkSession, blocks: DataFrame, qterm: pd.DataFrame) -> DataFrame:
     """Blocks × queries with segment routing: a heavy term's segment-s
     blocks go to exactly task (q, s) — never replicated; light blocks
     (bounded bytes by the salt threshold) replicate to the query's S
     tasks; single-task queries route everything to (q, 0)."""
     qterm_df = spark.createDataFrame(
-        qterm[["query_id", "term", "term_id", "df", "is_filter", "fgroup",
-               "is_not", "n_req", "q_segs", "n_fgroups"]]
+        qterm[["query_id", "term", "term_id", "df", "any_salted", "is_filter",
+               "fgroup", "is_not", "n_req", "q_segs", "n_fgroups"]]
     )
     fan = blocks.join(F.broadcast(qterm_df), "term_id")
     # a SALTED list's segment-s blocks route to exactly task (q, s);
     # unsalted (light) lists replicate to the query's S tasks and are
     # narrowed to the task's doc residue inside the scorer. Saltedness
-    # is block-level when the blocks carry it (multi-generation union —
+    # is block-level when the blocks carry it (multi-generation view —
     # the same term can be salted in one generation and flat in
-    # another), else the single-index df-vs-threshold rule.
-    salted = (
-        F.col("is_salted")
-        if "is_salted" in blocks.columns
-        else F.col("df") > F.lit(int(salt_threshold))
-    )
+    # another), else the term's own flag.
+    salted = F.col("is_salted") if "is_salted" in blocks.columns else F.col("any_salted")
     return fan.withColumn(
         "serve_seg",
         F.explode(
@@ -735,116 +939,50 @@ def _fan(spark: SparkSession, blocks: DataFrame, qterm: pd.DataFrame, salt_thres
 
 def topk_frames(
     spark: SparkSession,
-    blocks: DataFrame,
-    tstats: pd.DataFrame,
+    prep: ServePrep,
     queries: pd.DataFrame,
     *,
-    n_docs: int,
-    avgdl: float,
-    k1: float,
-    b: float,
     k: int = 10,
     filters=None,
     allowed_docs=None,
-    excluded_docs=None,
-    salt_threshold: int | None = None,
-    n_segments: int = 1,
     mode: str = "or",
     not_terms: list[str] | None = None,
     rank: bool = True,
 ) -> DataFrame:
-    """Batch top-k over explicit frames: `blocks` = posting blocks
-    (possibly a union of index generations), `tstats` = pandas term
-    dictionary (term, term_id, df) already merged across generations.
+    """Batch top-k of `queries` over one batch's serve state (see
+    `serve_topk` for the arguments). Tombstoned doc versions
+    (`prep.excluded_bc`) are dropped at decode time inside the scorer;
+    `prep` carries the global statistics corrected for them, which is
+    what makes upsert serving score-identical to a from-scratch build
+    over the latest versions.
 
-    `rank=False` (k <= 0 only) returns the UNRANKED candidate pool
-    (query_id, doc_id, score) — no global window: the k=0 conjunctive
-    pool exists to feed phrase verification / facet counting, both of
-    which re-rank (or never rank) downstream, so the row_number
-    exchange+sort over the full AND set is pure waste there. Segments
-    are doc-disjoint, so the un-windowed union of per-segment rows IS
-    the exact candidate set.
-
-    `mode="and"`: conjunctive serving — only docs containing every
-    scoring term qualify (rarest-first intersection in the scorer,
-    restrict-pushdown decode). With `k <= 0` every conjunctive
-    candidate is returned, ranked — the phrase-verification pool
-    (k <= 0 is rejected for mode="or": the disjunctive candidate set is
-    corpus-sized for any common term). `not_terms`: batch-global
-    MUST-NOT terms — docs containing any of them are excluded before
-    scoring, both modes.
-
-    `excluded_docs`: doc_ids of tombstoned (superseded) document
-    versions — an id iterable or a `codec.PackedDocIdSet` (compressed
-    executor-built artifact) — dropped at decode time inside the
-    scorer. Callers are
-    responsible for passing CORRECTED global stats (n_docs, avgdl, and
-    per-term df in `tstats`) that exclude these docs; that is what
-    makes upsert serving score-identical to a from-scratch build over
-    the latest versions (topk_all_generations does this).
-
-    With `n_segments > 1` + `salt_threshold`, heavy-term queries are
-    segment-sharded (see module docstring); the per-query group shuffle
-    then moves O(segments·k) result rows, never whole posting lists."""
-    if mode not in ("or", "and"):
-        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-    if k <= 0 and mode != "and":
-        raise ValueError("k <= 0 (full candidate set) requires mode='and'")
-    if not rank and k > 0:
-        raise ValueError("rank=False is the k <= 0 candidate-pool shape")
-    fgroups = _normalize_filters(filters)
-    if salt_threshold is None:
-        salt_threshold = 2**62  # nothing is heavy → single-task queries
+    With `n_segments > 1`, heavy-term queries are segment-sharded (see
+    module docstring); the per-query group shuffle then moves
+    O(segments·k) result rows, never whole posting lists."""
     qterm = _build_qterms(
-        queries, tstats, fgroups, salt_threshold, n_segments, not_terms=not_terms
+        queries, prep.tstats, _normalize_filters(filters), prep.n_segments,
+        not_terms=not_terms,
     )
     if qterm is None:
-        return local_frame(spark, _GROUP_SCHEMA if not rank else TOPK_SCHEMA)
+        return local_frame(spark, TOPK_SCHEMA if rank else _GROUP_SCHEMA)
     ids = [int(x) for x in qterm["term_id"].unique()]
 
     allowed_bc = None
     if allowed_docs is not None:
         arr = np.unique(np.asarray(list(allowed_docs), dtype=np.int64))
         if arr.size == 0:
-            return local_frame(spark, _GROUP_SCHEMA if not rank else TOPK_SCHEMA)
+            return local_frame(spark, TOPK_SCHEMA if rank else _GROUP_SCHEMA)
         allowed_bc = spark.sparkContext.broadcast(arr)
-
-    excluded_bc = None
-    if excluded_docs is not None:
-        from pyspark.broadcast import Broadcast
-
-        if isinstance(excluded_docs, Broadcast):
-            # pre-broadcast artifact: a chunked caller (topk_all_
-            # generations max_batch) broadcasts the tombstone mask ONCE
-            # and passes the handle to every chunk — re-broadcasting a
-            # shared artifact per chunk would accumulate driver+executor
-            # copies linearly with the chunk count
-            excluded_bc = excluded_docs
-        elif isinstance(excluded_docs, codec.PackedDocIdSet):
-            # compressed executor-built artifact (topk_all_generations):
-            # broadcast the ~1.2 B/id chunks; workers decode once per
-            # executor process (memoized on the broadcast-cached object)
-            if excluded_docs.n:
-                excluded_bc = spark.sparkContext.broadcast(excluded_docs)
-        else:
-            # ad-hoc id iterable: sorted-unique array, scorer masks via
-            # searchsorted. Bounded by upsert churn since the last
-            # compaction — heavy churn should compact, not grow this.
-            xarr = np.unique(np.asarray(list(excluded_docs), dtype=np.int64))
-            if xarr.size:
-                excluded_bc = spark.sparkContext.broadcast(xarr)
 
     # posting scan touches only the queried term_ids — an int64 IN-filter
     # pushed into the parquet row-group stats
-    blocks = blocks.filter(F.col("term_id").isin(ids))
-    fan = _fan(spark, blocks, qterm, salt_threshold)
-
+    fan = _fan(spark, prep.blocks.filter(F.col("term_id").isin(ids)), qterm)
     part = _score_fan(
-        fan, n_docs=n_docs, avgdl=avgdl, k1=k1, b=b, k=k, mode=mode,
-        allowed_bc=allowed_bc, excluded_bc=excluded_bc,
+        fan, n_docs=prep.n_docs, avgdl=prep.avgdl, k1=prep.k1, b=prep.b, k=k,
+        mode=mode, allowed_bc=allowed_bc, excluded_bc=prep.excluded_bc,
     )
     if not rank:
-        return part  # exact candidate pool — no global window (see docstring)
+        return part  # exact candidate pool — no global window (see serve_topk)
     # global merge: ≤ S·k tiny rows per query (TakeOrdered-shaped window);
     # k <= 0 (conjunctive pool) ranks but keeps every candidate
     w = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
@@ -852,6 +990,110 @@ def topk_frames(
     if k > 0:
         ranked = ranked.filter(F.col("rank") <= k)
     return ranked.select("query_id", "rank", "doc_id", "score")
+
+
+def collect_chunks(
+    spark: SparkSession, fn, queries: pd.DataFrame, max_batch: int,
+    max_inflight: int = 2, chunk_times: list | None = None,
+) -> DataFrame:
+    """`fn(chunk)` (a lazy result frame) over `queries` cut into chunks
+    of `max_batch`, collected `max_inflight` at a time on worker threads
+    (Spark overlaps their jobs: the next chunk's tasks back-fill
+    executors freed by the current chunk's straggler tail), concatenated
+    in chunk order into one local relation. `chunk_times` receives each
+    chunk's wall seconds, measured under that concurrency (bench.py
+    derives serving-latency p50/p95 from them)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def run(chunk: pd.DataFrame) -> tuple:
+        t0 = time.monotonic()
+        res = fn(chunk)
+        return res.schema, res.toPandas(), time.monotonic() - t0
+
+    chunks = [queries.iloc[i : i + max_batch] for i in range(0, len(queries), max_batch)]
+    with ThreadPoolExecutor(max_workers=max(1, max_inflight)) as pool:
+        done = list(pool.map(run, chunks))
+    if chunk_times is not None:
+        chunk_times.extend(dt for _, _, dt in done)
+    return local_frame(
+        spark, done[0][0], pd.concat([pdf for _, pdf, _ in done], ignore_index=True)
+    )
+
+
+def serve_topk(
+    spark: SparkSession,
+    view: ServeView,
+    queries: pd.DataFrame,
+    k: int = 10,
+    *,
+    filters=None,
+    allowed_docs=None,
+    k1: float | None = None,
+    b: float | None = None,
+    mode: str = "or",
+    not_terms: list[str] | None = None,
+    rank: bool = True,
+    max_batch: int = 0,
+    chunk_times: list | None = None,
+    max_inflight: int = 2,
+) -> DataFrame:
+    """Batch top-k over a serving view: queries pandas(query_id,
+    query_text) → Spark DF of (query_id, rank, doc_id, score). Prep
+    (`serve_prep`) is eager, scoring lazy.
+
+    `mode="and"`: conjunctive serving — only docs containing EVERY
+    query term qualify (rarest-first intersection in the scorer,
+    restrict-pushdown decode), still BM25-scored and ranked. With
+    `k <= 0` every conjunctive candidate is returned — the
+    phrase-verification and facet pool (k <= 0 is rejected for
+    mode="or": the disjunctive candidate set is corpus-sized for any
+    common term). `not_terms`: batch-global MUST-NOT terms — docs
+    containing any of them are excluded before scoring, both modes.
+
+    `rank=False` (k <= 0 only) returns the UNRANKED pool (query_id,
+    doc_id, score) — no global window: the pool feeds phrase
+    verification / facet counting, which re-rank (or never rank)
+    downstream, so the row_number exchange+sort over the full AND set
+    is pure waste there. Segments are doc-disjoint, so the un-windowed
+    union of per-segment rows IS the exact candidate set.
+
+    `filters`: conjunctive filter groups over build-time `filter_terms`
+    posting lists (each group a term or an OR-list) — reference R3.
+    `allowed_docs`: explicit doc_id whitelist (broadcast), for ad-hoc
+    predicates; combine freely with `filters`. `k1`/`b`: see
+    `serve_prep`.
+
+    `max_batch` serves the batch in bounded chunks of that many queries
+    (0 = one plan): one scoring job per chunk over the shared prep,
+    chunk results (k rows/query, tiny) concatenated into one
+    local-relation DataFrame, bitwise identical to one big batch
+    (scoring is per-query, global stats are batch-independent). The
+    scorer's fan working set (posting blocks × queries) grows with the
+    batch while per-core heap is fixed, so on a PACKED executor the
+    wide side of a cluster degrades first — measured on the pinned
+    1→4-core protocol: N→4N serving efficiency 0.805 at 292 queries vs
+    0.703 at 584 (BENCH/BASELINE.md round 4). Chunks run through
+    `collect_chunks`, `max_inflight` at a time, so the co-resident
+    working set stays bounded by max_inflight·chunk."""
+    if mode not in ("or", "and"):
+        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
+    if k <= 0 and mode != "and":
+        raise ValueError("k <= 0 (full candidate set) requires mode='and'")
+    if not rank and k > 0:
+        raise ValueError("rank=False is the k <= 0 candidate-pool shape")
+    prep = serve_prep(
+        spark, view, queries, filters=filters, not_terms=not_terms, k1=k1, b=b
+    )
+    kw = dict(
+        k=k, filters=filters, allowed_docs=allowed_docs, mode=mode,
+        not_terms=not_terms, rank=rank,
+    )
+    if not max_batch or len(queries) <= max_batch:
+        return topk_frames(spark, prep, queries, **kw)
+    return collect_chunks(
+        spark, lambda chunk: topk_frames(spark, prep, chunk, **kw), queries,
+        max_batch, max_inflight, chunk_times,
+    )
 
 
 def topk(
@@ -862,114 +1104,19 @@ def topk(
     *,
     filters=None,
     allowed_docs=None,
-    excluded_docs=None,
     k1: float | None = None,
     b: float | None = None,
     mode: str = "or",
     not_terms: list[str] | None = None,
     rank: bool = True,
 ) -> DataFrame:
-    """Batch top-k: queries pandas(query_id, query_text) → Spark DF of
-    (query_id, rank, doc_id, score). `rank=False` (k <= 0 pools only)
-    skips the global rank window — see topk_frames.
-
-    `mode="and"`: conjunctive serving — only docs containing EVERY
-    query term qualify (still BM25-scored and ranked). `not_terms`:
-    batch-global must-not terms, docs containing any are excluded
-    before scoring (see topk_frames).
-
-    `filters`: conjunctive filter groups over build-time `filter_terms`
-    posting lists (each group a term or an OR-list) — reference R3.
-    `allowed_docs`: explicit doc_id whitelist (broadcast), for ad-hoc
-    predicates; combine freely with `filters`.
-    `excluded_docs`: doc_id blacklist (tombstones) — NOTE: stats are
-    NOT corrected here (single-index ad-hoc exclusion), so scores
-    differ from a rebuild over the survivors; a one-time warning is
-    emitted. For exact upsert semantics use topk_all_generations,
-    which corrects N/avgdl/df from the tombstone rows.
-
-    k1/b overrides that differ from the index's build-time values are
-    rejected: stored per-block `max_tf_norm` upper bounds are computed
-    with the build parameters, and pruning with foreign k1/b could
-    silently drop true top-k members."""
-    if excluded_docs is not None:
-        import warnings
-
-        warnings.warn(
-            "topk(excluded_docs=...) excludes docs WITHOUT correcting "
-            "N/avgdl/df — scores will differ from a rebuild over the "
-            "survivors; use topk_all_generations for exact upsert/delete "
-            "semantics",
-            stacklevel=2,
-        )
-    prep = _serve_prep(
-        spark, index_dir, queries, filters=filters, not_terms=not_terms,
-        k1=k1, b=b,
+    """Batch top-k over a plain index dir — `serve_topk` over its
+    one-generation view."""
+    return serve_topk(
+        spark, open_index(spark, index_dir), queries, k, filters=filters,
+        allowed_docs=allowed_docs, k1=k1, b=b, mode=mode,
+        not_terms=not_terms, rank=rank,
     )
-    return topk_frames(
-        spark, prep["blocks"], prep["tstats"], queries,
-        k=k, filters=filters, allowed_docs=allowed_docs,
-        excluded_docs=excluded_docs, mode=mode, not_terms=not_terms,
-        rank=rank, **prep["frame_kwargs"],
-    )
-
-
-def _serve_prep(
-    spark: SparkSession,
-    index_dir: str,
-    queries: pd.DataFrame,
-    *,
-    filters=None,
-    not_terms: list[str] | None = None,
-    k1: float | None = None,
-    b: float | None = None,
-) -> dict:
-    """Per-index serving state, loaded ONCE per batch: doc_stats
-    metadata and the term-dictionary rows for every term the batch (and
-    its filters / must-nots) touches, plus the lazy postings frame.
-
-    The doc_stats metadata is a driver-side pyarrow read (zero Spark
-    jobs) and both tables are read with their declared schemas (no
-    footer-inference job), so prep costs exactly ONE job — the
-    term-dictionary scan.
-    Chunked serving (`topk_batched`) calls this once for the WHOLE
-    batch and reuses the result for every chunk, so serve prep is O(1)
-    in the chunk count — the same serve-prep-runs-once discipline
-    topk_all_generations and ann_ivf_search_batched already follow."""
-    all_terms = sorted({t for q in queries["query_text"] for t in tokenize(q)})
-    for g in _normalize_filters(filters):
-        all_terms.extend(g)
-    all_terms.extend(not_terms or [])
-
-    meta = load_index_meta(spark, index_dir)
-    tstats = (
-        spark.read.schema(TERM_STATS_SCHEMA)
-        .parquet(f"{index_dir}/term_stats")
-        .filter(F.col("term").isin(all_terms))
-        .toPandas()
-    )
-    if k1 is not None and abs(float(k1) - float(meta["k1"])) > 1e-12:
-        raise ValueError(
-            f"k1={k1} differs from index build k1={meta['k1']}; "
-            "block-max pruning bounds would be unsound — rebuild the index"
-        )
-    if b is not None and abs(float(b) - float(meta["b"])) > 1e-12:
-        raise ValueError(
-            f"b={b} differs from index build b={meta['b']}; "
-            "block-max pruning bounds would be unsound — rebuild the index"
-        )
-    return {
-        "tstats": tstats,
-        "blocks": serve_postings(spark, f"{index_dir}/postings"),
-        "frame_kwargs": dict(
-            n_docs=int(meta["n_docs"]),
-            avgdl=float(meta["avgdl"]),
-            k1=float(meta["k1"]),
-            b=float(meta["b"]),
-            n_segments=int(meta.get("n_segments", 1) or 1),
-            salt_threshold=meta.get("salt_threshold"),
-        ),
-    }
 
 
 def topk_batched(
@@ -983,84 +1130,12 @@ def topk_batched(
     max_inflight: int = 2,
     **topk_kwargs,
 ) -> DataFrame:
-    """Serve a large query batch in bounded chunks of `max_batch`
-    queries — one scoring job per chunk, chunk results (k rows/query,
-    tiny) concatenated into one local-relation DataFrame. `max_batch=0`
-    = unchunked (plain topk).
-
-    `chunk_times`: optional list that receives each chunk's measured
-    wall seconds (bench.py derives the REAL serving-latency p50/p95
-    from these instead of estimating from total wall / Q).
-
-    Each chunk is one `topk_frames` plan: a scoring stage with one
-    Python task per non-empty fan partition, each scoring its groups
-    batch by batch (`_score_fan`), so a chunk's Python cost is its
-    groups' scoring plus a fixed cost per task, not per group.
-
-    Why this exists: the scorer's fan working set (posting blocks ×
-    queries) grows linearly with the batch while per-core heap is
-    fixed, so on a PACKED executor the wide side of a cluster degrades
-    first — measured on the pinned 1→4-core protocol: N→4N serving
-    efficiency 0.805 at 292 queries vs 0.703 at 584
-    (BENCH/BASELINE.md round 4). Chunking bounds the co-resident
-    working set; chunks are independent jobs with no cross-chunk state,
-    so stragglers and retries are contained per chunk. Results are
-    bitwise identical to one big batch: scoring is per-query, global
-    stats are batch-independent.
-
-    Serve prep (doc_stats metadata + the batch's term-dictionary rows)
-    runs ONCE for the whole batch, not once per chunk: the prep is
-    chunk-independent by construction (the term set is the union over
-    all queries; a chunk's _build_qterms merge simply ignores the other
-    chunks' rows), so only the scoring job repeats.
-
-    `max_inflight` chunk jobs run concurrently (guide §2.6 — Spark's
-    scheduler happily overlaps jobs; the next chunk's tasks back-fill
-    executors freed by the current chunk's straggler tail). The
-    co-resident working set stays bounded by max_inflight·chunk —
-    still the point of chunking — and results are byte-identical (the
-    chunks are independent and re-assembled in order). `chunk_times`
-    walls are measured per chunk under that concurrency — the realistic
-    serving-latency figure for a server that admits 2 batches at once."""
-    if not max_batch or len(queries) <= max_batch:
-        return topk(spark, index_dir, queries, k=k, **topk_kwargs)
-    import time
-    from concurrent.futures import ThreadPoolExecutor
-
-    if topk_kwargs.get("excluded_docs") is not None:
-        import warnings
-
-        warnings.warn(
-            "topk_batched(excluded_docs=...) excludes docs WITHOUT "
-            "correcting N/avgdl/df — see topk()",
-            stacklevel=2,
-        )
-    prep = _serve_prep(
-        spark, index_dir, queries,
-        filters=topk_kwargs.get("filters"),
-        not_terms=topk_kwargs.get("not_terms"),
-        k1=topk_kwargs.pop("k1", None), b=topk_kwargs.pop("b", None),
+    """`topk` served in bounded chunks of `max_batch` queries (see
+    `serve_topk`); `max_batch=0` = unchunked."""
+    return serve_topk(
+        spark, open_index(spark, index_dir), queries, k, max_batch=max_batch,
+        chunk_times=chunk_times, max_inflight=max_inflight, **topk_kwargs,
     )
-
-    def run_chunk(chunk: pd.DataFrame) -> tuple[pd.DataFrame, float]:
-        t0 = time.monotonic()
-        pdf = topk_frames(
-            spark, prep["blocks"], prep["tstats"], chunk, k=k,
-            **topk_kwargs, **prep["frame_kwargs"],
-        ).toPandas()
-        return pdf, time.monotonic() - t0
-
-    chunks = [
-        queries.iloc[i : i + max_batch]
-        for i in range(0, len(queries), max_batch)
-    ]
-    parts = []
-    with ThreadPoolExecutor(max_workers=max(1, max_inflight)) as pool:
-        for pdf, dt in pool.map(run_chunk, chunks):  # order-preserving
-            parts.append(pdf)
-            if chunk_times is not None:
-                chunk_times.append(dt)
-    return local_frame(spark, TOPK_SCHEMA, pd.concat(parts, ignore_index=True))
 
 
 def phrase_topk(
@@ -1075,70 +1150,97 @@ def phrase_topk(
     snippet_pad: int | None = None,
     positions_dir: str | None = None,
 ) -> DataFrame:
-    """Exact-phrase top-k: each query_text is a PHRASE — its tokens must
-    appear consecutively, in order, in the document. Two stages, both on
-    existing index physics (no positional postings):
+    """Exact-phrase top-k over a plain index dir — `serve_phrase` over
+    its one-generation view. `positions_dir` (a
+    `positions.build_positions` sidecar) selects positional
+    verification; without it candidates are verified against their
+    text in `docs_dir`."""
+    view = open_index(spark, index_dir, docs_dir, positions_dir)
+    return serve_phrase(
+        spark, view, queries, k, filters=filters, text_col=text_col,
+        snippet_pad=snippet_pad,
+    )
 
-      1. candidates: conjunctive serving (`mode="and"`, k=0) — docs
-         containing every phrase token, WITH their BM25 scores. The
-         pool is bounded by the df of the phrase's rarest token, so for
-         content phrases it is tiny; posting blocks outside the running
-         intersection are never decoded.
-      2. verification: candidates' text fetched by file-pruned doc_id
-         point lookups (`_pruned_doc_meta` — reads only parquet files
-         whose recorded id span holds a candidate), normalized JVM-side
-         with the TOKENIZER'S OWN rule (lowercase, non-[a-z0-9] runs →
-         one space) and matched against ' t1 t2 … ' with `contains` —
-         codegen string ops, no Python in the loop. Normalized-text
-         adjacency is EXACTLY token adjacency because tokens are
-         maximal [a-z0-9] runs: any separator collapses to one space.
+
+def serve_phrase(
+    spark: SparkSession,
+    view: ServeView,
+    queries: pd.DataFrame,
+    k: int = 10,
+    *,
+    filters=None,
+    text_col: str = "extracted_text",
+    snippet_pad: int | None = None,
+    use_positions: bool | None = None,
+) -> DataFrame:
+    """Exact-phrase top-k: each query_text is a PHRASE — its tokens must
+    appear consecutively, in order, in the document. Two stages:
+
+      1. candidates: conjunctive serving (`mode="and"`, k=0, unranked) —
+         docs containing every phrase token, WITH their BM25 scores,
+         tombstoned versions excluded. The pool is bounded by the df of
+         the phrase's rarest token, so for content phrases it is tiny;
+         posting blocks outside the running intersection are never
+         decoded.
+      2. verification, one of:
+         - POSITIONAL, when every generation carries a positions
+           sidecar: adjacency is checked from the stored per-term
+           occurrence positions — term-pruned columnar reads, zero
+           doc-text fetch — the scale path for common-token phrases
+           whose AND candidate set is large. With `snippet_pad`,
+           snippets are then computed from text fetched for the FINAL
+           k·Q rows only.
+         - DOC TEXT: candidates' text fetched by file-pruned lookups
+           (`pool_doc_rows`), normalized JVM-side with the TOKENIZER'S
+           OWN rule (lowercase, non-[a-z0-9] runs → one space) and
+           matched against ' t1 t2 … ' with `contains` — codegen string
+           ops, no Python in the loop. Normalized-text adjacency is
+           EXACTLY token adjacency because tokens are maximal [a-z0-9]
+           runs: any separator collapses to one space.
+         Both give bitwise-identical results (the same tokenizer
+         produced both artifacts; parity is test-locked).
+         `use_positions`: None = positional iff every generation has a
+         sidecar, True = require them (raises — no silent strategy
+         downgrade), False = doc text.
 
     Survivors keep their conjunctive BM25 score; final rank is
-    (score DESC, doc_id ASC). Scale contract: candidate count ∝ rarest
-    df — a phrase of nothing but stopwords degrades toward a corpus
-    scan (same caveat class as a non-selective IVF filter); the
-    escalation path for that shape is a positional-postings sidecar,
-    not doc verification. Phrase-shaped matching the reference exposes
-    only as un-indexed ILIKE substring predicates over titles/names
-    (/root/reference/streamlit_app.py:220-231).
-
-    `positions_dir` (a `positions.build_positions` sidecar) switches
-    stage 2 to POSITIONAL verification: adjacency is checked from the
-    stored per-term occurrence positions — term-pruned columnar reads,
-    zero doc-text fetch — which is the scale path for common-token
-    phrases where the AND candidate set is large. Results are
-    bitwise-identical to doc-text verification (same tokenizer
-    produced both artifacts; parity is test-locked). With
-    `snippet_pad`, snippets are then computed from text fetched for
-    the FINAL k·Q rows only — the cheapest possible text touch.
-
-    Scale contract (the k=0 pool): the candidate set stays DISTRIBUTED
-    end to end — it is never localized through the driver (for a
-    common-token phrase it is a corpus fraction; the driver only ever
-    sees the final k·Q rows, or the bounded coarse-bucket aggregate
-    the doc-text path's file pruning needs — see _pruned_doc_meta_pool)."""
-    cand = topk(
-        spark, index_dir, queries, k=0, mode="and", filters=filters,
-        rank=False,
+    (score DESC, doc_id ASC). Scale contract: the k=0 pool stays
+    DISTRIBUTED end to end — for a common-token phrase it is a corpus
+    fraction; the driver only ever sees the final k·Q rows, or the
+    bounded coarse-bucket aggregate the doc-text path's file pruning
+    needs. Phrase-shaped matching the reference exposes only as
+    un-indexed ILIKE substring predicates over titles/names
+    (the reference's streamlit_app.py:220-231)."""
+    missing = [g.index for g in view.gens if g.positions is None]
+    if use_positions is None:
+        use_positions = not missing
+    if use_positions and missing:
+        raise ValueError(
+            f"positions sidecar missing for generation dirs {missing}; "
+            "rebuild those generations with positions (or pass "
+            "use_positions=False) — a partial sidecar would silently "
+            "drop matches from the uncovered generations"
+        )
+    cand = serve_topk(
+        spark, view, queries, k=0, mode="and", filters=filters, rank=False
     )
-    if positions_dir is not None:
+    if use_positions:
         from theoremsearch_spark.positions import phrase_verify_positional
 
         # single consumer: the pool flows straight into the verify
         # join as a plan subtree — no materialization anywhere
         ranked = phrase_verify_positional(
-            spark, positions_dir, cand, queries, k
+            spark, [g.positions for g in view.gens], cand, queries, k
         )
         if snippet_pad is None:
             return ranked
-        ranked = _localize_hits(spark, ranked)  # final k·Q rows — tiny
-        docs = _pruned_doc_meta(spark, docs_dir, ranked, [text_col])
+        ranked, docs = _localized_docs(spark, view, ranked, [text_col])
         return _snippets(spark, ranked, docs, queries, text_col, snippet_pad)
     # two consumers (file pruning + verify join): one EXECUTOR-side
     # materialization so the scoring pipeline runs once. Lazy: the
     # pruning aggregate triggers it, so checkpointing adds no extra job
     cand = cand.localCheckpoint(eager=False)
-    docs = _pruned_doc_meta_pool(spark, docs_dir, cand, [text_col])
+    docs = pool_doc_rows(spark, view, cand, [text_col])
     return _verify_phrase(
         spark, cand, docs, queries, k, text_col, snippet_pad=snippet_pad
     )
@@ -1252,9 +1354,11 @@ def topk_rescored(
     at pool time, inside the ranked query — never after the pool, which
     is the under-fill anti-pattern the reference itself warns of
     (/root/reference/app_showcase_model.py:96-129)."""
+    view = open_index(spark, index_dir, docs_dir)
     pool = max(50, pool_factor * k)
-    hits = _localize_hits(spark, topk(spark, index_dir, queries, k=pool, filters=filters))
-    meta = _pruned_doc_meta(spark, docs_dir, hits, [weight_col])
+    hits, meta = _localized_docs(
+        spark, view, serve_topk(spark, view, queries, k=pool, filters=filters), [weight_col]
+    )
     rescored = hits.join(meta, "doc_id").withColumn(
         "weighted_score",
         F.col("score") + F.lit(weight) * F.log(1.0 + F.col(weight_col)),
@@ -1274,72 +1378,73 @@ def topk_with_urls(
 ) -> DataFrame:
     """Top-k joined with doc metadata for display — the serving shape of
     /root/reference/streamlit_app.py:276-283 (ranked ids → full rows)."""
-    hits = _localize_hits(spark, topk(spark, index_dir, queries, k))
-    docs = _pruned_doc_meta(spark, docs_dir, hits, ["url", "lang", "warc_ts"])
+    view = open_index(spark, index_dir, docs_dir)
+    return with_doc_meta(spark, view, serve_topk(spark, view, queries, k))
+
+
+# the doc metadata a displayed result carries
+_DISPLAY_COLS = ["url", "lang", "warc_ts"]
+
+
+def with_doc_meta(spark: SparkSession, view: ServeView, ranked: DataFrame) -> DataFrame:
+    """Ranked hits joined (left) to the display columns their docs
+    tables carry, ordered by (query_id, rank)."""
+    hits, docs = _localized_docs(spark, view, ranked, _DISPLAY_COLS)
     return hits.join(docs, "doc_id", "left").orderBy("query_id", "rank")
 
 
-def _localize_hits(spark: SparkSession, hits: DataFrame) -> DataFrame:
-    """Materialize a top-k result (k·Q rows — tiny by construction) into
-    a local relation so the metadata-join consumers can (a) derive the
-    doc_id bounds for scan pruning and (b) reuse it without re-running
-    the whole scoring pipeline."""
-    return local_frame(spark, TOPK_SCHEMA, hits.toPandas())
+def _localized_docs(
+    spark: SparkSession, view: ServeView, ranked: DataFrame, cols: list[str]
+) -> tuple[DataFrame, DataFrame]:
+    """(hits, docs): a top-k result (k·Q rows — tiny by construction)
+    collected once into a local relation, so its consumers reuse it
+    without re-running the scoring pipeline, and the (doc_id, *cols)
+    rows of its ids in the view's docs tables, reading only the PARQUET
+    FILES that can contain one. prepare_docs writes docs doc_id-ascending
+    and records each file's [lo, hi] id span in an `_id_ranges.json`
+    sidecar; the lookup binary-searches the hit ids against the spans
+    and scans only the touched files — point-lookup physics, where a
+    global [min(hit), max(hit)] span would cover the whole table for
+    hits spread across the id space. The join itself does the exact id
+    matching; AQE broadcasts the hits side."""
+    pdf = ranked.toPandas()
+    ids = sorted({int(i) for i in pdf["doc_id"]})
+    return local_frame(spark, TOPK_SCHEMA, pdf), _docs_touching(spark, view, ids, 0, cols)
 
 
-def _pruned_doc_meta(
-    spark: SparkSession, docs_dir: str, hits: DataFrame, cols: list[str]
+def _docs_touching(
+    spark: SparkSession, view: ServeView, keys: list[int], shift: int, cols: list[str]
 ) -> DataFrame:
-    """Column-pruned docs scan restricted to exactly the PARQUET FILES
-    that can contain the hit ids. prepare_docs writes docs
-    doc_id-ascending and records each file's [lo, hi] id span in an
-    `_id_ranges.json` sidecar (footer stats, zero extra IO at write
-    time); the lookup binary-searches the k·Q hit ids against the
-    spans and scans only the touched files — point-lookup physics, the
-    10^12-doc answer the old global [min(hit), max(hit)] between-span
-    could not give (hits spread across the id space make that span the
-    whole table, leaving only row-group stats inside it). Dirs without
-    a manifest (docs_offset generations, hand-built roots) fall back to
-    the span filter, which is still pushed to row-group statistics. The
-    join itself does the exact id matching; AQE broadcasts the hits
-    side."""
-    ids = sorted(
-        int(r["doc_id"]) for r in hits.select("doc_id").distinct().collect()
-    )
-    sel = _prune_doc_files(docs_dir, ids)
-    if sel is None:
-        meta = spark.read.parquet(docs_dir).select("doc_id", *cols)
-    elif not sel:
-        # manifest present, no file can contain a hit — statically empty
-        # (Filter(false) folds to an empty relation: zero file reads)
-        return (
-            spark.read.parquet(docs_dir)
-            .select("doc_id", *cols)
-            .filter(F.lit(False))
-        )
-    else:
-        meta = spark.read.parquet(*sel).select("doc_id", *cols)
-    if ids:
-        meta = meta.filter(F.col("doc_id").between(ids[0], ids[-1]))
-    return meta
-
-
-def _prune_doc_files(docs_dir: str, ids: list[int]) -> list[str] | None:
-    """Files of `docs_dir` whose recorded doc_id span contains at least
-    one hit id, per the `_id_ranges.json` sidecar. None = no manifest
-    (or no ids) — caller falls back to the whole-dir scan. An empty
-    list means the manifest proves NO file holds a hit."""
+    """(doc_id, *cols) rows of the docs files whose recorded id span
+    holds a doc with `doc_id >> shift` in the sorted `keys`, filtered to
+    the keys' id span (pushed to row-group statistics). Dirs without an
+    `_id_ranges.json` manifest (docs_offset generations, hand-built
+    roots) are read whole. No keys, or manifests proving no file holds
+    one, give a statically empty frame (Filter(false) folds to an empty
+    relation: zero file reads). Columns a docs table lacks are left
+    out."""
     import bisect
     import os
 
-    ranges = _load_id_ranges(docs_dir)
-    if not ids or ranges is None:
-        return None
-    return [
-        os.path.join(docs_dir, r["file"])
-        for r in ranges
-        if (i := bisect.bisect_left(ids, r["lo"])) < len(ids) and ids[i] <= r["hi"]
-    ]
+    paths: list[str] = []
+    for g in view.gens if keys else ():
+        ranges = _load_id_ranges(g.docs)
+        if ranges is None:
+            paths.append(g.docs)
+            continue
+        paths.extend(
+            os.path.join(g.docs, r["file"])
+            for r in ranges
+            if (i := bisect.bisect_left(keys, int(r["lo"]) >> shift)) < len(keys)
+            and keys[i] <= int(r["hi"]) >> shift
+        )
+    if not paths:
+        docs = spark.read.parquet(*[g.docs for g in view.gens]).filter(F.lit(False))
+    else:
+        docs = spark.read.parquet(*paths).filter(
+            F.col("doc_id").between(keys[0] << shift, ((keys[-1] + 1) << shift) - 1)
+        )
+    return docs.select("doc_id", *[c for c in cols if c in docs.columns])
 
 
 def _load_id_ranges(docs_dir: str) -> list[dict] | None:
@@ -1381,49 +1486,16 @@ def _pool_hit_buckets(cand: DataFrame, shift: int) -> list[int]:
     )
 
 
-def _pruned_doc_meta_pool(
-    spark: SparkSession, docs_dir: str, cand: DataFrame, cols: list[str]
+def pool_doc_rows(
+    spark: SparkSession, view: ServeView, cand: DataFrame, cols: list[str]
 ) -> DataFrame:
-    """Column-pruned docs scan for a DISTRIBUTED candidate pool —
-    the k=0 analog of `_pruned_doc_meta`, which collects hit ids and is
-    only sound for bounded k·Q result sets. A conjunctive pool can be a
-    corpus fraction, so the file-pruning signal here is a cluster-side
+    """(doc_id, *cols) rows of the view's docs tables for a DISTRIBUTED
+    candidate pool — the k=0 analog of `_localized_docs`, whose id list is
+    only sound for bounded result sets. A conjunctive pool can be a
+    corpus fraction, so the file-pruning keys are a cluster-side
     aggregate: distinct coarse id buckets (`_pool_hit_buckets`, bucket
-    width ≈ one file's id span). The driver sees O(n_files) ints and
-    selects exactly the files whose recorded [lo, hi] span intersects a
-    hit bucket; the bucket-bound BETWEEN filter is pushed to row-group
-    statistics inside them. No manifest → whole-dir scan bounded by the
-    pool's exact [min, max] (a 2-value aggregate)."""
-    ranges = _load_id_ranges(docs_dir)
-    base = spark.read.parquet(docs_dir).select("doc_id", *cols)
-    if ranges is None:
-        rng = cand.agg(
-            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-        ).collect()[0]
-        if rng["lo"] is None:
-            return base.filter(F.lit(False))
-        return base.filter(F.col("doc_id").between(int(rng["lo"]), int(rng["hi"])))
-    shift = _bucket_shift(ranges)
-    buckets = _pool_hit_buckets(cand, shift)
-    if not buckets:
-        return base.filter(F.lit(False))
-    import bisect
-    import os
-
-    sel = [
-        os.path.join(docs_dir, r["file"])
-        for r in ranges
-        if (i := bisect.bisect_left(buckets, int(r["lo"]) >> shift)) < len(buckets)
-        and buckets[i] <= int(r["hi"]) >> shift
-    ]
-    if not sel:
-        return base.filter(F.lit(False))
-    return (
-        spark.read.parquet(*sel)
-        .select("doc_id", *cols)
-        .filter(
-            F.col("doc_id").between(
-                buckets[0] << shift, ((buckets[-1] + 1) << shift) - 1
-            )
-        )
-    )
+    width ≈ one file's id span across the generations). The driver sees
+    O(n_files) ints, never a candidate id."""
+    spans = [r for g in view.gens for r in _load_id_ranges(g.docs) or ()]
+    shift = _bucket_shift(spans)
+    return _docs_touching(spark, view, _pool_hit_buckets(cand, shift), shift, cols)

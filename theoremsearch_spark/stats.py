@@ -256,7 +256,7 @@ def prepare_docs(
     # breaks the tiling — both caught from footer statistics alone.
     # The same footer walk yields the per-FILE id-range manifest
     # (_id_ranges.json) that serving's metadata lookups use for
-    # file-level pruning — see query._pruned_doc_meta.
+    # file-level pruning — see query.doc_rows.
     if expected:
         _assert_dense_ids_from_footers(out, f"{out_dir}/docs", int(id_base), expected)
         write_id_range_manifest(f"{out_dir}/docs")

@@ -38,9 +38,6 @@ def _generations(spark: SparkSession, out_dir: str) -> list[dict]:
     `compact_generations`): superseded generations are dropped from the
     view the instant the compacted generation's manifest file appears
     (one atomic rename), so readers never see a doc twice."""
-    import glob
-    import json
-
     raw = _raw_generations(out_dir)
     replaced = {g for r in raw for g in r.get("replaces", [])}
     return [r for r in raw if r["gen"] not in replaced]
@@ -765,15 +762,32 @@ def _tombstone_artifact(dead: DataFrame, count_terms=None):
     return mask, n, sum(int(r["dl"]) for r in mask_rows), dfc
 
 
-# one row per (generation, batch term): the scoring job's broadcast side
-_GEN_TERMS_SCHEMA = T.StructType(
-    [
-        T.StructField("gen", T.IntegerType(), False),
-        T.StructField("term_id", T.LongType(), False),
-        T.StructField("is_salted", T.BooleanType(), False),
-        T.StructField("ub_scale", T.DoubleType(), False),
-    ]
-)
+def open_root(spark: SparkSession, out_dir: str):
+    """A generation root as a serving view (`query.ServeView`): every
+    committed index generation, and the tombstone dirs of every
+    committed generation. Delete-only generations carry tombstones but
+    no index — they join the tombstone mask, never the index scans."""
+    import os
+
+    from theoremsearch_spark.query import Generation, ServeView, load_index_meta
+
+    gens = sorted(_generations(spark, out_dir), key=lambda g: g["gen"])
+    if not gens:
+        raise ValueError(f"no committed generations under {out_dir}")
+    view_gens = []
+    for g in gens:
+        if g.get("delete_only"):
+            continue
+        index = f"{out_dir}/gen_{g['gen']}/index"
+        pos = f"{index}/positions"
+        view_gens.append(Generation(
+            int(g["gen"]), index, _docs_path(out_dir, g["gen"]),
+            pos if os.path.isdir(pos) else None, load_index_meta(spark, index),
+            g.get("filter_cols"),
+        ))
+    if not view_gens:
+        raise ValueError(f"only delete-only generations under {out_dir}")
+    return ServeView(view_gens, _tombstone_paths(out_dir, [g["gen"] for g in gens]))
 
 
 def topk_all_generations(
@@ -783,356 +797,23 @@ def topk_all_generations(
 ):
     """Query across every committed generation with globally merged
     statistics (N, avgdl, df) — scores are identical to a from-scratch
-    batch build over the union corpus.
+    batch build over the union corpus. Tombstoned (upserted-away or
+    deleted) doc versions are excluded, and N, avgdl and per-term df
+    are corrected as if they were gone; stored per-generation doc_stats
+    stay stale until compaction, standard LSM behavior.
 
-    `filters` (reference R3) work exactly as in single-index topk: each
-    group is a required build-time filter term (or an OR-list). Filter
-    posting lists merge across generations like any term, and tombstoned
-    doc versions are excluded from filter sets too.
+    `filters` (reference R3) work exactly as in single-index topk;
+    a filter on a column some generation's manifest records as not
+    indexed is rejected. `max_batch` serves the batch in bounded chunks
+    over one shared prep — the tombstone mask is built and broadcast
+    once. See `query.serve_topk` for the other arguments."""
+    from theoremsearch_spark.query import serve_topk
 
-    `max_batch` serves the batch in bounded chunks (the query.topk_batched
-    wide-side fix, extended to streamed roots — the deployment that
-    actually serves big batches): the serve-time preparation jobs
-    (tombstone artifact, per-term dead-doc counts, merged term stats —
-    all computed over the FULL batch's term set, so they are
-    chunk-independent) run ONCE, and only the scoring job repeats per
-    chunk. The tombstone mask is broadcast once and shared by every
-    chunk. Results are bitwise identical to unchunked serving: scoring
-    is per-query and global statistics don't depend on the batch split.
-    """
-    from theoremsearch_spark.build import TERM_STATS_SCHEMA
-    from theoremsearch_spark.extract import tokenize
-    from theoremsearch_spark.query import (
-        _normalize_filters,
-        local_frame,
-        serve_postings,
-        topk_frames,
+    return serve_topk(
+        spark, open_root(spark, out_dir), queries, k, filters=filters,
+        allowed_docs=allowed_docs, max_batch=max_batch, mode=mode,
+        not_terms=not_terms, rank=rank,
     )
-
-    gens = sorted(_generations(spark, out_dir), key=lambda g: g["gen"])
-    if not gens:
-        raise ValueError(f"no committed generations under {out_dir}")
-    # delete-only generations carry tombstones but no index — they join
-    # the tombstone scan below, never the index scan paths
-    gen_ids = [int(g["gen"]) for g in gens if not g.get("delete_only")]
-    if not gen_ids:
-        raise ValueError(f"only delete-only generations under {out_dir}")
-    tomb_gen_ids = [int(g["gen"]) for g in gens]
-
-    # O(1) Spark jobs regardless of generation count: a streaming index
-    # accumulates one generation per micro-batch, so per-generation reads
-    # (G driver collects + a G-way plan union) would grow the query plan
-    # linearly with uptime. Instead each small table is ONE multi-path
-    # scan with the generation id parsed from the file path.
-    gen_col = F.regexp_extract(F.input_file_name(), r"gen_(-?\d+)/index", 1).cast("int")
-
-    # per-generation doc_stats: G one-row sidecars — read DRIVER-side
-    # with pyarrow (zero Spark jobs; a mergeSchema multi-dir collect
-    # job for G·7 scalars measured ~0.3 s). Spark fallback for
-    # non-local roots.
-    from theoremsearch_spark.stats import read_doc_stats_row
-
-    metas: dict[int, dict] = {}
-    for g in gen_ids:
-        row = read_doc_stats_row(f"{out_dir}/gen_{g}/index/doc_stats")
-        if row is None:
-            metas = {
-                int(r["gen"]): {
-                    k: r[k] for k in r.__fields__ if k != "gen"
-                }
-                for r in spark.read.option("mergeSchema", "true")
-                .parquet(*[f"{out_dir}/gen_{gg}/index/doc_stats" for gg in gen_ids])
-                .withColumn("gen", gen_col)
-                .collect()
-            }
-            break
-        metas[int(g)] = row
-    n_docs = sum(m["n_docs"] for m in metas.values())
-    avgdl = sum(m["avgdl"] * m["n_docs"] for m in metas.values()) / n_docs
-    any_meta = next(iter(metas.values()))
-    k1, b = float(any_meta["k1"]), float(any_meta["b"])
-
-    all_terms = sorted({t for q in queries["query_text"] for t in tokenize(q)})
-    # must-not terms need their merged stats rows too — without them the
-    # qterm merge would silently drop the exclusion
-    all_terms.extend(not_terms or [])
-    fkeys = set()
-    for g in _normalize_filters(filters):
-        all_terms.extend(g)
-        fkeys |= {t.split("=", 1)[0] for t in g}
-    if fkeys:
-        # a generation that did not index a filter's posting list would
-        # silently exclude ALL its docs from filtered results — reject
-        # when the manifest RECORDS what was indexed and it doesn't
-        # cover the filter (hand-committed generations without the
-        # field are trusted to have built their own filter_terms)
-        for g in gens:
-            fc = g.get("filter_cols")
-            if not g.get("delete_only") and fc is not None and not fkeys <= set(fc):
-                raise ValueError(
-                    f"generation {g['gen']} indexed filter_cols={fc} but the "
-                    f"query filters on {sorted(fkeys)} — filtered serving "
-                    "would silently drop that generation's documents; "
-                    "rebuild/compact with consistent filter_cols"
-                )
-
-    # ---- tombstone corrections (upsert serving) ----
-    # A generation that re-ingested urls tombstoned the older doc
-    # versions. Serving must (a) exclude those doc_ids from scoring and
-    # (b) correct N, avgdl, and per-term df as if the dead docs were
-    # gone — making scores IDENTICAL to a from-scratch build over the
-    # latest versions. The exclusion mask is built EXECUTOR-side as
-    # compressed delta-varbyte chunks (PackedDocIdSet) — no Row-per-
-    # tombstone driver collect. Stats in the stored per-generation
-    # doc_stats stay stale until compaction, standard LSM behavior.
-    #
-    # The three serve-time preparation jobs — exclusion artifact,
-    # per-term dead-doc counts, merged term stats — are INDEPENDENT
-    # plans, so they run as concurrent jobs (the build-side overlapped
-    # stat-jobs pattern, build.py). Folding the dead-doc counts into
-    # the term-stats job as a join was measured SLOWER (+0.7 s at the
-    # bench shape): AQE serializes the joined aggregates' stages inside
-    # one job, while two tiny jobs overlap fully on idle executor slots.
-    excluded_mask = None
-    dead = None
-    tomb_paths = _tombstone_paths(out_dir, tomb_gen_ids)
-    if tomb_paths:
-        dead = (
-            spark.read.schema(TOMBSTONE_SCHEMA)
-            .parquet(*tomb_paths)
-            .dropDuplicates(["doc_id"])
-        )
-
-    # segment-sharded serving across generations: saltedness is a
-    # PER-GENERATION property (each generation salted at its own df
-    # threshold), so the routing flag rides on the blocks, not on the
-    # merged df. Sharding requires every generation to agree on the
-    # segment modulus (doc_id % S); mixed moduli fall back to the
-    # single-task path — correct, just unsharded.
-    # field-presence alone is not enough: with mergeSchema=true the
-    # column exists for EVERY row and is NULL for generations built by
-    # older code — treat NULL as the legacy default (unsharded)
-    seg_moduli = {
-        int(m["n_segments"])
-        if m.get("n_segments") is not None
-        else 1
-        for m in metas.values()
-    }
-    n_segments = seg_moduli.pop() if len(seg_moduli) == 1 else 1
-
-    # salt thresholds are pure build-time metadata — applied in pandas
-    # to the collected per-generation term rows below (no salt_info
-    # join inside a Spark job)
-    thr = {
-        int(g): (
-            int(m["salt_threshold"])
-            if m.get("salt_threshold") is not None
-            else 2**62
-        )
-        for g, m in metas.items()
-    }
-
-    # ONE term-dictionary scan for the whole serve: collect the
-    # per-generation rows for the batch's terms (bounded by
-    # |batch terms|·G — driver-tiny at any corpus size) and derive BOTH
-    # the merged stats and the per-generation salted-routing flags in
-    # pandas. The previous shape ran a Spark groupBy for the merge AND
-    # re-scanned term_stats inside the scoring job to build the
-    # salted_flags broadcast; now the flags enter the scoring plan as a
-    # local relation and term_stats is read exactly once.
-    tstats_plan = (
-        spark.read.schema(TERM_STATS_SCHEMA)
-        .parquet(*[f"{out_dir}/gen_{g}/index/term_stats" for g in gen_ids])
-        .withColumn("gen", gen_col)
-        .filter(F.col("term").isin(all_terms))
-        .select("gen", "term", "term_id", "df")
-    )
-
-    # run the independent preparation jobs CONCURRENTLY (tombstone
-    # artifact — which now folds the per-term dead-doc counts into its
-    # single pass — and the term-dictionary scan): two tiny jobs that
-    # leave most executor slots idle, so overlapping them collapses
-    # their walls into ~one
-    from concurrent.futures import ThreadPoolExecutor
-
-    dfc: dict[str, int] = {}
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_tstats = pool.submit(tstats_plan.toPandas)
-        if dead is not None:
-            fut_mask = pool.submit(_tombstone_artifact, dead, all_terms)
-            excluded_mask, n_dead, dl_dead, dfc = fut_mask.result()
-            if n_dead:
-                total_len = avgdl * n_docs - dl_dead
-                n_docs -= n_dead
-                avgdl = total_len / max(n_docs, 1)
-        per_gen = fut_tstats.result()
-
-    per_gen["any_salted"] = per_gen["df"] > per_gen["gen"].map(thr)
-    merged = (
-        per_gen.groupby(["term", "term_id"], as_index=False)
-        .agg(df=("df", "sum"), any_salted=("any_salted", "max"))
-    )
-    merged["any_salted"] = merged["any_salted"].astype(bool)
-
-    if dfc:
-        # scoring df excludes dead docs; the any_salted ROUTING flag
-        # keeps using the generations' own build-time df (saltedness is
-        # a physical layout property, not a statistic)
-        merged["df"] = merged["df"] - merged["term"].map(dfc).fillna(0).astype(int)
-
-    # per-(generation, term) routing and bound data as ONE local
-    # relation, collected with the term dictionary above (no term_stats
-    # scan inside the scoring job, one broadcast join): the
-    # salted-routing flag, and the block-max rescale factor.
-    # The factor needs the CORRECTED avgdl (block max_tf_norm was
-    # computed with the GENERATION's avgdl; tf_norm is monotonically
-    # increasing in avgdl, bounded by the denominator ratio ≤
-    # avgdl_serve/avgdl_gen — the scale keeps pruning sound under
-    # merged+corrected statistics), so this frame is built after the
-    # artifact job resolves; `blocks` stays lazy, evaluated only inside
-    # the scoring job
-    ub_scale = {g: max(1.0, avgdl / float(m["avgdl"])) for g, m in metas.items()}
-    gen_terms = local_frame(
-        spark, _GEN_TERMS_SCHEMA,
-        per_gen.assign(
-            is_salted=per_gen["any_salted"], ub_scale=per_gen["gen"].map(ub_scale)
-        ),
-    )
-    blocks = (
-        serve_postings(spark, *[f"{out_dir}/gen_{g}/index/postings" for g in gen_ids])
-        .withColumn("gen", gen_col)
-        .join(F.broadcast(gen_terms), ["gen", "term_id"])
-        .withColumn(
-            "max_tf_norm", (F.col("max_tf_norm") * F.col("ub_scale")).cast("float")
-        )
-        .drop("ub_scale", "gen")
-    )
-    common = dict(
-        n_docs=int(n_docs), avgdl=float(avgdl), k1=k1, b=b, k=k,
-        n_segments=n_segments, filters=filters, allowed_docs=allowed_docs,
-        mode=mode, not_terms=not_terms, rank=rank,
-    )
-    if not max_batch or len(queries) <= max_batch:
-        return topk_frames(
-            spark, blocks, merged, queries,
-            excluded_docs=excluded_mask, **common,
-        )
-
-    # bounded chunks: broadcast the tombstone mask ONCE (topk_frames
-    # accepts the Broadcast handle), then one scoring job per chunk
-    # over the shared lazy `blocks` plan and the already-merged term
-    # stats; chunk results are k rows/query — concatenating them on the
-    # driver is tiny by construction
-    import pandas as pd
-
-    from theoremsearch_spark.query import _GROUP_SCHEMA, TOPK_SCHEMA
-
-    excl = excluded_mask
-    if excluded_mask is not None and excluded_mask.n:
-        excl = spark.sparkContext.broadcast(excluded_mask)
-    parts = [
-        topk_frames(
-            spark, blocks, merged, queries.iloc[i : i + max_batch],
-            excluded_docs=excl, **common,
-        ).toPandas()
-        for i in range(0, len(queries), max_batch)
-    ]
-    return local_frame(
-        spark, TOPK_SCHEMA if rank else _GROUP_SCHEMA,
-        pd.concat(parts, ignore_index=True),
-    )
-
-
-def pruned_generation_docs(
-    spark: SparkSession, out_dir: str, ids: list[int], cols: list[str] | None = None,
-) -> DataFrame:
-    """Docs rows for `ids` across every committed generation, reading
-    only the parquet FILES whose recorded doc_id span can contain a hit
-    (per-generation `_id_ranges.json` point-lookup pruning); dirs
-    without a manifest (docs_offset legacy) fall back whole and the
-    hit-range filter still prunes their row groups. `cols=None` keeps
-    every column the generation docs tables carry."""
-    from theoremsearch_spark.query import _prune_doc_files
-
-    ids = sorted(set(int(i) for i in ids))
-    paths: list[str] = []
-    all_paths: list[str] = []
-    for g in _generations(spark, out_dir):
-        if g.get("delete_only"):
-            continue
-        dpath = _docs_path(out_dir, g["gen"])
-        all_paths.append(dpath)
-        sel = _prune_doc_files(dpath, ids)
-        paths.extend([dpath] if sel is None else sel)
-    if not paths:
-        docs = spark.read.parquet(*all_paths).filter(F.lit(False))
-    else:
-        docs = spark.read.parquet(*paths)
-        if ids:
-            docs = docs.filter(F.col("doc_id").between(ids[0], ids[-1]))
-    if cols is not None:
-        docs = docs.select("doc_id", *[c for c in cols if c in docs.columns])
-    return docs
-
-
-def pruned_generation_docs_pool(
-    spark: SparkSession, out_dir: str, cand: DataFrame, cols: list[str],
-) -> DataFrame:
-    """Docs rows matching a DISTRIBUTED candidate pool across every
-    committed generation — the k=0 analog of `pruned_generation_docs`,
-    whose id-list contract is only sound for bounded result sets. The
-    pruning signal is ONE cluster-side aggregate over the pool: distinct
-    coarse id buckets sized to the generations' file spans (the driver
-    receives O(total files) ints, never a candidate id); each
-    generation's manifest is then pruned against that bucket set and
-    the bucket-bound BETWEEN filter lands on row-group statistics."""
-    from theoremsearch_spark.query import (
-        _bucket_shift,
-        _load_id_ranges,
-        _pool_hit_buckets,
-    )
-
-    per_gen: list[tuple[str, list[dict] | None]] = []
-    spans: list[dict] = []
-    for g in _generations(spark, out_dir):
-        if g.get("delete_only"):
-            continue
-        dpath = _docs_path(out_dir, g["gen"])
-        ranges = _load_id_ranges(dpath)
-        per_gen.append((dpath, ranges))
-        spans.extend(ranges or [])
-    if not per_gen:
-        raise ValueError(f"no committed generations under {out_dir}")
-    shift = _bucket_shift(spans)
-    buckets = _pool_hit_buckets(cand, shift)
-    all_paths = [p for p, _ in per_gen]
-    if not buckets:
-        docs = spark.read.parquet(*all_paths).filter(F.lit(False))
-        return docs.select("doc_id", *[c for c in cols if c in docs.columns])
-    import bisect
-    import os
-
-    paths: list[str] = []
-    for dpath, ranges in per_gen:
-        if ranges is None:
-            paths.append(dpath)  # no manifest — BETWEEN still prunes row groups
-            continue
-        paths.extend(
-            os.path.join(dpath, r["file"])
-            for r in ranges
-            if (i := bisect.bisect_left(buckets, int(r["lo"]) >> shift))
-            < len(buckets)
-            and buckets[i] <= int(r["hi"]) >> shift
-        )
-    if not paths:
-        docs = spark.read.parquet(*all_paths).filter(F.lit(False))
-    else:
-        docs = spark.read.parquet(*paths).filter(
-            F.col("doc_id").between(
-                buckets[0] << shift, ((buckets[-1] + 1) << shift) - 1
-            )
-        )
-    return docs.select("doc_id", *[c for c in cols if c in docs.columns])
 
 
 def phrase_topk_all_generations(
@@ -1142,67 +823,19 @@ def phrase_topk_all_generations(
     use_positions: bool | None = None,
 ) -> DataFrame:
     """Exact-phrase top-k on a streamed/upserted multi-generation root:
-    conjunctive candidates come from `topk_all_generations(mode="and",
-    k=0)` — merged global stats, tombstoned versions excluded — then
-    adjacency verification.
-
-    Verification strategy: when EVERY committed generation carries a
-    positions sidecar (its builder ran `build_positions` on the
-    generation's docs), verification reads positions across the
-    per-generation sidecars (doc_ids are globally unique via the
-    generation offsets, and candidates are already tombstone-filtered,
-    so stale versions' positions are unreachable). Otherwise candidate
-    text comes from the per-generation docs tables via file-pruned
-    point lookups (`pruned_generation_docs`). `use_positions`:
-    None=auto (all-or-nothing check), True=require sidecars (raises if
-    any generation lacks one — no silent strategy downgrade),
+    `query.serve_phrase` over the root's view. Positional verification
+    reads the per-generation sidecars (doc_ids are globally unique via
+    the generation offsets, and candidates are already
+    tombstone-filtered, so stale versions' positions are unreachable);
+    doc-text verification reads the per-generation docs tables.
+    `use_positions`: None=auto (every generation has a sidecar),
+    True=require sidecars (raises if any generation lacks one),
     False=doc-text verify."""
-    import os
+    from theoremsearch_spark.query import serve_phrase
 
-    from theoremsearch_spark.query import _localize_hits, _snippets, _verify_phrase
-
-    # the k=0 conjunctive pool stays DISTRIBUTED (unranked — phrase
-    # verification re-ranks): for common-token phrases it is a corpus
-    # fraction, so it must never localize through the driver; only the
-    # final k·Q rows (and the bounded coarse-bucket pruning aggregate)
-    # ever do
-    cand = topk_all_generations(
-        spark, out_dir, queries, k=0, mode="and", filters=filters, rank=False
-    )
-    pos_roots = []
-    missing = []
-    for g in _generations(spark, out_dir):
-        if g.get("delete_only"):
-            continue
-        p = f"{out_dir}/gen_{g['gen']}/index/positions"
-        (pos_roots if os.path.isdir(p) else missing).append(p)
-    if use_positions is None:
-        use_positions = bool(pos_roots) and not missing
-    if use_positions:
-        if missing:
-            raise ValueError(
-                f"positions sidecar missing for generation dirs {missing}; "
-                "rebuild those generations with positions (or pass "
-                "use_positions=False) — a partial sidecar would silently "
-                "drop matches from the uncovered generations"
-            )
-        from theoremsearch_spark.positions import phrase_verify_positional
-
-        ranked = phrase_verify_positional(spark, pos_roots, cand, queries, k)
-        if snippet_pad is None:
-            return ranked
-        # final k·Q rows — bounded, the id-list pruning path is sound
-        ranked = _localize_hits(spark, ranked)
-        ids = [int(r["doc_id"]) for r in ranked.select("doc_id").distinct().collect()]
-        docs = pruned_generation_docs(spark, out_dir, ids, cols=[text_col])
-        return _snippets(spark, ranked, docs, queries, text_col, snippet_pad)
-    # doc-text verify: two consumers (pruning aggregate + verify join) —
-    # one executor-side materialization so scoring runs once; the driver
-    # sees only the coarse-bucket aggregate, never the pool
-    cand = cand.localCheckpoint(eager=False)  # pruning agg materializes it
-    docs = pruned_generation_docs_pool(spark, out_dir, cand, cols=[text_col])
-    return _verify_phrase(
-        spark, cand, docs, queries, k, text_col, snippet_pad=snippet_pad
+    return serve_phrase(
+        spark, open_root(spark, out_dir), queries, k, filters=filters,
+        text_col=text_col, snippet_pad=snippet_pad, use_positions=use_positions,
     )
 
 

@@ -56,22 +56,10 @@ def main() -> int:
     # bench-shaped chunked serving (one chunk's plan is what repeats)
     idx = EQ._ensure_index(spark, sf_dir)
     qs = pd.DataFrame(EQ.HARNESS_QUERIES, columns=["query_id", "query_text"])
-    try:
-        from theoremsearch_spark.query import _serve_prep, topk_frames
+    from theoremsearch_spark.query import open_index, serve_prep, topk_frames
 
-        prep = _serve_prep(spark, idx, qs)
-        grab(
-            "topk_chunk",
-            topk_frames(
-                spark, prep["blocks"], prep["tstats"], qs.iloc[:2], k=10,
-                **prep["frame_kwargs"],
-            ),
-        )
-    except ImportError:
-        # round-start tree has no _serve_prep — a chunk was a full topk()
-        from theoremsearch_spark.query import topk
-
-        grab("topk_chunk", topk(spark, idx, qs.iloc[:2], k=10))
+    prep = serve_prep(spark, open_index(spark, idx), qs)
+    grab("topk_chunk", topk_frames(spark, prep, qs.iloc[:2], k=10))
 
     # IVF ANN serving over a small persisted index
     from theoremsearch_spark.corpus import generate_vectors
