@@ -557,6 +557,46 @@ def test_ann_index_lifecycle(spark, emb_frames, tmp_path):
     pd.testing.assert_frame_equal(before, after)
 
 
+def test_ann_delete_evaluates_prior_versions_once(spark, emb_frames, tmp_path):
+    """A delete that finds live versions runs the prior-version plan
+    (touched key buckets + visible tombstones) once: the tombstone
+    write, with the count read from the written footers. So it launches
+    no more jobs than one write of that plan; a count() followed by a
+    write runs the plan, and its tombstone broadcast, twice. Jobs are
+    counted by job-id advance."""
+    from tests.test_serve_fixed_costs import jobs_launched
+    from theoremsearch_spark.functions.similarity import (
+        _VEC_IDS_SCHEMA,
+        _live_prior_versions,
+        _read_ivf_meta,
+        add_to_ann_index,
+        build_ann_index,
+        delete_from_ann_index,
+    )
+    from theoremsearch_spark.query import local_frame
+
+    emb, _ = emb_frames
+    out = str(tmp_path / "ivf_del_jobs")
+    build_ann_index(emb, out)
+    add_to_ann_index(_upsert_batch(spark, emb), out)  # visible tombstones
+    ids = [70, 71, 0]
+    gen = int(_read_ivf_meta(out)["generations"])
+
+    def plan_once():
+        ids_df = local_frame(spark, _VEC_IDS_SCHEMA, pd.DataFrame({"vec_id": ids}))
+        _live_prior_versions(spark, out, ids_df, gen).write.parquet(
+            str(tmp_path / "plan_once")
+        )
+
+    once = jobs_launched(spark, plan_once)
+    res = {}
+    n = jobs_launched(
+        spark, lambda: res.update(delete_from_ann_index(spark, out, ids))
+    )
+    assert res == {"deleted": 3}
+    assert n <= once, f"delete launched {n} jobs; one plan evaluation is {once}"
+
+
 def test_ann_chunked_serving_identical(spark, emb_frames, tmp_path):
     """Bounded-batch ANN serving (the vector-side topk_batched):
     chunked results are identical to one big batch, and serve-prep

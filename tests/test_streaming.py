@@ -1,6 +1,6 @@
 """Structured Streaming tests: incremental index generations match a
-from-scratch batch build (rank-identical), windowed/sessionized event
-aggregations match their batch equivalents."""
+from-scratch batch build (rank-identical); upserts, deletes and
+compaction keep serving equal to a build over the live documents."""
 
 import numpy as np
 import pandas as pd
@@ -11,9 +11,7 @@ from tests.oracle import BM25Oracle
 from theoremsearch_spark.corpus import generate_documents, query_set
 from theoremsearch_spark.streaming.incremental import (
     incremental_index,
-    sessionize_events,
     topk_all_generations,
-    windowed_event_counts,
 )
 
 N_DOCS = 1200
@@ -204,149 +202,6 @@ def test_multi_generation_phrase_topk(spark, stream_index):
         hits.sort_values(["query_id", "rank"]).reset_index(drop=True),
         via_pos.sort_values(["query_id", "rank"]).reset_index(drop=True),
     )
-
-
-def test_windowed_event_counts_matches_batch(spark, tmp_path):
-    # batch-vs-stream parity: run the same aggregation on a file stream
-    # and on the static frame
-    pdf = pd.DataFrame(
-        {
-            "event_id": range(200),
-            "ts": pd.date_range("2024-01-01", periods=200, freq="13s"),
-            "user_id": [i % 7 for i in range(200)],
-            "event_type": [["click", "view", "error"][i % 3] for i in range(200)],
-            "value": [float(i % 11) for i in range(200)],
-        }
-    )
-    src = str(tmp_path / "events_in")
-    outdir = str(tmp_path / "events_out")
-    chk = str(tmp_path / "events_chk")
-    static = spark.createDataFrame(pdf)
-    static.repartition(1).write.parquet(src)
-
-    stream = (
-        spark.readStream.schema(static.schema).parquet(src)
-    )
-    q = (
-        windowed_event_counts(stream)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(outdir).toPandas()
-    want = (
-        static.groupBy(F.window("ts", "1 minute").alias("win"), "event_type")
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-        .toPandas()
-    )
-    # append mode emits only windows finalized by the watermark: the last
-    # 10 minutes of event time stay in state at availableNow termination
-    cutoff = pdf["ts"].max() - pd.Timedelta(minutes=10) - pd.Timedelta(minutes=1)
-    want = want[want["window_start"] <= cutoff]
-    got = got[got["window_start"] <= cutoff]
-    key = ["window_start", "event_type"]
-    pd.testing.assert_frame_equal(
-        got.sort_values(key).reset_index(drop=True)[want.columns],
-        want.sort_values(key).reset_index(drop=True),
-        check_dtype=False,
-    )
-    assert len(got) > 10  # the stream actually emitted finalized windows
-
-
-def test_sessionize_events(spark, tmp_path):
-    pdf = pd.DataFrame(
-        {
-            "event_id": [0, 1, 2, 3, 4],
-            "ts": pd.to_datetime(
-                ["2024-01-01 00:00", "2024-01-01 00:05", "2024-01-01 02:00",
-                 "2024-01-01 02:10", "2024-01-01 05:00"]
-            ),
-            "user_id": [1, 1, 1, 1, 1],
-            "event_type": ["click"] * 5,
-            "value": [1.0] * 5,
-        }
-    )
-    src = str(tmp_path / "sess_in")
-    outdir = str(tmp_path / "sess_out")
-    chk = str(tmp_path / "sess_chk")
-    static = spark.createDataFrame(pdf)
-    static.repartition(1).write.parquet(src)
-    stream = spark.readStream.schema(static.schema).parquet(src)
-    q = (
-        sessionize_events(stream, gap_minutes=30)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(outdir).toPandas().sort_values("session_start")
-    # 30-minute gap ⇒ sessions (00:00,00:05), (02:00,02:10), (05:00); the
-    # last one is still open w.r.t. the final watermark (max_ts-10min), so
-    # append mode emits the first two
-    assert len(got) == 2
-    assert got["n_events"].tolist() == [2, 2]
-
-
-def test_running_user_totals_stateful(spark, tmp_path):
-    """applyInPandasWithState custom state: two file drops → two
-    micro-batches; per-user running totals must be emitted per batch
-    (update mode) and the final row per user must equal the batch
-    groupBy over all data — state carried correctly across batches."""
-    from theoremsearch_spark.streaming.incremental import running_user_totals
-
-    pdf = pd.DataFrame(
-        {
-            "event_id": range(120),
-            "ts": pd.date_range("2024-01-01", periods=120, freq="7s"),
-            "user_id": [i % 5 for i in range(120)],
-            "event_type": ["click"] * 120,
-            "value": [float(i % 13) for i in range(120)],
-        }
-    )
-    src = str(tmp_path / "run_in")
-    outdir = str(tmp_path / "run_out")
-    chk = str(tmp_path / "run_chk")
-    spark.createDataFrame(pdf.iloc[:60]).repartition(1).write.parquet(f"{src}/b0")
-    spark.createDataFrame(pdf.iloc[60:]).repartition(1).write.parquet(f"{src}/b1")
-    static = spark.createDataFrame(pdf)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    q = (
-        running_user_totals(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("running_totals_mem")
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("running_totals_mem").toPandas()
-    del outdir
-    # every user appears once per batch that touched it
-    assert got.groupby("user_id")["batches_seen"].max().eq(2).all()
-    assert len(got) == 10  # 5 users × 2 batches
-    final = got[got["batches_seen"] == 2].set_index("user_id").sort_index()
-    want = pdf.groupby("user_id").agg(n_events=("value", "size"), sum_value=("value", "sum"))
-    assert final["n_events"].tolist() == want["n_events"].tolist()
-    np.testing.assert_allclose(final["sum_value"], want["sum_value"])
-
 
 def test_multi_generation_salted_routing(spark, tmp_path):
     """Saltedness is per-generation: gen0 salts the stopword, gen1 (high

@@ -641,6 +641,28 @@ def _live_prior_versions(spark, out_dir: str, ids_df: DataFrame, n_gens: int) ->
     )
 
 
+def _write_tombstones(spark, out_dir: str, ids_df: DataFrame, gen: int) -> int:
+    """Tombstone the live prior versions of `ids_df` as `tombstones/gen=G`
+    rows (vec_id, upto_gen) and return how many were written. The
+    prior-version plan runs ONCE — the write — and the count comes from
+    the written files' parquet footers, so the touched key buckets and
+    the tombstones are read once per call. An empty result leaves no
+    gen=G dir, so a commit without tombstones never publishes a torn
+    attempt's rows."""
+    import shutil
+
+    from theoremsearch_spark.positions import _footer_row_count
+
+    path = f"{out_dir}/tombstones/gen={gen}"
+    _live_prior_versions(spark, out_dir, ids_df, gen).select(
+        "vec_id", F.col("gen").alias("upto_gen")
+    ).write.mode("overwrite").parquet(path)
+    n = _footer_row_count(path) or 0
+    if not n:
+        shutil.rmtree(path, ignore_errors=True)
+    return n
+
+
 def add_to_ann_index(
     emb_new: DataFrame, out_dir: str, upsert: bool = True,
 ) -> dict:
@@ -719,15 +741,7 @@ def add_to_ann_index(
         def find_stale():
             # prior-version lookup reads only COMMITTED generations'
             # key buckets — independent of this gen's in-flight writes
-            stale = _live_prior_versions(spark, out_dir, ids_new, gen).select(
-                "vec_id", F.col("gen").alias("upto_gen")
-            )
-            n = stale.count()
-            if n:
-                stale.write.mode("overwrite").parquet(
-                    f"{out_dir}/tombstones/gen={gen}"
-                )
-            replaced["n"] = n
+            replaced["n"] = _write_tombstones(spark, out_dir, ids_new, gen)
 
         # the three pre-commit steps touch disjoint outputs and only
         # committed inputs — overlapping their jobs (guide §2.6) hides
@@ -756,20 +770,13 @@ def delete_from_ann_index(spark, out_dir: str, vec_ids) -> dict:
     nothing); a later `add` of a deleted id writes a higher gen that
     outlives the tombstone (delete-then-reinsert, reference analog:
     /root/reference/ec2/parse_arxiv_papers/__main__.py:269-283)."""
-    import shutil
-
     ids_df = local_frame(
         spark, _VEC_IDS_SCHEMA, pd.DataFrame({"vec_id": [int(v) for v in vec_ids]})
     )
     meta = _read_ivf_meta(out_dir)
     gen = int(meta["generations"])
-    stale = _live_prior_versions(spark, out_dir, ids_df, gen).select(
-        "vec_id", F.col("gen").alias("upto_gen")
-    )
-    n_del = stale.count()
+    n_del = _write_tombstones(spark, out_dir, ids_df, gen)
     if n_del:
-        shutil.rmtree(f"{out_dir}/tombstones/gen={gen}", ignore_errors=True)
-        stale.write.mode("overwrite").parquet(f"{out_dir}/tombstones/gen={gen}")
         meta["generations"] = gen + 1
         meta["n_vectors"] = int(meta["n_vectors"]) - int(n_del)
         _write_ivf_meta(out_dir, meta)

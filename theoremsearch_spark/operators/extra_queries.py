@@ -260,9 +260,9 @@ def q_type_whitelist(spark, sf_dir):  # P10: first-token type whitelist
 
 
 def q_window_tumbling_agg(spark, sf_dir):  # streaming primitive, batch-checked
-    """F.window tumbling 1-hour buckets — the exact groupBy the
-    streaming path uses (streaming/incremental.py windowed_event_counts)
-    run in batch mode so DuckDB can verify the bucketing + aggregation."""
+    """F.window tumbling 1-hour buckets over `events` — the groupBy a
+    watermarked streaming rollup would run, in batch mode so DuckDB can
+    verify the bucketing + aggregation."""
     e = t(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")

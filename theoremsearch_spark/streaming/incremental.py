@@ -12,14 +12,9 @@ true streaming analog:
     DELETE+upsert commit (/root/reference/ec2/parse_arxiv_papers/
     __main__.py:262-285). Readers merge generations at query time the
     same way salted segments merge.
-  - `windowed_event_counts`: watermarked tumbling-window aggregation —
-    the standard late-data-tolerant streaming rollup over the `events`
-    shape (event_id, ts, user_id, event_type, value).
 
 Scale notes: foreachBatch reuses the exact batch operators, so the
-micro-batch path inherits the same shuffle/skew handling; the window
-agg keeps state bounded by the watermark (10 min here), which is what
-makes it viable on an unbounded 100 TB/day stream.
+micro-batch path inherits the same shuffle/skew handling.
 """
 
 from __future__ import annotations
@@ -836,79 +831,4 @@ def phrase_topk_all_generations(
     return serve_phrase(
         spark, open_root(spark, out_dir), queries, k, filters=filters,
         text_col=text_col, snippet_pad=snippet_pad, use_positions=use_positions,
-    )
-
-
-def windowed_event_counts(events_stream: DataFrame) -> DataFrame:
-    """Watermarked 1-minute tumbling windows per event_type: count +
-    sum(value). Late rows beyond 10 minutes are dropped (bounded state)."""
-    return (
-        events_stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 minute").alias("win"), "event_type")
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def sessionize_events(events_stream: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Session windows per user: a session closes after `gap_minutes` of
-    inactivity (F.session_window — stateful, watermark-bounded)."""
-    return (
-        events_stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.session_window("ts", f"{gap_minutes} minutes").alias("sess"), "user_id")
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
-        .select(
-            F.col("sess.start").alias("session_start"),
-            F.col("sess.end").alias("session_end"),
-            "user_id",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-RUNNING_TOTALS_SCHEMA = (
-    "user_id long, n_events long, sum_value double, batches_seen int"
-)
-_RUNNING_STATE_SCHEMA = "n long, s double, b int"
-
-
-def running_user_totals(events_stream: DataFrame) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: per-user
-    RUNNING totals emitted after every micro-batch — the shape built-in
-    aggregations can't express in update-per-batch form with arbitrary
-    per-key state (here: count, sum, and how many batches touched the
-    key). State lives in the state store, checkpointed with the query;
-    at 100 TB/day the state is one tiny tuple per user, not per event.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key, pdfs, state: GroupState):
-        n, s, b = state.get if state.exists else (0, 0.0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            s += float(pdf["value"].sum())
-        b += 1
-        state.update((n, s, b))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "sum_value": [s],
-                "batches_seen": [b],
-            }
-        )
-
-    return events_stream.groupBy("user_id").applyInPandasWithState(
-        update,
-        RUNNING_TOTALS_SCHEMA,
-        _RUNNING_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
     )
