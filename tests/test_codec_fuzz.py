@@ -1,31 +1,67 @@
-"""Never-raise fuzz locks for the stdlib media decoders: random bytes,
-truncations and byte mutations of VALID payloads must yield None /
-null rows — never an exception. One corrupt blob must never kill a
-mapInPandas stage; these properties are the pipeline's crash-safety
-floor."""
+"""Never-raise fuzz locks for every stdlib codec: random bytes,
+truncations and byte mutations of VALID streams must yield None /
+empty / valid output — never an exception. On a 100 TB crawl, one
+corrupt blob must never kill a stage; these properties are the
+mapInPandas pipeline's crash-safety floor."""
 
 import numpy as np
 from hypothesis import example, given, settings, strategies as st
 
 from theoremsearch_spark.functions.multimodal import (
+    decode_bmp_pixels,
+    decode_gif_frames,
     decode_image,
+    decode_png_pixels,
     decode_wav_pcm16,
+    demux_avi_mjpeg_frames,
+    encode_bmp,
+    encode_png,
     encode_wav_pcm16,
     make_synthetic_image,
+    parse_avi_header,
+    parse_jpeg_dims,
+    parse_png_header,
     parse_wav_header,
+    parse_webp_dims,
 )
+from theoremsearch_spark.functions.webpcodec import decode_webp_lossless
+from tests.test_multimodal import _tiny_jpeg
+
+
+def _img(seed=0):
+    rng = np.random.default_rng(seed)
+    return rng.integers(0, 256, (12, 10, 3), dtype=np.uint8)
+
 
 _VALID = {
+    "png": encode_png(_img(1)),
+    "jpeg": _tiny_jpeg(10, 12),
     "synthetic": make_synthetic_image(1, 4, 4),
+    "bmp": encode_bmp(_img(3)),
     "wav": encode_wav_pcm16(
         (np.sin(np.arange(400) / 7) * 8000).astype(np.int16), 8000
     ),
 }
+try:
+    from tests.test_webp import _rand_px, encode_vp8l
+
+    _VALID["webp"] = encode_vp8l(_rand_px(6, 8, seed=4), 8, 6)
+except Exception:  # pragma: no cover — webp test helpers unavailable
+    pass
 
 
 def _never_raises(raw: bytes) -> None:
+    parse_png_header(raw)
+    decode_png_pixels(raw)
+    parse_jpeg_dims(raw)
+    decode_bmp_pixels(raw)
+    parse_webp_dims(raw)
+    decode_webp_lossless(raw)
     parse_wav_header(raw)
     decode_wav_pcm16(raw)
+    parse_avi_header(raw)
+    list(decode_gif_frames(raw, max_frames=4))
+    list(demux_avi_mjpeg_frames(raw, max_frames=4))
     decode_image(raw)
 
 
@@ -49,4 +85,3 @@ def test_mutated_valid_streams_never_raise(fmt, mut_pos, mut_val, trunc):
     raw[mut_pos % len(raw)] = mut_val
     _never_raises(bytes(raw[: max(1, trunc % (len(raw) + 1))]))
     _never_raises(bytes(raw))
-

@@ -1,8 +1,8 @@
 """VP8L (lossless WEBP) decoder — pure numpy + stdlib.
 
-Closes the "WEBP pixels" gap the way `jpegcodec.py` closed JPEG: the
-container ships no PIL, so the format is implemented from the public
-bitstream spec (https://developers.google.com/speed/webp/docs/
+Closes the "WEBP pixels" gap: the container ships no PIL, so the
+format is implemented from the public bitstream spec
+(https://developers.google.com/speed/webp/docs/
 webp_lossless_bitstream_specification):
 
   decode  full VP8L: canonical prefix codes (simple 1-2-symbol and
@@ -65,8 +65,8 @@ class _Bits:
 
 class _Prefix:
     """Canonical prefix decoder from code lengths — decode() walks a
-    {(len, code): sym} map exactly like jpegcodec's Huffman reader but
-    LSB-first (VP8L reverses the bits of each code)."""
+    {(len, code): sym} map, LSB-first (VP8L reverses the bits of each
+    code)."""
 
     __slots__ = ("table", "max_len", "single")
 
