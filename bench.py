@@ -209,10 +209,10 @@ def main() -> int:
                     "extracted_text"
                 ),
             ).withColumn("doc_len", F.size(F.split("extracted_text", " ")))
-            newdoc.write.mode("overwrite").parquet(f"{root}/gen_1/docs_offset")
+            newdoc.write.mode("overwrite").parquet(f"{root}/gen_1/docs")
             n1 = newdoc.count()
             build_index(
-                spark.read.parquet(f"{root}/gen_1/docs_offset"),
+                spark.read.parquet(f"{root}/gen_1/docs"),
                 f"{root}/gen_1/index", n_buckets=cpus, resume=False,
                 salt_threshold=max(1000, n_docs // 3), n_segments=8,
             )

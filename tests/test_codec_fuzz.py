@@ -62,7 +62,10 @@ def _never_raises(raw: bytes) -> None:
     parse_avi_header(raw)
     list(decode_gif_frames(raw, max_frames=4))
     list(demux_avi_mjpeg_frames(raw, max_frames=4))
-    decode_image(raw)
+    fmt, w, h, px, _ = decode_image(raw)
+    if fmt == "synthetic" and px is not None:
+        # pixels, when returned, are the whole image the header declares
+        assert px.size == w * h, (w, h, px.size)
 
 
 @settings(max_examples=60, deadline=None)
@@ -80,6 +83,8 @@ def test_random_bytes_never_raise(raw):
 )
 # a synthetic payload cut inside its 12-byte header
 @example("synthetic", 0, ord("S"), 8)
+# a 4x4 synthetic payload cut inside its 16-byte pixel body
+@example("synthetic", 0, ord("S"), 20)
 def test_mutated_valid_streams_never_raise(fmt, mut_pos, mut_val, trunc):
     raw = bytearray(_VALID[fmt])
     raw[mut_pos % len(raw)] = mut_val

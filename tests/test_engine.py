@@ -33,34 +33,11 @@ def test_doc_ids_dense_and_deterministic(docs_pdf, spark, corpus_df, tmp_path):
 
 
 def test_doc_stats_match_bruteforce(spark, index_dir, oracle):
-    row = spark.read.parquet(f"{index_dir}/index/doc_stats").collect()[0]
+    from theoremsearch_spark.build import load_index_meta
+
+    row = load_index_meta(f"{index_dir}/index")
     assert row["n_docs"] == oracle.n_docs
     assert row["avgdl"] == pytest.approx(oracle.avgdl, rel=1e-12)
-
-
-def test_doc_stats_read_skips_empty_part_files(spark, index_dir, tmp_path):
-    """A Spark-written doc_stats dir can hold an empty part-00000 ahead
-    of the file with the row: the driver-side read takes the first file
-    that holds a row, and returns None (caller falls back to Spark)
-    when no file does."""
-    import shutil
-
-    import pyarrow.parquet as pq
-
-    from theoremsearch_spark.query import load_index_meta
-    from theoremsearch_spark.stats import read_doc_stats_row
-
-    want = load_index_meta(spark, f"{index_dir}/index")
-    src = f"{index_dir}/index/doc_stats/part-00000.parquet"
-    stats = tmp_path / "idx" / "doc_stats"
-    stats.mkdir(parents=True)
-    pq.write_table(pq.read_schema(src).empty_table(), stats / "part-00000.parquet")
-    assert read_doc_stats_row(str(stats)) is None
-    shutil.copy(src, stats / "part-00001.parquet")
-    assert read_doc_stats_row(str(stats)) == read_doc_stats_row(
-        f"{index_dir}/index/doc_stats"
-    )
-    assert load_index_meta(spark, str(tmp_path / "idx")) == want
 
 
 def test_term_stats_match_bruteforce(spark, index_dir, oracle):
@@ -76,7 +53,9 @@ def test_postings_roundtrip_and_blockmax(spark, index_dir, oracle):
     blocks = spark.read.parquet(f"{index_dir}/index/postings").toPandas()
     tdict = spark.read.parquet(f"{index_dir}/index/term_stats").toPandas()
     term_to_id = dict(zip(tdict["term"], tdict["term_id"]))
-    meta = spark.read.parquet(f"{index_dir}/index/doc_stats").collect()[0]
+    from theoremsearch_spark.build import load_index_meta
+
+    meta = load_index_meta(f"{index_dir}/index")
     k1, b, avgdl = meta["k1"], meta["b"], meta["avgdl"]
     n_segments_seen = blocks["segment"].max() + 1
     assert n_segments_seen > 1, "salting never triggered — skew path untested"

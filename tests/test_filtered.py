@@ -191,7 +191,7 @@ def test_merge_shuffle_is_k_rows_per_segment(spark, filter_index):
     from theoremsearch_spark.query import _score_fan, load_index_meta
 
     idx = f"{filter_index}/index"
-    meta = load_index_meta(spark, idx)
+    meta = load_index_meta(idx)
     qs = pd.DataFrame({"query_id": [0], "query_text": ["the w00500"]})
     tstats = serve_prep(spark, open_index(spark, idx), qs).tstats
     qterm = _build_qterms(qs, tstats, [], NSEG)

@@ -99,10 +99,9 @@ def test_positional_reads_only_phrase_buckets(spark, index_dir, oracle, position
     from theoremsearch_spark.extract import tokenize
 
     toks = sorted({t for q in qs["query_text"] for t in tokenize(q)})
-    from theoremsearch_spark.positions import PB_RULE, _pb_rule
+    from theoremsearch_spark.positions import _pb_buckets
 
-    rule, nb = _pb_rule(positions_dir)
-    assert rule == PB_RULE  # a fresh sidecar records the murmur3 rule
+    nb = _pb_buckets(positions_dir)
     allowed = {
         f"pb={int(r['mm']) % nb}"
         for r in spark.createDataFrame([(t,) for t in toks], "t string")

@@ -28,10 +28,6 @@ EXEMPT = {
     # windows instead, so only tests/test_units.py runs it. Open item:
     # serve it from an entry or delete it with its tests.
     f"{PKG}.units": "test-only, open item",
-    # wiki-template expansion: no entry strips templates from page
-    # text, so only tests/test_templates.py runs it. Open item: delete
-    # it with its tests (ROADMAP direction 1).
-    f"{PKG}.functions.templates": "test-only, open item",
 }
 
 

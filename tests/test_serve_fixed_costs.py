@@ -213,8 +213,8 @@ def _jobs_in_group(spark, tag: str, fn) -> int:
 
 def test_topk_prep_is_one_job(spark, single):
     """topk() prep is eager and its scoring lazy: the returned frame
-    has cost exactly the term-dictionary scan — doc_stats is a pyarrow
-    read and neither table runs a schema-inference job."""
+    has cost exactly the term-dictionary scan — index_meta.json is a
+    driver-side read and neither table runs a schema-inference job."""
     qs = _bm25_queries(4)
     topk(spark, single["idx"], qs, K)  # warm
     n = _jobs_in_group(spark, "topk_prep", lambda: topk(spark, single["idx"], qs, K))
@@ -253,10 +253,10 @@ def test_generation_prep_jobs_bounded(spark, gens_root):
 
 def test_doc_lookup_after_localizing_adds_no_job(spark, single):
     """Localizing a top-k result and looking up its docs costs what
-    collecting the result costs, plus at most the one job the docs read
-    spends inferring its schema (docs tables have no declared schema
-    yet): the lookup takes its ids from the collected rows instead of
-    re-collecting them from the local relation (2 more jobs)."""
+    collecting the result costs: the lookup takes its ids from the
+    collected rows instead of re-collecting them from the local
+    relation (2 more jobs), and reads the docs with the schema their
+    `_id_ranges.json` records (no footer-inference job)."""
     from theoremsearch_spark.query import _localized_docs, open_index, serve_topk
 
     view = open_index(spark, single["idx"], single["docs"])
@@ -266,7 +266,26 @@ def test_doc_lookup_after_localizing_adds_no_job(spark, single):
     lookup = jobs_launched(
         spark, lambda: _localized_docs(spark, view, serve_topk(spark, view, qs, K), ["url"])
     )
-    assert lookup - collect <= 1, (lookup, collect)
+    assert lookup - collect == 0, (lookup, collect)
+
+
+def test_ann_delete_reads_declared_schemas(spark, ann, tmp_path):
+    """An ANN delete reads the key index and the tombstones with
+    declared schemas: deleting 3 live ids runs no footer-inference job
+    (9 jobs with the two inference jobs, at most 7 without)."""
+    import shutil
+
+    from theoremsearch_spark.functions.similarity import delete_from_ann_index
+
+    out = str(tmp_path / "ann")
+    shutil.copytree(ann["out"], out)
+    assert delete_from_ann_index(spark, out, [3, 17])["deleted"] == 0  # warm
+    res = {}
+    n = jobs_launched(
+        spark, lambda: res.update(delete_from_ann_index(spark, out, [5, 6, 7]))
+    )
+    assert res["deleted"] == 3
+    assert n <= 7, f"a 3-id ANN delete launched {n} Spark jobs"
 
 
 def _live_oracle(spark, root):

@@ -44,11 +44,7 @@ def incremental_index_wrapper(spark, inp, out, chk):
             return
         base = sum(g["n_docs"] for g in gens)
         gen_dir = f"{out}/gen_{batch_id}"
-        docs = prepare_docs(batch_df, gen_dir)
-        if base:
-            docs = docs.withColumn("doc_id", F.col("doc_id") + F.lit(base))
-            docs.write.mode("overwrite").parquet(f"{gen_dir}/docs_offset")
-            docs = spark.read.parquet(f"{gen_dir}/docs_offset")
+        docs = prepare_docs(batch_df, gen_dir, id_base=base)
         n = docs.count()
         build_index(docs, f"{gen_dir}/index", resume=False,
                     salt_threshold=400, n_segments=4, n_buckets=8)
@@ -81,7 +77,7 @@ def test_incremental_generations_match_batch_oracle(spark, stream_index):
     # id space: union docs tables, dense 0..N-1 after offsets
     docs_parts = []
     for g in gens.itertuples():
-        p = f"{out}/gen_{g.gen}/docs" if g.base == 0 else f"{out}/gen_{g.gen}/docs_offset"
+        p = f"{out}/gen_{g.gen}/docs"
         docs_parts.append(spark.read.parquet(p).select("doc_id", "url").toPandas())
     all_docs = pd.concat(docs_parts).sort_values("doc_id").reset_index(drop=True)
     assert (all_docs["doc_id"].to_numpy() == np.arange(N_DOCS)).all()
@@ -112,7 +108,7 @@ def test_multi_generation_and_not_modes(spark, stream_index):
     gens = pd.DataFrame(_generations(spark, out)).sort_values("gen")
     docs_parts = []
     for g in gens.itertuples():
-        p = f"{out}/gen_{g.gen}/docs" if g.base == 0 else f"{out}/gen_{g.gen}/docs_offset"
+        p = f"{out}/gen_{g.gen}/docs"
         docs_parts.append(spark.read.parquet(p).select("doc_id", "url").toPandas())
     all_docs = pd.concat(docs_parts).sort_values("doc_id").reset_index(drop=True)
     truth = all_docs.merge(full[["url", "text"]], on="url", validate="one_to_one")
@@ -153,7 +149,7 @@ def test_multi_generation_phrase_topk(spark, stream_index):
     gens = pd.DataFrame(_generations(spark, out)).sort_values("gen")
     docs_parts = []
     for g in gens.itertuples():
-        p = f"{out}/gen_{g.gen}/docs" if g.base == 0 else f"{out}/gen_{g.gen}/docs_offset"
+        p = f"{out}/gen_{g.gen}/docs"
         docs_parts.append(spark.read.parquet(p).select("doc_id", "url").toPandas())
     all_docs = pd.concat(docs_parts).sort_values("doc_id").reset_index(drop=True)
     truth = all_docs.merge(full[["url", "text"]], on="url", validate="one_to_one")
@@ -186,14 +182,14 @@ def test_multi_generation_phrase_topk(spark, stream_index):
     from theoremsearch_spark.positions import build_positions
 
     g0 = gens.iloc[0]
-    d0 = f"{out}/gen_{g0.gen}/docs" if g0.base == 0 else f"{out}/gen_{g0.gen}/docs_offset"
+    d0 = f"{out}/gen_{g0.gen}/docs"
     build_positions(spark.read.parquet(d0), f"{out}/gen_{g0.gen}/index")
     with _pytest.raises(ValueError, match="positions sidecar missing"):
         phrase_topk_all_generations(
             spark, out, qs[["query_id", "query_text"]], k=10, use_positions=True
         )
     for g in gens.iloc[1:].itertuples():
-        p = f"{out}/gen_{g.gen}/docs" if g.base == 0 else f"{out}/gen_{g.gen}/docs_offset"
+        p = f"{out}/gen_{g.gen}/docs"
         build_positions(spark.read.parquet(p), f"{out}/gen_{g.gen}/index")
     via_pos = phrase_topk_all_generations(
         spark, out, qs[["query_id", "query_text"]], k=10  # auto-detects
@@ -220,12 +216,8 @@ def test_multi_generation_salted_routing(spark, tmp_path):
     for gen, (lo, hi, thresh) in enumerate([(0, 500, 100), (500, 1000, 10**9)]):
         gen_dir = f"{out}/gen_{gen}"
         docs = prepare_docs(
-            spark.createDataFrame(full.iloc[lo:hi]), gen_dir, id_base=0
+            spark.createDataFrame(full.iloc[lo:hi]), gen_dir, id_base=lo
         )
-        if lo:
-            docs = docs.withColumn("doc_id", F.col("doc_id") + F.lit(lo))
-            docs.write.mode("overwrite").parquet(f"{gen_dir}/docs_offset")
-            docs = spark.read.parquet(f"{gen_dir}/docs_offset")
         build_index(
             docs, f"{gen_dir}/index", resume=False,
             salt_threshold=thresh, n_segments=segs, n_buckets=4,
@@ -254,7 +246,7 @@ def test_multi_generation_salted_routing(spark, tmp_path):
     truth = full[["url", "text"]].copy()
     docs_all = []
     for gen in (0, 1):
-        p = f"{out}/gen_{gen}/docs" if gen == 0 else f"{out}/gen_{gen}/docs_offset"
+        p = f"{out}/gen_{gen}/docs"
         docs_all.append(spark.read.parquet(p).select("doc_id", "url").toPandas())
     ids = pd.concat(docs_all).merge(truth, on="url", validate="one_to_one")
     oracle = BM25Oracle(ids)
@@ -300,14 +292,11 @@ def upsert_index(spark, tmp_path_factory):
 
 def _latest_version_oracle(spark, out):
     """(oracle over latest-version corpus, dense→real id map)."""
-    from theoremsearch_spark.streaming.incremental import (
-        _docs_path,
-        _generations,
-    )
+    from theoremsearch_spark.streaming.incremental import _generations
 
     gens = sorted(_generations(spark, out), key=lambda g: g["gen"])
     parts = [
-        spark.read.parquet(_docs_path(out, g["gen"]))
+        spark.read.parquet(f"{out}/gen_{g['gen']}/docs")
         .select("doc_id", "url", "extracted_text")
         .toPandas()
         for g in gens
@@ -348,10 +337,19 @@ def test_upsert_tombstones_serve_latest_versions(spark, upsert_index):
     """Serving across generations with tombstones must be score- and
     rank-identical to a from-scratch build over the LATEST version of
     every url: stale versions excluded, N/avgdl/df corrected exactly.
-    The marker query can only match re-ingested content."""
+    The marker query can only match re-ingested content. Each
+    generation stores its docs table once, in `gen_X/docs`, with ids
+    starting at the generation's base."""
     import os
 
+    from theoremsearch_spark.streaming.incremental import _generations
+
     out = upsert_index["out"]
+    for g in _generations(spark, out):
+        gen_dir = f"{out}/gen_{g['gen']}"
+        assert set(os.listdir(gen_dir)) <= {"docs", "index", "keyindex", "tombstones"}
+        ids = spark.read.parquet(f"{gen_dir}/docs").select("doc_id").toPandas()["doc_id"]
+        assert ids.min() == g["base"] and len(ids) == g["n_docs"], (g, ids.min())
     assert os.path.isdir(f"{out}/gen_1/tombstones")
     dead = spark.read.parquet(f"{out}/gen_1/tombstones")
     assert dead.count() == 100
@@ -1051,7 +1049,7 @@ def test_streaming_after_compaction_never_reuses_live_ids(spark, tmp_path):
     new_gen = [g for g in _generations(spark, out) if g["gen"] >= 0]
     assert len(new_gen) == 1 and new_gen[0]["base"] == 550  # not 500
     new_ids = spark.read.parquet(
-        f"{out}/gen_{new_gen[0]['gen']}/docs_offset"
+        f"{out}/gen_{new_gen[0]['gen']}/docs"
     ).select("doc_id").toPandas()["doc_id"]
     assert new_ids.min() == 550 and new_ids.is_unique
     # end-to-end: serving still matches the latest-version oracle

@@ -41,7 +41,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from theoremsearch_spark import codec
+from theoremsearch_spark import codec, sidecar
 from theoremsearch_spark.extract import term_tfs_udf
 
 DEFAULT_K1 = 1.2
@@ -332,68 +332,16 @@ def _block_builder(avgdl: float, k1: float, b: float, block_size: int):
     return build
 
 
-def _write_doc_stats(
-    path: str, n_docs: int, avgdl: float, k1: float, b: float,
-    block_size: int, n_segments: int, salt_threshold: int,
-) -> None:
-    """doc_stats sidecar (one row) via a direct pyarrow write — schema
-    identical to the historical Spark write (long/double/int32), so
-    multi-generation mergeSchema reads mix old and new files freely."""
-    import os
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    shutil.rmtree(path, ignore_errors=True)  # overwrite semantics
-    table = pa.table(
-        {
-            "n_docs": pa.array([int(n_docs)], pa.int64()),
-            "avgdl": pa.array([float(avgdl)], pa.float64()),
-            "k1": pa.array([float(k1)], pa.float64()),
-            "b": pa.array([float(b)], pa.float64()),
-            "block_size": pa.array([int(block_size)], pa.int32()),
-            "n_segments": pa.array([int(n_segments)], pa.int32()),
-            "salt_threshold": pa.array([int(salt_threshold)], pa.int32()),
-        }
-    )
-    os.makedirs(path, exist_ok=True)
-    pq.write_table(table, f"{path}/part-00000.parquet")
+# the index's statistics and build parameters, one versioned record
+INDEX_META = "index_meta.json"
 
 
-# Bucket assignment rule, recorded per index: bucket MUST equal the
-# shuffle's own partition id (see build_index) — resuming a partial
-# build under a different rule would re-route rows across buckets and
-# silently duplicate postings, so the rule is checked before any
-# bucket is skipped.
-BUCKET_RULE = "murmur3-termseg-v2"
-
-
-def _check_bucket_rule(out_dir: str, done: set[int]) -> None:
-    import json
-    import os
-
-    p = f"{out_dir}/bucket_rule.json"
-    if os.path.isfile(p):
-        with open(p) as fh:
-            rule = json.load(fh).get("rule")
-        if rule != BUCKET_RULE and done:
-            raise RuntimeError(
-                f"{out_dir}: partial build used bucket rule {rule!r} but "
-                f"this version assigns {BUCKET_RULE!r} — resuming would "
-                "re-route rows across buckets and duplicate postings; "
-                "rebuild with resume=False"
-            )
-    elif done:
-        raise RuntimeError(
-            f"{out_dir}: partial build predates the bucket-rule record — "
-            "the bucket mapping changed; rebuild with resume=False"
-        )
-    os.makedirs(out_dir, exist_ok=True)
-    tmp = f"{p}.tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"rule": BUCKET_RULE}, fh)
-    os.rename(tmp, p)
+def load_index_meta(index_dir: str) -> dict:
+    """The index's `index_meta.json` record (n_docs, avgdl, k1, b,
+    block_size, n_segments, salt_threshold) — a driver-side read, no
+    Spark job. Raises when the record is absent or carries another
+    format version: the index is then not one this engine built."""
+    return sidecar.require_json(f"{index_dir}/{INDEX_META}")
 
 
 def completed_buckets(spark: SparkSession, manifest_dir: str) -> set[int]:
@@ -421,7 +369,7 @@ def build_index(
 
     Layout:  out_dir/postings/bucket=<n>/…parquet
              out_dir/term_stats/…parquet
-             out_dir/doc_stats/…parquet
+             out_dir/index_meta.json     (sidecar.py record)
              out_dir/manifest/…parquet   (append-only, one row per bucket)
 
     ``fail_after_buckets`` deliberately stops after N buckets — the
@@ -468,13 +416,13 @@ def build_index(
                 pass
             raise
         n_docs, avgdl = _doc_stats_fut.result()
-        # ONE metadata row — written driver-side with pyarrow instead of
-        # a Spark job (a createDataFrame+write job costs ~0.4 s of pure
-        # scheduling for 7 scalar values); readers still spark.read it
-        _write_doc_stats(
-            f"{out_dir}/doc_stats", n_docs, avgdl, k1, b,
-            block_size, n_segments, salt_threshold,
-        )
+        # written driver-side: a createDataFrame+write job costs ~0.4 s
+        # of pure scheduling for 7 scalar values
+        sidecar.write_json(f"{out_dir}/{INDEX_META}", {
+            "n_docs": int(n_docs), "avgdl": float(avgdl), "k1": float(k1),
+            "b": float(b), "block_size": int(block_size),
+            "n_segments": int(n_segments), "salt_threshold": int(salt_threshold),
+        })
 
         def _collision_count() -> int:
             # 64-bit term_id collision would silently merge two posting
@@ -495,18 +443,18 @@ def build_index(
         collision_check = _pool.submit(_collision_count)
         _pool.shutdown(wait=False)
     else:
-        meta = stats_mod.read_doc_stats_row(f"{out_dir}/doc_stats")
-        if meta is None:
-            meta = spark.read.parquet(f"{out_dir}/doc_stats").collect()[0]
-        avgdl = float(meta["avgdl"])
+        # resuming over completed buckets is sound only under the format
+        # version (bucket rule included) that wrote them: re-routed rows
+        # would duplicate postings, so another version is refused here
+        avgdl = float(load_index_meta(out_dir)["avgdl"])
 
     tstats = spark.read.schema(TERM_STATS_SCHEMA).parquet(f"{out_dir}/term_stats")
 
-    _check_bucket_rule(out_dir, done)
     salted = salt_segments(rows, tstats.select("term_id", "df"), salt_threshold, n_segments)
     # bucket = pmod(murmur3(term_id, segment), n_buckets) — EXACTLY the
     # partition id Spark's HashPartitioning assigns for a repartition on
-    # (term_id, segment). Shuffling on the high-cardinality pair gives a
+    # (term_id, segment); a change to this rule is a format version bump
+    # (see sidecar.py). Shuffling on the high-cardinality pair gives a
     # perfectly even n_buckets-way split with partition == bucket 1:1;
     # the previous bucket-keyed shuffle hashed 32 distinct bucket values
     # into 32 partitions — balls-into-bins left ~1/e of reducers empty

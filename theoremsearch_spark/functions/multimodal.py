@@ -327,13 +327,14 @@ def decode_image(
     return metadata only — their pixel decode is the remaining
     external-codec dependency.
     WEBP images inside a RIFF container report dimensions from the
-    VP8/VP8L/VP8X headers. A payload too short for its header is a
-    null-dims row; never raises."""
+    VP8/VP8L/VP8X headers. A payload too short for its header (or, for
+    the synthetic format, its pixel body) is a null-dims row; never
+    raises."""
     fmt = sniff_format(raw)
     if fmt == "synthetic":
-        if len(raw) < 12:
+        w, h = struct.unpack("<II", raw[4:12]) if len(raw) >= 12 else (0, 0)
+        if len(raw) < 12 + w * h:  # header or pixel body cut short
             return fmt, None, None, None, 0
-        w, h = struct.unpack("<II", raw[4:12])
         return fmt, int(w), int(h), np.frombuffer(raw[12 : 12 + w * h], dtype=np.uint8), 1
     if fmt == "png":
         hdr = parse_png_header(raw)

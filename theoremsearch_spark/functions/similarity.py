@@ -23,6 +23,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
+from theoremsearch_spark import sidecar
 from theoremsearch_spark.functions.widen import widen_small_input as _widen
 from theoremsearch_spark.operators.relational import t
 from theoremsearch_spark.query import collect_chunks, local_frame
@@ -409,31 +410,42 @@ def _vec_bucket(col):
     return F.pmod(F.xxhash64(F.col(col)), F.lit(ANN_KEY_BUCKETS)).cast("int")
 
 
-def _read_ivf_meta(out_dir: str) -> dict:
-    import json
+# keyindex/gen=G/vb=B and tombstones/gen=G rows, partition columns
+# included; readers declare them, so no footer-inference job runs
+_KEYINDEX_SCHEMA = T.StructType([
+    T.StructField("vec_id", T.LongType()),
+    T.StructField("vb", T.IntegerType()),
+    T.StructField("gen", T.IntegerType()),
+])
+_TOMBSTONE_SCHEMA = T.StructType([
+    T.StructField("vec_id", T.LongType()),
+    T.StructField("upto_gen", T.IntegerType()),
+    T.StructField("gen", T.IntegerType()),
+])
 
-    with open(f"{out_dir}/ivf_meta.json") as fh:
-        meta = json.load(fh)
-    if meta.get("layout") != ANN_LAYOUT:
-        raise ValueError(
-            f"{out_dir}: index layout {meta.get('layout')!r} != "
-            f"{ANN_LAYOUT} — built by an older version; rebuild with "
-            "build_ann_index (mixed layouts would mis-serve silently)"
-        )
-    return meta
+
+def _write_keyindex(frame: DataFrame, path: str) -> None:
+    """One generation's key index: the frame's vec_ids, stored as long
+    (the type readers declare), in `vb=` bucket dirs."""
+    (
+        frame.select(F.col("vec_id").cast("long").alias("vec_id"))
+        .withColumn("vb", _vec_bucket("vec_id"))
+        .repartition("vb")
+        .write.mode("overwrite")
+        .partitionBy("vb")
+        .parquet(path)
+    )
+
+
+def _read_ivf_meta(out_dir: str) -> dict:
+    """The index's committed `ivf_meta.json` record; an index without
+    one, or of another format version, is refused (mixed layouts would
+    mis-serve silently)."""
+    return sidecar.require_json(f"{out_dir}/ivf_meta.json")
 
 
 def _write_ivf_meta(out_dir: str, meta: dict) -> None:
-    import json
-    import os
-
-    tmp = f"{out_dir}/.ivf_meta.json.tmp"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.rename(tmp, f"{out_dir}/ivf_meta.json")
-
-
-ANN_LAYOUT = 2  # per-generation directory layout (gen=G subdirs)
+    sidecar.write_json(f"{out_dir}/ivf_meta.json", meta)
 
 
 def build_ann_index(
@@ -516,14 +528,7 @@ def build_ann_index(
         )
 
     def write_keyindex():
-        (
-            emb.select("vec_id")
-            .withColumn("vb", _vec_bucket("vec_id"))
-            .repartition("vb")
-            .write.mode("overwrite")
-            .partitionBy("vb")
-            .parquet(f"{out_dir}/keyindex/gen=0")
-        )
+        _write_keyindex(emb, f"{out_dir}/keyindex/gen=0")
 
     # the two writes are independent jobs over the same input — run
     # them concurrently so the key-index job back-fills executor slots
@@ -531,7 +536,6 @@ def build_ann_index(
     # irrelevant pre-meta (nothing is visible until ivf_meta lands)
     _run_concurrently(write_cells, write_keyindex)
     meta = {
-        "layout": ANN_LAYOUT,
         "n_vectors": int(n),
         "n_centroids": int(C.shape[0]),
         "dim": int(C.shape[1]),
@@ -592,7 +596,11 @@ def _visible_tombstones(spark, out_dir: str, n_gens: int) -> DataFrame | None:
     paths = _committed_gen_dirs(out_dir, "tombstones", n_gens)
     if not paths:
         return None
-    tomb = spark.read.option("basePath", f"{out_dir}/tombstones").parquet(*paths)
+    tomb = (
+        spark.read.schema(_TOMBSTONE_SCHEMA)
+        .option("basePath", f"{out_dir}/tombstones")
+        .parquet(*paths)
+    )
     return tomb.groupBy("vec_id").agg(F.max("upto_gen").alias("upto_gen"))
 
 
@@ -618,7 +626,11 @@ def _latest_versions(spark, out_dir: str, ids_df: DataFrame, n_gens: int) -> Dat
             T.StructField("vec_id", T.LongType()),
             T.StructField("gen", T.IntegerType()),
         ]))
-    ki = spark.read.option("basePath", f"{out_dir}/keyindex").parquet(*paths)
+    ki = (
+        spark.read.schema(_KEYINDEX_SCHEMA)
+        .option("basePath", f"{out_dir}/keyindex")
+        .parquet(*paths)
+    )
     return (
         ki.join(ids_df, "vec_id")
         .groupBy("vec_id")
@@ -730,13 +742,7 @@ def add_to_ann_index(
             )
 
         def write_keyindex():
-            (
-                ids_new.withColumn("vb", _vec_bucket("vec_id"))
-                .repartition("vb")
-                .write.mode("overwrite")
-                .partitionBy("vb")
-                .parquet(f"{out_dir}/keyindex/gen={gen}")
-            )
+            _write_keyindex(ids_new, f"{out_dir}/keyindex/gen={gen}")
 
         def find_stale():
             # prior-version lookup reads only COMMITTED generations'
@@ -846,14 +852,7 @@ def compact_ann_index(spark, out_dir: str, last_n: int | None = None) -> dict:
         .partitionBy("cell")
         .parquet(f"{stage}/cells/gen={target}")
     )
-    (
-        live.select("vec_id")
-        .withColumn("vb", _vec_bucket("vec_id"))
-        .repartition("vb")
-        .write.mode("overwrite")
-        .partitionBy("vb")
-        .parquet(f"{stage}/keyindex/gen={target}")
-    )
+    _write_keyindex(live, f"{stage}/keyindex/gen={target}")
     old = f"{out_dir}/.compact.old"
     shutil.rmtree(old, ignore_errors=True)
     os.makedirs(old)

@@ -35,7 +35,7 @@ HARNESS_QUERIES = [
     (4, "table sort order part"),
 ]
 K = 10
-_INDEX_VERSION = "v5"  # bump when index layout / build inputs change
+_INDEX_VERSION = "v6"  # bump with sidecar.FORMAT_VERSION and when build inputs change
 
 
 def _content_key(sf_dir: str) -> str:
@@ -429,10 +429,10 @@ def _ensure_upsert_generations(spark, sf_dir: str) -> str:
         newdoc = newdoc.withColumn(
             "doc_len", F.size(F.split(F.col("extracted_text"), " "))
         )
-        newdoc.write.mode("overwrite").parquet(f"{out}/gen_1/docs_offset")
+        newdoc.write.mode("overwrite").parquet(f"{out}/gen_1/docs")
         n1 = newdoc.count()
         build_index(
-            spark.read.parquet(f"{out}/gen_1/docs_offset"), f"{out}/gen_1/index",
+            spark.read.parquet(f"{out}/gen_1/docs"), f"{out}/gen_1/index",
             salt_threshold=200, n_segments=4, n_buckets=8, resume=False,
         )
         _fixture_tombstones(d.filter(reingest)).write.mode("overwrite").parquet(

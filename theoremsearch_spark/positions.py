@@ -14,7 +14,7 @@ Layout (mirrors the posting-block store's pruning physics):
 
     positions/pb=<bucket>/…parquet      rows (term_id, doc_id, pos)
 
-  - `pb = pmod(term_id, n_buckets)` partition dirs: a phrase's terms
+  - `pb = pmod(murmur3(term_id), n_buckets)` partition dirs: a phrase's terms
     map to a handful of pb values driver-side, so serving LISTS only
     those directories;
   - files are sorted by (term_id, doc_id) within each bucket, so the
@@ -45,6 +45,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from theoremsearch_spark import sidecar
 from theoremsearch_spark.extract import tokenize
 
 POS_BUCKETS = 32
@@ -83,25 +84,15 @@ def term_positions_udf(text: pd.Series) -> pd.Series:
     return text.map(agg)
 
 
-PB_RULE = "murmur3-v2"
-
-
-def _pb_rule(root: str) -> tuple[str, int]:
-    """(rule, n_buckets) recorded in a sidecar's `_pb_rule.json`.
-    Sidecars written before the record used pb = term_id % buckets
-    ("mod") — still served correctly via this fallback."""
-    import json
-    import os
-
-    p = f"{root}/{PB_RULE_FILE}"
-    if os.path.isfile(p):
-        with open(p) as fh:
-            d = json.load(fh)
-        return d.get("rule", "mod"), int(d.get("buckets", POS_BUCKETS))
-    return "mod", POS_BUCKETS
-
-
+# the bucket count a positions sidecar was written with; the pb rule
+# itself is fixed by the format version (sidecar.py)
 PB_RULE_FILE = "_pb_rule.json"
+
+
+def _pb_buckets(root: str) -> int:
+    """The bucket count recorded in a sidecar's `_pb_rule.json`; a
+    sidecar without the record is refused."""
+    return int(sidecar.require_json(f"{root}/{PB_RULE_FILE}")["buckets"])
 
 
 def build_positions(
@@ -115,10 +106,9 @@ def build_positions(
     pb = pmod(murmur3(term_id), n_buckets) — EXACTLY the partition id
     the term_id-keyed repartition assigns, so every reducer writes one
     pb dir (the previous pb-keyed shuffle hashed 32 bucket values into
-    32 partitions — balls-into-bins stragglers, guide §2.5). The rule
-    is recorded in `_pb_rule.json`; serving derives each term's pb
-    through the SAME JVM functions, and legacy sidecars without the
-    record keep the old modulo rule."""
+    32 partitions — balls-into-bins stragglers, guide §2.5). The bucket
+    count is recorded in `_pb_rule.json`; serving derives each term's
+    pb through the SAME JVM functions."""
     rows = (
         docs.select(
             "doc_id",
@@ -144,13 +134,7 @@ def build_positions(
         .partitionBy("pb")
         .parquet(f"{out_dir}/positions")
     )
-    import json
-    import os
-
-    tmp = f"{out_dir}/positions/.{PB_RULE_FILE}.tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"rule": PB_RULE, "buckets": int(n_buckets)}, fh)
-    os.rename(tmp, f"{out_dir}/positions/{PB_RULE_FILE}")
+    sidecar.write_json(f"{out_dir}/positions/{PB_RULE_FILE}", {"buckets": int(n_buckets)})
     # row count from the just-written parquet FOOTERS (driver-side
     # metadata walk, zero data read) — the previous
     # read.parquet(...).count() launched a full extra scan of the
@@ -204,7 +188,6 @@ def phrase_verify_positional(
     cand: DataFrame,
     queries: pd.DataFrame,
     k: int,
-    n_buckets: int = POS_BUCKETS,
 ) -> DataFrame:
     """Adjacency-verify conjunctive candidates from the positions
     sidecar and re-rank — same contract as query._verify_phrase, zero
@@ -234,8 +217,8 @@ def phrase_verify_positional(
     # term → (term_id, murmur3(term_id)) via the SAME JVM functions the
     # builder used (no driver-side hash reimplementation to drift); the
     # optimizer evaluates this projection of a local relation on the
-    # driver, so the collect runs no Spark job. mm feeds the murmur3 pb
-    # rule below
+    # driver, so the collect runs no Spark job. mm feeds the pb rule
+    # below
     id_rows = (
         local_frame(spark, _VOCAB_SCHEMA, pd.DataFrame({"t": vocab}))
         .select(
@@ -264,20 +247,14 @@ def phrase_verify_positional(
     # one sidecar root (single index) or several (one per committed
     # generation of a streamed root — doc_ids are globally unique via
     # the generation offsets, so the union IS the corpus positions).
-    # pb derivation is PER ROOT from its recorded rule: mixed roots
-    # (legacy modulo + murmur3) each prune with their own mapping.
+    # Each root prunes with its own recorded bucket count.
     roots = [positions_dir] if isinstance(positions_dir, str) else list(positions_dir)
     import os
 
     paths = []
     for root in roots:
-        rule, nb = _pb_rule(root)
-        pbs = sorted(
-            {
-                (mm_of[tid] % nb) if rule == PB_RULE else (tid % nb)
-                for tid in all_tids
-            }
-        )
+        nb = _pb_buckets(root)
+        pbs = sorted({mm_of[tid] % nb for tid in all_tids})
         paths.extend(
             p for b in pbs if os.path.isdir(p := f"{root}/pb={b}")
         )

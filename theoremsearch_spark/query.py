@@ -60,7 +60,7 @@ Both prune at the block level too: blocks whose [first_doc, last_doc]
 range contains no allowed doc are never decoded.
 
 Serving view: every entry point serves a `ServeView` — a list of index
-generations (index, docs and optional positions dirs, doc_stats
+generations (index, docs and optional positions dirs, `index_meta.json`
 metadata) with their merged statistics, plus the tombstone dirs whose
 dead doc versions are masked out of scoring. A plain index dir is a
 one-generation view with no tombstones (`open_index`); a generation
@@ -79,7 +79,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F, types as T
 
 from theoremsearch_spark import codec
-from theoremsearch_spark.build import SERVE_POSTINGS_SCHEMA, TERM_STATS_SCHEMA
+from theoremsearch_spark import sidecar
+from theoremsearch_spark.build import SERVE_POSTINGS_SCHEMA, TERM_STATS_SCHEMA, load_index_meta
 from theoremsearch_spark.extract import tokenize
 
 TOPK_SCHEMA = T.StructType(
@@ -610,17 +611,6 @@ def _hits_frame(hits: list[tuple]) -> pd.DataFrame:
     return pd.DataFrame({"query_id": qid, "doc_id": doc, "score": sc})
 
 
-def load_index_meta(spark: SparkSession, index_dir: str) -> dict:
-    from theoremsearch_spark.stats import read_doc_stats_row
-
-    keys = ("n_docs", "avgdl", "k1", "b", "n_segments", "salt_threshold")
-    row = read_doc_stats_row(f"{index_dir}/doc_stats")
-    if row is None:  # non-local path — fall back to a Spark read
-        srow = spark.read.parquet(f"{index_dir}/doc_stats").collect()[0]
-        return {k: srow[k] for k in keys if k in srow.__fields__}
-    return {k: row[k] for k in keys if k in row}
-
-
 @dataclass(frozen=True)
 class Generation:
     """One index generation of a serving view. `filter_cols` is what
@@ -652,7 +642,7 @@ class ServeView:
             float(m["avgdl"]) * int(m["n_docs"]) for m in metas
         ) / max(self.n_docs, 1)
         self.k1, self.b = float(metas[0]["k1"]), float(metas[0]["b"])
-        moduli = {int(m.get("n_segments") or 1) for m in metas}
+        moduli = {int(m["n_segments"]) for m in metas}
         self.n_segments = moduli.pop() if len(moduli) == 1 else 1
 
 
@@ -666,7 +656,7 @@ def open_index(
     `docs_dir` is where doc lookups (phrase text, result metadata) read;
     `positions_dir` a `positions.build_positions` sidecar."""
     return ServeView([Generation(
-        0, index_dir, docs_dir, positions_dir, load_index_meta(spark, index_dir)
+        0, index_dir, docs_dir, positions_dir, load_index_meta(index_dir)
     )])
 
 
@@ -1418,48 +1408,47 @@ def _docs_touching(
     """(doc_id, *cols) rows of the docs files whose recorded id span
     holds a doc with `doc_id >> shift` in the sorted `keys`, filtered to
     the keys' id span (pushed to row-group statistics). Dirs without an
-    `_id_ranges.json` manifest (docs_offset generations, hand-built
-    roots) are read whole. No keys, or manifests proving no file holds
-    one, give a statically empty frame (Filter(false) folds to an empty
-    relation: zero file reads). Columns a docs table lacks are left
-    out."""
+    `_id_ranges.json` manifest (docs tables a caller built) are read
+    whole. When every dir records the same schema the read declares it,
+    so no footer-inference job runs. No keys, or manifests proving no
+    file holds one, give a statically empty frame (Filter(false) folds
+    to an empty relation: zero file reads). Columns a docs table lacks
+    are left out."""
     import bisect
     import os
 
+    recs = [_load_id_ranges(g.docs) for g in view.gens]
+    schemas = [r and T.StructType.fromJson(r["schema"]) for r in recs]
+    reader = spark.read
+    if schemas[0] is not None and all(s == schemas[0] for s in schemas):
+        reader = reader.schema(schemas[0])
     paths: list[str] = []
-    for g in view.gens if keys else ():
-        ranges = _load_id_ranges(g.docs)
-        if ranges is None:
+    for g, rec in zip(view.gens, recs) if keys else ():
+        if rec is None:
             paths.append(g.docs)
             continue
         paths.extend(
             os.path.join(g.docs, r["file"])
-            for r in ranges
+            for r in rec["files"]
             if (i := bisect.bisect_left(keys, int(r["lo"]) >> shift)) < len(keys)
             and keys[i] <= int(r["hi"]) >> shift
         )
     if not paths:
-        docs = spark.read.parquet(*[g.docs for g in view.gens]).filter(F.lit(False))
+        docs = reader.parquet(*[g.docs for g in view.gens]).filter(F.lit(False))
     else:
-        docs = spark.read.parquet(*paths).filter(
+        docs = reader.parquet(*paths).filter(
             F.col("doc_id").between(keys[0] << shift, ((keys[-1] + 1) << shift) - 1)
         )
     return docs.select("doc_id", *[c for c in cols if c in docs.columns])
 
 
-def _load_id_ranges(docs_dir: str) -> list[dict] | None:
-    """The `_id_ranges.json` sidecar's [{"file", "lo", "hi"}, ...] —
-    None when the dir has no manifest (hand-built roots)."""
-    import json
-    import os
-
+def _load_id_ranges(docs_dir: str) -> dict | None:
+    """The `_id_ranges.json` record of a docs dir: its files' id spans
+    ({"file", "lo", "hi"}) and the table's schema. None when the dir has
+    no manifest (a docs table the caller built)."""
     from theoremsearch_spark.stats import ID_RANGES_MANIFEST
 
-    manifest = os.path.join(docs_dir, ID_RANGES_MANIFEST)
-    if not os.path.isfile(manifest):
-        return None
-    with open(manifest) as fh:
-        return json.load(fh)["files"]
+    return sidecar.read_json(f"{docs_dir}/{ID_RANGES_MANIFEST}")
 
 
 def _bucket_shift(ranges: list[dict]) -> int:
@@ -1496,6 +1485,6 @@ def pool_doc_rows(
     aggregate: distinct coarse id buckets (`_pool_hit_buckets`, bucket
     width ≈ one file's id span across the generations). The driver sees
     O(n_files) ints, never a candidate id."""
-    spans = [r for g in view.gens for r in _load_id_ranges(g.docs) or ()]
+    spans = [r for g in view.gens for r in (_load_id_ranges(g.docs) or {}).get("files", ())]
     shift = _bucket_shift(spans)
     return _docs_touching(spark, view, _pool_hit_buckets(cand, shift), shift, cols)

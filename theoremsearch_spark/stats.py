@@ -21,6 +21,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from theoremsearch_spark import sidecar
 from theoremsearch_spark.extract import extract_all_udf
 
 DOCS_SCHEMA_FIELDS = [
@@ -238,7 +239,7 @@ def prepare_docs(
 
     docs = src.mapInPandas(extract_assign, schema=out_schema)
     docs.write.mode("overwrite").parquet(f"{out_dir}/docs")
-    out = spark.read.parquet(f"{out_dir}/docs")
+    out = spark.read.schema(out_schema).parquet(f"{out_dir}/docs")
     n_written = out.count()  # parquet-footer count — no data read
     expected = acc - int(id_base)
     if n_written != expected:
@@ -259,37 +260,19 @@ def prepare_docs(
     # file-level pruning — see query.doc_rows.
     if expected:
         _assert_dense_ids_from_footers(out, f"{out_dir}/docs", int(id_base), expected)
-        write_id_range_manifest(f"{out_dir}/docs")
+        write_id_range_manifest(f"{out_dir}/docs", out_schema)
     return out
-
-
-def read_doc_stats_row(path: str) -> dict | None:
-    """The one-row doc_stats sidecar read DRIVER-side with pyarrow —
-    serving metadata lookups cost zero Spark jobs (a collect job for 7
-    scalars measured ~0.2 s of pure scheduling). The row comes from the
-    first file that holds one: a Spark-written dir can carry empty
-    part files (one per empty partition) ahead of it. None when no
-    local file holds a row (a non-local path, or an empty dir) — the
-    caller falls back to spark.read."""
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    for f in sorted(_glob.glob(f"{path}/*.parquet")):
-        pf = pq.ParquetFile(f)
-        if pf.metadata.num_rows > 0:
-            t = pf.read()
-            return {c: t.column(c)[0].as_py() for c in t.column_names}
-    return None
 
 
 ID_RANGES_MANIFEST = "_id_ranges.json"
 
 
-def write_id_range_manifest(docs_path: str) -> bool:
+def write_id_range_manifest(docs_path: str, schema: T.StructType) -> bool:
     """Record each parquet file's [min, max] doc_id span (footer stats
-    only — zero data read) as `_id_ranges.json` inside the docs dir
-    (underscore prefix: invisible to Spark's parquet listing). Because
+    only — zero data read) and the table's `schema` as `_id_ranges.json`
+    inside the docs dir (underscore prefix: invisible to Spark's parquet
+    listing); lookups read the table with that schema instead of
+    inferring it from footers, a Spark job per read. Because
     prepare_docs writes ids ascending per task, files cover disjoint
     contiguous ranges — the manifest turns a k·Q-hit metadata lookup
     into reads of ONLY the files containing hit ids, instead of a
@@ -304,7 +287,6 @@ def write_id_range_manifest(docs_path: str) -> bool:
     lookup stays a binary search; past that, store it as a parquet
     table and broadcast-join instead."""
     import glob as _glob
-    import json
     import os
 
     import pyarrow.parquet as pq
@@ -326,10 +308,12 @@ def write_id_range_manifest(docs_path: str) -> bool:
             lo = int(st.min) if lo is None else min(lo, int(st.min))
             hi = int(st.max) if hi is None else max(hi, int(st.max))
         files.append({"file": os.path.basename(f), "lo": lo, "hi": hi})
-    tmp = f"{docs_path}/.{ID_RANGES_MANIFEST}.tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"files": files}, fh)
-    os.rename(tmp, f"{docs_path}/{ID_RANGES_MANIFEST}")
+    # as Spark reads parquet back: every column nullable
+    read_schema = T.StructType([T.StructField(f.name, f.dataType, True) for f in schema])
+    sidecar.write_json(
+        f"{docs_path}/{ID_RANGES_MANIFEST}",
+        {"files": files, "schema": read_schema.jsonValue()},
+    )
     return True
 
 

@@ -9,7 +9,7 @@ are folded into one index root via foreachBatch → `add_to_ann_index`
 
 Exactly-once recipe:
   - ingestion is keyed on FILES, not micro-batch ids: the committed
-    file set lives in `stream_files.json` (atomic tmp+rename), and a
+    file set lives in `stream_files.json` (a sidecar.py record), and a
     batch is trimmed to its never-ingested files before the add. A
     micro-batch id is only unique per CHECKPOINT — keying on it would
     silently drop new files whenever a fresh checkpoint re-delivers
@@ -40,25 +40,17 @@ Single-writer per index root, like the text generation store.
 
 from __future__ import annotations
 
-import json
-import os
+from theoremsearch_spark import sidecar
 
 
 def _committed_files(index_dir: str) -> set[str]:
-    p = f"{index_dir}/stream_files.json"
-    if not os.path.exists(p):
-        return set()
-    with open(p) as fh:
-        return set(json.load(fh))
+    rec = sidecar.read_json(f"{index_dir}/stream_files.json")
+    return set(rec["files"]) if rec else set()
 
 
 def _record_files(index_dir: str, files: set[str]) -> None:
     done = sorted(_committed_files(index_dir) | files)
-    os.makedirs(index_dir, exist_ok=True)
-    tmp = f"{index_dir}/.stream_files.json.tmp"
-    with open(tmp, "w") as fh:
-        json.dump(done, fh)
-    os.rename(tmp, f"{index_dir}/stream_files.json")
+    sidecar.write_json(f"{index_dir}/stream_files.json", {"files": done})
 
 
 def stream_ann_ingest(
@@ -107,7 +99,7 @@ def stream_ann_ingest(
             # landed): trim to the never-ingested files row-wise
             batch_df = batch_df.filter(F.col("_src_path").isin(sorted(new)))
         batch_df = batch_df.drop("_src_path")
-        if not os.path.exists(f"{index_dir}/ivf_meta.json"):
+        if sidecar.read_json(f"{index_dir}/ivf_meta.json") is None:
             # quantize applies at bootstrap only; later adds read the
             # committed meta and quantize (or not) to match
             build_ann_index(

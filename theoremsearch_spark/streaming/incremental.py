@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from theoremsearch_spark import sidecar
 from theoremsearch_spark.corpus import DOCUMENTS_SCHEMA
 
 
@@ -41,15 +42,9 @@ def _generations(spark: SparkSession, out_dir: str) -> list[dict]:
 def _raw_generations(out_dir: str) -> list[dict]:
     """Every manifest record, INCLUDING superseded generations — the
     idempotency check for micro-batch replay must consult this view: a
-    batch whose generation was compacted away is still ingested."""
-    import glob
-    import json
-
-    raw = []
-    for f in sorted(glob.glob(f"{out_dir}/gens/gen_*.json")):
-        with open(f) as fh:
-            raw.append(json.load(fh))
-    return raw
+    batch whose generation was compacted away is still ingested. A
+    record of another format version is refused (sidecar.py)."""
+    return sidecar.read_json_dir(f"{out_dir}/gens")
 
 
 def _tier_buckets(gens: list[dict], f: float) -> list[list[dict]]:
@@ -72,10 +67,7 @@ def _tier_buckets(gens: list[dict], f: float) -> list[list[dict]]:
 
 
 def _docs_path(out_dir: str, gen: int) -> str:
-    import os
-
-    gd = f"{out_dir}/gen_{gen}"
-    return f"{gd}/docs_offset" if os.path.exists(f"{gd}/docs_offset") else f"{gd}/docs"
+    return f"{out_dir}/gen_{gen}/docs"
 
 
 def _tombstone_paths(out_dir: str, gen_ids) -> list[str]:
@@ -122,8 +114,8 @@ def _prior_version_rows(
     doc version whose url is in `urls_df`. Generations that wrote a key
     index are read via exactly the `ub=` bucket dirs the batch's urls
     hash into (partition-level pruning, no docs-table access);
-    generations without one (hand-built roots, pre-keyindex manifests)
-    fall back to the column-pruned docs scan. Returns None ONLY when
+    generations without one (roots whose generations a caller built by
+    hand) fall back to the column-pruned docs scan. Returns None ONLY when
     there are no prior index generations; "live generations exist but
     none of the requested urls' hash buckets are on disk" is a valid
     EMPTY result (a small generation materializes only the ub= dirs its
@@ -201,11 +193,6 @@ def commit_generation(
     filter-term posting lists, so serving can reject a filter the
     generation cannot answer (a generation missing the filter's posting
     list would silently exclude ALL its docs from filtered results)."""
-    import json
-    import os
-
-    os.makedirs(f"{out_dir}/gens", exist_ok=True)
-    tmp = f"{out_dir}/gens/.gen_{gen}.json.tmp"
     rec = {
         "gen": int(gen),
         "base": int(base),
@@ -220,18 +207,7 @@ def commit_generation(
         rec["filter_cols"] = list(filter_cols)
     if key_buckets is not None:
         rec["key_buckets"] = int(key_buckets)
-    with open(tmp, "w") as fh:
-        json.dump(rec, fh)
-    os.rename(tmp, f"{out_dir}/gens/gen_{gen}.json")
-
-
-def _gen_id_end(rec: dict) -> int:
-    """Exclusive id high-water mark of one manifest record, with the
-    pre-id_end-manifest fallback (base + n_docs — correct for streamed
-    generations, the only kind old manifests contain)."""
-    if rec.get("id_end") is not None:
-        return int(rec["id_end"])
-    return int(rec["base"]) + int(rec["n_docs"])
+    sidecar.write_json(f"{out_dir}/gens/gen_{gen}.json", rec)
 
 
 def _next_free_doc_id(out_dir: str) -> int:
@@ -241,7 +217,7 @@ def _next_free_doc_id(out_dir: str) -> int:
     dropped tombstoned bodies, live count < id high-water mark, and a
     count-derived base would hand out ids already held by live docs
     (silently merging two documents' postings at serve time)."""
-    return max((_gen_id_end(r) for r in _raw_generations(out_dir)), default=0)
+    return max((int(r["id_end"]) for r in _raw_generations(out_dir)), default=0)
 
 
 def _next_negative_gen(out_dir: str) -> int:
@@ -344,7 +320,10 @@ def compact_generations(
     carried = None
     tomb_paths = _tombstone_paths(out_dir, [g["gen"] for g in gens])
     if tomb_paths:
-        dead = spark.read.parquet(*tomb_paths).dropDuplicates(["doc_id"])
+        dead = (
+            spark.read.schema(TOMBSTONE_SCHEMA).parquet(*tomb_paths)
+            .dropDuplicates(["doc_id"])
+        )
         pre_drop = docs
         docs = pre_drop.join(dead.select("doc_id"), "doc_id", "left_anti")
         carried = dead.join(
@@ -364,8 +343,8 @@ def compact_generations(
     )
     from theoremsearch_spark.stats import write_id_range_manifest
 
-    write_id_range_manifest(f"{new_dir}/docs")
-    docs = spark.read.parquet(f"{new_dir}/docs")
+    write_id_range_manifest(f"{new_dir}/docs", docs.schema)
+    docs = spark.read.schema(docs.schema).parquet(f"{new_dir}/docs")
     n = docs.count()
     # preserve filter-term indexing across the rewrite: when every
     # merged generation RECORDED its filter_cols, re-derive the same
@@ -405,7 +384,7 @@ def compact_generations(
         out_dir, new_gen, base=0, n_docs=n, replaces=[g["gen"] for g in gens],
         # post-drop count understates the id range — preserve the inputs'
         # high-water mark so future batch ids never collide with live docs
-        id_end=max(_gen_id_end(g) for g in gens),
+        id_end=max(int(g["id_end"]) for g in gens),
         filter_cols=built_fcols,
         key_buckets=KEY_BUCKETS if has_keyindex else None,
     )
@@ -628,18 +607,7 @@ def incremental_index(
         gens = _generations(spark, out_dir)
         base = _next_free_doc_id(out_dir)
         gen_dir = f"{out_dir}/gen_{batch_id}"
-        docs = prepare_docs(batch_df, gen_dir)
-        if base:
-            docs = docs.withColumn("doc_id", F.col("doc_id") + F.lit(base))
-            docs.write.mode("overwrite").parquet(f"{gen_dir}/docs_offset")
-            # id-range sidecar for the offset table too, so the --gens
-            # metadata join gets file-level pruning on streamed
-            # generations (prepare_docs wrote one for gen_dir/docs, but
-            # serving reads docs_offset when it exists)
-            from theoremsearch_spark.stats import write_id_range_manifest
-
-            write_id_range_manifest(f"{gen_dir}/docs_offset")
-            docs = spark.read.parquet(f"{gen_dir}/docs_offset")
+        docs = prepare_docs(batch_df, gen_dir, id_base=base)
         n = docs.count()
         docs, fcols = _with_filter_terms(docs, filter_cols)
         build_index(docs, f"{gen_dir}/index", resume=False, **build_kwargs)
@@ -764,7 +732,8 @@ def open_root(spark: SparkSession, out_dir: str):
     no index — they join the tombstone mask, never the index scans."""
     import os
 
-    from theoremsearch_spark.query import Generation, ServeView, load_index_meta
+    from theoremsearch_spark.build import load_index_meta
+    from theoremsearch_spark.query import Generation, ServeView
 
     gens = sorted(_generations(spark, out_dir), key=lambda g: g["gen"])
     if not gens:
@@ -777,7 +746,7 @@ def open_root(spark: SparkSession, out_dir: str):
         pos = f"{index}/positions"
         view_gens.append(Generation(
             int(g["gen"]), index, _docs_path(out_dir, g["gen"]),
-            pos if os.path.isdir(pos) else None, load_index_meta(spark, index),
+            pos if os.path.isdir(pos) else None, load_index_meta(index),
             g.get("filter_cols"),
         ))
     if not view_gens:
@@ -794,8 +763,9 @@ def topk_all_generations(
     statistics (N, avgdl, df) — scores are identical to a from-scratch
     batch build over the union corpus. Tombstoned (upserted-away or
     deleted) doc versions are excluded, and N, avgdl and per-term df
-    are corrected as if they were gone; stored per-generation doc_stats
-    stay stale until compaction, standard LSM behavior.
+    are corrected as if they were gone; each generation's stored
+    `index_meta.json` statistics stay stale until compaction, standard
+    LSM behavior.
 
     `filters` (reference R3) work exactly as in single-index topk;
     a filter on a column some generation's manifest records as not
