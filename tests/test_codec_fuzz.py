@@ -4,6 +4,8 @@ empty / valid output — never an exception. On a 100 TB crawl, one
 corrupt blob must never kill a stage; these properties are the
 mapInPandas pipeline's crash-safety floor."""
 
+import struct
+
 import numpy as np
 from hypothesis import example, given, settings, strategies as st
 
@@ -24,7 +26,6 @@ from theoremsearch_spark.functions.multimodal import (
     parse_wav_header,
     parse_webp_dims,
 )
-from theoremsearch_spark.functions.webpcodec import decode_webp_lossless
 from tests.test_multimodal import _tiny_jpeg
 
 
@@ -41,13 +42,10 @@ _VALID = {
     "wav": encode_wav_pcm16(
         (np.sin(np.arange(400) / 7) * 8000).astype(np.int16), 8000
     ),
+    # a lossless WEBP header (800x600): dims parse, no pixel decode
+    "webp": b"RIFF" + struct.pack("<I", 17) + b"WEBP" + b"VP8L"
+    + struct.pack("<I", 5) + bytes([0x2F]) + struct.pack("<I", 799 | 599 << 14),
 }
-try:
-    from tests.test_webp import _rand_px, encode_vp8l
-
-    _VALID["webp"] = encode_vp8l(_rand_px(6, 8, seed=4), 8, 6)
-except Exception:  # pragma: no cover — webp test helpers unavailable
-    pass
 
 
 def _never_raises(raw: bytes) -> None:
@@ -56,7 +54,6 @@ def _never_raises(raw: bytes) -> None:
     parse_jpeg_dims(raw)
     decode_bmp_pixels(raw)
     parse_webp_dims(raw)
-    decode_webp_lossless(raw)
     parse_wav_header(raw)
     decode_wav_pcm16(raw)
     parse_avi_header(raw)

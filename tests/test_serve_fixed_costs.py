@@ -53,24 +53,18 @@ def single(spark, index_dir, docs_pdf):
 def gens_root(spark, tmp_path_factory):
     """Two index generations, each with a positions sidecar, plus a
     delete-only generation: serving builds the tombstone artifact."""
-    from theoremsearch_spark.build import build_index
-    from theoremsearch_spark.stats import prepare_docs
     from theoremsearch_spark.streaming.incremental import (
-        commit_generation,
+        _append_generation,
         delete_documents,
     )
 
     full = generate_documents(spark, 600, partitions=4).toPandas()
     out = str(tmp_path_factory.mktemp("serve_gens") / "root")
     for gen, (lo, hi) in enumerate(((0, 400), (400, 600))):
-        gen_dir = f"{out}/gen_{gen}"
-        docs = prepare_docs(
-            spark.createDataFrame(full.iloc[lo:hi]), gen_dir, id_base=lo
+        _append_generation(
+            spark, out, gen, spark.createDataFrame(full.iloc[lo:hi]), positions=True,
+            salt_threshold=150, n_segments=4, n_buckets=4,
         )
-        build_index(docs, f"{gen_dir}/index", resume=False,
-                    salt_threshold=150, n_segments=4, n_buckets=4)
-        build_positions(docs, f"{gen_dir}/index")
-        commit_generation(out, gen, lo, hi - lo)
     assert delete_documents(spark, out, list(full["url"].iloc[::25]))["deleted"] > 0
     docs0 = spark.read.parquet(f"{out}/gen_0/docs").toPandas()
     return {"out": out, "phrases": _phrases(docs0, (10, 300))}

@@ -279,12 +279,12 @@ def test_ann_add_crash_replay_self_heals(spark, emb_frames, tmp_path):
     from theoremsearch_spark.functions.similarity import (
         _assign_cells,
         _read_ivf_meta,
-        _vec_bucket,
         add_to_ann_index,
         ann_ivf_search,
         build_ann_index,
         live_cells,
     )
+    from theoremsearch_spark.streaming.incremental import _key_bucket
 
     emb, queries = emb_frames
     qp = queries.toPandas()
@@ -318,7 +318,7 @@ def test_ann_add_crash_replay_self_heals(spark, emb_frames, tmp_path):
             spark.createDataFrame(
                 [(0, 0)], "vec_id long, upto_gen int"
             ).write.mode("overwrite").parquet(f"{out}/tombstones/gen=1")
-            batch.select("vec_id").withColumn("vb", _vec_bucket("vec_id")).write.mode(
+            batch.select("vec_id").withColumn("vb", _key_bucket("vec_id")).write.mode(
                 "overwrite"
             ).partitionBy("vb").parquet(f"{out}/keyindex/gen=1")
 
@@ -814,3 +814,33 @@ def test_ann_tiered_compaction(spark, emb_frames, tmp_path):
         .toPandas().sort_values(["query_id", "rnk"]).reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(before, final)
+
+
+def test_ann_delete_counts_tombstones_footers_cannot_see(
+    spark, emb_frames, tmp_path, monkeypatch
+):
+    """Where the footer walk sees no file (a root on a non-local
+    filesystem), an ANN delete counts its tombstones with Spark: it
+    reports the deleted ids and they stop serving, instead of a silent
+    0 that removed the written tombstones and committed nothing."""
+    from pyspark.sql import functions as F
+
+    from theoremsearch_spark import positions
+    from theoremsearch_spark.functions.similarity import (
+        ann_ivf_search,
+        build_ann_index,
+        delete_from_ann_index,
+        live_cells,
+    )
+
+    emb, queries = emb_frames
+    out = str(tmp_path / "ivf_unseen_footers")
+    build_ann_index(emb, out)
+    qp = queries.toPandas()
+    ids = [int(q) * PER_CLUSTER for q in qp["query_id"]]  # each query's own vector
+    assert set(ids) <= set(ann_ivf_search(spark, out, qp, k=K).toPandas()["vec_id"])
+
+    monkeypatch.setattr(positions, "_footer_row_count", lambda root: None)
+    assert delete_from_ann_index(spark, out, ids) == {"deleted": len(ids)}
+    assert not set(ids) & set(ann_ivf_search(spark, out, qp, k=K).toPandas()["vec_id"])
+    assert live_cells(spark, out).filter(F.col("vec_id").isin(ids)).count() == 0

@@ -30,27 +30,20 @@ def stream_index(spark, tmp_path_factory):
 
 
 def incremental_index_wrapper(spark, inp, out, chk):
-    # wire maxFilesPerTrigger into the reader used by incremental_index
-    from theoremsearch_spark.build import build_index
+    # incremental_index's micro-batch body under a maxFilesPerTrigger reader
     from theoremsearch_spark.corpus import DOCUMENTS_SCHEMA
-    from theoremsearch_spark.stats import prepare_docs
-    from theoremsearch_spark.streaming.incremental import _generations
+    from theoremsearch_spark.streaming.incremental import (
+        _append_generation,
+        _raw_generations,
+    )
 
     def process_batch(batch_df, batch_id):
         if batch_df.isEmpty():
             return
-        gens = _generations(spark, out)
-        if any(g["gen"] == batch_id for g in gens):
+        if any(g["gen"] == batch_id for g in _raw_generations(out)):
             return
-        base = sum(g["n_docs"] for g in gens)
-        gen_dir = f"{out}/gen_{batch_id}"
-        docs = prepare_docs(batch_df, gen_dir, id_base=base)
-        n = docs.count()
-        build_index(docs, f"{gen_dir}/index", resume=False,
-                    salt_threshold=400, n_segments=4, n_buckets=8)
-        from theoremsearch_spark.streaming.incremental import commit_generation
-
-        commit_generation(out, batch_id, base, n)
+        _append_generation(spark, out, batch_id, batch_df,
+                           salt_threshold=400, n_segments=4, n_buckets=8)
 
     q = (
         spark.readStream.schema(DOCUMENTS_SCHEMA)
@@ -365,19 +358,18 @@ def test_upsert_tombstones_serve_latest_versions(spark, upsert_index):
 
 def test_upsert_ingest_reads_only_url_buckets(spark, upsert_index):
     """The prior-version lookup an ingesting batch performs must read
-    ONLY the url-hash key-index buckets its urls fall into — never a
-    generation's docs table (which would be an O(corpus) scan per
-    micro-batch at 100 TB). Also locks the row semantics: one row per
-    LIVE stored version of each requested url (stale-version filtering
-    is the caller's tombstone anti-join)."""
+    ONLY the url-hash key-index buckets its urls fall into (plus the
+    committed tombstones it anti-joins) — never a generation's docs
+    table (which would be an O(corpus) scan per micro-batch at 100 TB).
+    Also locks the row semantics: one row per LIVE version of each
+    requested url; versions already tombstoned are left out."""
     import os
     import re
 
     from theoremsearch_spark.streaming.incremental import (
-        KEY_BUCKETS,
         _generations,
-        _prior_version_rows,
-        _url_bucket,
+        _key_bucket,
+        _live_prior_versions,
     )
 
     out = upsert_index["out"]
@@ -385,30 +377,28 @@ def test_upsert_ingest_reads_only_url_buckets(spark, upsert_index):
     gens = sorted(_generations(spark, out), key=lambda g: g["gen"])
     for g in gens:
         assert os.path.isdir(f"{out}/gen_{g['gen']}/keyindex")
-        assert g["key_buckets"] == KEY_BUCKETS
 
     # 5 never-re-ingested urls (1 version each) + 2 re-ingested urls
-    # (2 stored versions each: gen0 stale + gen1 current)
+    # (2 stored versions each: gen0 stale and tombstoned + gen1 current)
     urls = full["url"].iloc[:5].tolist() + full["url"].iloc[100:102].tolist()
     urls_df = spark.createDataFrame(pd.DataFrame({"url": urls}))
-    rows = _prior_version_rows(spark, out, gens, urls_df)
+    rows = _live_prior_versions(spark, out, gens, urls_df)
 
     touched = {
         r["ub"]
-        for r in urls_df.select(
-            _url_bucket(F.col("url"), KEY_BUCKETS).alias("ub")
-        ).distinct().collect()
+        for r in urls_df.select(_key_bucket(F.col("url")).alias("ub")).distinct().collect()
     }
     files = rows.inputFiles()
     assert files, "pruned read planned no files"
-    for f in files:
+    index_files = [f for f in files if "/tombstones/" not in f]
+    for f in index_files:
         assert "/keyindex/ub=" in f, f"non-keyindex file read: {f}"
         assert int(re.search(r"/ub=(\d+)/", f).group(1)) in touched, f
     # bounded: ≤ |touched buckets| dirs per generation
-    assert len({re.sub(r"/[^/]+$", "", f) for f in files}) <= len(touched) * len(gens)
+    assert len({re.sub(r"/[^/]+$", "", f) for f in index_files}) <= len(touched) * len(gens)
 
     got = rows.toPandas()
-    assert len(got) == 5 * 1 + 2 * 2
+    assert len(got) == 5 + 2
     assert set(got["url"]) == set(urls)
     assert set(got.columns) == {"doc_id", "url", "doc_len", "terms"}
 
@@ -482,7 +472,7 @@ def test_compacted_generation_carries_keyindex(spark, upsert_index):
 
     from theoremsearch_spark.streaming.incremental import (
         _generations,
-        _prior_version_rows,
+        _live_prior_versions,
         compact_generations,
     )
 
@@ -496,13 +486,14 @@ def test_compacted_generation_carries_keyindex(spark, upsert_index):
     assert res["compacted"]
     new_gen = res["generation"]
     assert os.path.isdir(f"{copy}/gen_{new_gen}/keyindex")
+    assert not os.path.isdir(f"{copy}/gen_{new_gen}/tombstones")
     gens = _generations(spark, copy)
-    assert gens[0].get("key_buckets")
+    assert [g["gen"] for g in gens] == [new_gen]
 
     urls_df = spark.createDataFrame(
         pd.DataFrame({"url": upsert_index["full"]["url"].iloc[100:103].tolist()})
     )
-    rows = _prior_version_rows(spark, copy, gens, urls_df)
+    rows = _live_prior_versions(spark, copy, gens, urls_df)
     assert all("/keyindex/ub=" in f for f in rows.inputFiles())
     # post-compaction: exactly one live version per url remains stored
     assert rows.count() == 3
@@ -512,7 +503,9 @@ def test_compacted_generation_carries_keyindex(spark, upsert_index):
 def test_full_compaction_drops_tombstoned_bodies(spark, upsert_index):
     """FULL compaction physically removes tombstoned docs and clears
     tombstones: the compacted generation holds exactly one version per
-    url and serving stays identical to the latest-version oracle."""
+    url, no tombstones dir, and serving stays identical to the
+    latest-version oracle."""
+    import os
     import shutil
 
     from theoremsearch_spark.streaming.incremental import (
@@ -532,8 +525,8 @@ def test_full_compaction_drops_tombstoned_bodies(spark, upsert_index):
     assert res["compacted"] and res["n_docs"] == 1000  # 1100 bodies − 100 dead
     gens = _generations(spark, copy)
     assert [g["gen"] for g in gens] == [res["generation"]]
-    carried = spark.read.parquet(f"{copy}/gen_{res['generation']}/tombstones")
-    assert carried.count() == 0  # full compact clears every tombstone
+    # full compact clears every tombstone: nothing is carried
+    assert not os.path.isdir(f"{copy}/gen_{res['generation']}/tombstones")
     _assert_serves_latest(spark, copy, n_urls=1000)
     shutil.rmtree(copy, ignore_errors=True)
 
@@ -631,21 +624,17 @@ def test_delete_documents_serves_survivors_only(spark, tmp_path):
     exact stat corrections (scores == from-scratch build over the
     survivors), re-deleting is a no-op, and full compaction drops the
     bodies and the delete-only generation."""
-    from theoremsearch_spark.build import build_index
-    from theoremsearch_spark.stats import prepare_docs
     from theoremsearch_spark.streaming.incremental import (
+        _append_generation,
         _generations,
-        commit_generation,
         compact_generations,
         delete_documents,
     )
 
     out = str(tmp_path / "gens")
     full = generate_documents(spark, 500, partitions=4).toPandas()
-    docs = prepare_docs(spark.createDataFrame(full), f"{out}/gen_0")
-    build_index(docs, f"{out}/gen_0/index", resume=False,
-                salt_threshold=400, n_segments=4, n_buckets=4)
-    commit_generation(out, 0, 0, 500)
+    _append_generation(spark, out, 0, spark.createDataFrame(full),
+                       salt_threshold=400, n_segments=4, n_buckets=4)
 
     # empty delete is a no-op (no generation committed, no crash)
     assert delete_documents(spark, out, []) == {"generation": None, "deleted": 0}
@@ -1223,3 +1212,148 @@ def test_vacuum_reclaims_superseded_generations(spark, stream_index):
         "vacuumed": [], "kept_young": [], "bytes_freed": 0
     }
     shutil.rmtree(copy, ignore_errors=True)
+
+
+def _stream_batches(spark, root, batches, **kw):
+    """Land each documents frame as its own file drop and stream it into
+    `root/out` (one generation per call)."""
+    inp, out, chk = f"{root}/in", f"{root}/out", f"{root}/chk"
+    for name, pdf in batches:
+        spark.createDataFrame(pdf).repartition(2).write.parquet(f"{inp}/{name}")
+        incremental_index(
+            spark, f"{inp}/*", out, chk,
+            salt_threshold=400, n_segments=4, n_buckets=8, **kw,
+        ).start().awaitTermination(300)
+    return out
+
+
+def _reingested(pdf):
+    mod = pdf.copy()
+    mod["html"] = mod["html"].map(lambda h: bytes(h) + b"<p>zzupserted fresh content</p>")
+    return mod
+
+
+def test_batch_reingesting_no_url_writes_no_tombstones(spark, tmp_path):
+    """A batch of fresh urls tombstones nothing and leaves no
+    tombstones/ dir, so serving the root runs no tombstone-artifact job:
+    topk_all_generations prep is the term-dictionary scan alone."""
+    import os
+
+    from tests.test_serve_fixed_costs import jobs_launched
+
+    full = generate_documents(spark, 260, partitions=2).toPandas()
+    out = _stream_batches(
+        spark, str(tmp_path), [("b0", full.iloc[:200]), ("b1", full.iloc[200:])]
+    )
+    assert sorted(os.listdir(f"{out}/gen_1")) == ["docs", "index", "keyindex"]
+    assert not os.path.isdir(f"{out}/gen_0/tombstones")
+    qs = query_set(260)[["query_id", "query_text"]].head(4)
+    topk_all_generations(spark, out, qs, k=10)  # warm
+    n = jobs_launched(spark, lambda: topk_all_generations(spark, out, qs, k=10))
+    assert n == 1, f"topk_all_generations prep launched {n} Spark jobs"
+
+
+def test_generation_without_keyindex_refused(spark, tmp_path):
+    """An index generation without a key index cannot answer the
+    prior-version lookup; ingest and delete refuse the root by naming
+    the generation instead of leaving its old versions serving, and the
+    refused batch writes nothing."""
+    import os
+
+    from theoremsearch_spark.build import build_index
+    from theoremsearch_spark.stats import prepare_docs
+    from theoremsearch_spark.streaming.incremental import (
+        commit_generation,
+        delete_documents,
+    )
+
+    full = generate_documents(spark, 240, partitions=2).toPandas()
+    out = str(tmp_path / "out")
+    gen_dir = f"{out}/gen_7"  # a hand-built generation, no keyindex/
+    docs = prepare_docs(spark.createDataFrame(full.iloc[:200]), gen_dir)
+    build_index(docs, f"{gen_dir}/index", resume=False,
+                salt_threshold=400, n_segments=4, n_buckets=8)
+    commit_generation(out, 7, 0, 200)
+
+    with pytest.raises(ValueError, match="generation 7 .*no keyindex"):
+        delete_documents(spark, out, list(full["url"].iloc[:3]))
+    with pytest.raises(Exception, match="generation 7 .*no keyindex"):
+        _stream_batches(spark, str(tmp_path), [("b0", _reingested(full.iloc[180:]))])
+    assert not os.path.exists(f"{out}/gen_0")
+
+
+def test_parent_format_root_serves_upserts_and_compacts(spark, tmp_path):
+    """A root in the shape earlier versions wrote — every generation
+    record carries its key-index bucket count (64), and a batch that
+    re-ingested no url left an empty tombstones/ dir — serves the latest
+    versions, takes an upsert and compacts. What this version adds to it
+    records no bucket count and holds no empty tombstones dir."""
+    import os
+
+    from theoremsearch_spark import sidecar
+    from theoremsearch_spark.streaming.incremental import (
+        TOMBSTONE_SCHEMA,
+        _generations,
+        _raw_generations,
+        compact_generations,
+    )
+
+    old_field = "key_buckets"  # the record field earlier versions wrote
+    full = generate_documents(spark, 450, partitions=2).toPandas()
+    root = str(tmp_path)
+    out = _stream_batches(
+        spark, root, [("b0", full.iloc[:400]), ("b1", full.iloc[400:])]
+    )
+    for rec in _raw_generations(out):
+        sidecar.write_json(f"{out}/gens/gen_{rec['gen']}.json", {**rec, old_field: 64})
+    spark.createDataFrame([], TOMBSTONE_SCHEMA).write.parquet(f"{out}/gen_1/tombstones")
+    _assert_serves_latest(spark, out, n_urls=450)
+
+    _stream_batches(spark, root, [("b2", _reingested(full.iloc[100:150]))])
+    new = [r for r in _raw_generations(out) if r["gen"] == 2]
+    assert new and old_field not in new[0]
+    assert spark.read.parquet(f"{out}/gen_2/tombstones").count() == 50
+    _assert_serves_latest(spark, out, n_urls=450)
+
+    res = compact_generations(spark, out, salt_threshold=400, n_segments=4, n_buckets=8)
+    assert res["compacted"] and res["n_docs"] == 450
+    rec = _generations(spark, out)[0]
+    assert old_field not in rec
+    assert sorted(os.listdir(f"{out}/gen_{rec['gen']}")) == ["docs", "index", "keyindex"]
+    _assert_serves_latest(spark, out, n_urls=450)
+
+
+def test_write_path_job_counts(spark, tmp_path):
+    """Job-id advance of the write path on a key-indexed root: an
+    upsert micro-batch, a 12-url delete, and a tiered compaction of two
+    micro-batch generations. The prior-version lookup reads the key
+    index with a declared schema and anti-joins the tombstones once,
+    tombstones are counted from their footers, the generation size
+    comes from the verified id spans, and compaction reads the merged
+    docs with their recorded schema."""
+    from tests.test_serve_fixed_costs import jobs_launched
+    from theoremsearch_spark.streaming.incremental import (
+        compact_generations,
+        delete_documents,
+    )
+
+    full = generate_documents(spark, 620, partitions=2).toPandas()
+    root = str(tmp_path)
+    out = _stream_batches(spark, root, [("b0", full.iloc[:400])])
+    upsert = pd.concat([_reingested(full.iloc[:60]), full.iloc[400:460]])
+    n_upsert = jobs_launched(spark, lambda: _stream_batches(spark, root, [("b1", upsert)]))
+    res = {}
+    n_delete = jobs_launched(spark, lambda: res.update(
+        delete_documents(spark, out, list(full["url"].iloc[300:312]))
+    ))
+    assert res["deleted"] == 12
+    _stream_batches(spark, root, [("b2", full.iloc[500:620])])
+    n_compact = jobs_launched(spark, lambda: res.update(compact_generations(
+        spark, out, tier_fraction=0.5, salt_threshold=400, n_segments=4, n_buckets=8,
+    )))
+    assert res["compacted"] and sorted(res["replaced"]) == [-1, 1, 2]
+    counts = {"upsert": n_upsert, "delete": n_delete, "compact": n_compact}
+    print("write-path jobs", counts)
+    # 31, 8 and 28 jobs when ingest counted its docs, the lookup
+    # inferred the key-index schema and a delete re-read its tombstones
+    assert n_upsert <= 29 and n_delete <= 6 and n_compact <= 26, counts

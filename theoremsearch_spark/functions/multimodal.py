@@ -8,9 +8,7 @@ the common web cases — no PIL/cv2/libav in this container:
     for 8-bit non-interlaced gray/RGB/RGBA (zlib + per-lane scanline
     unfilter) — the overwhelming share of real web PNGs;
   - JPEG: dimensions from the SOFn frame header (marker scan);
-  - WEBP: FULL pixel decode for LOSSLESS (VP8L — prefix codes, LZ77,
-    color cache, all four transforms incl. bundled palettes,
-    `webpcodec.py`); lossy VP8 reports dimensions only;
+  - WEBP: dimensions from the VP8/VP8L/VP8X chunk headers;
   - GIF: FULL frame decode (variable-width LZW + palette + canvas
     compositing + transparency + de-interlace) — animated GIFs are a
     real video-frame-sampling path (frame_sample re-emits PNGs);
@@ -20,7 +18,7 @@ the common web cases — no PIL/cv2/libav in this container:
   - BMP: 24-bit uncompressed pixel decode/encode (real resize);
   - WAV: full PCM16 decode (fmt-chunk walk + frombuffer) with real
     audio features (duration, RMS, zero-crossing rate).
-What still needs an external codec (JPEG and lossy-VP8 pixels,
+What still needs an external codec (JPEG and WEBP pixels,
 16-bit/palette PNG, compressed audio, codec-bound video mp4/webm) is
 metadata-only in the feature path and raises in the resize path;
 swapping in PIL/libav is a one-function change in `decode_image`.
@@ -322,10 +320,9 @@ def decode_image(
 ) -> tuple[str | None, int | None, int | None, np.ndarray | None, int]:
     """(format, width, height, pixels|None, channels). Pixels come back
     for the synthetic format, real 8-bit PNGs (gray/RGB/RGBA), GIF
-    (first frame), lossless WEBP (VP8L) and 24-bit BMP; the remaining
-    variants (JPEG, 16-bit/palette/interlaced PNG, lossy-VP8 WEBP)
-    return metadata only — their pixel decode is the remaining
-    external-codec dependency.
+    (first frame) and 24-bit BMP; the remaining variants (JPEG,
+    16-bit/palette/interlaced PNG, WEBP) return metadata only — their
+    pixel decode is the remaining external-codec dependency.
     WEBP images inside a RIFF container report dimensions from the
     VP8/VP8L/VP8X headers. A payload too short for its header (or, for
     the synthetic format, its pixel body) is a null-dims row; never
@@ -351,15 +348,7 @@ def decode_image(
     if fmt == "riff":
         dims = parse_webp_dims(raw)
         if dims:
-            from theoremsearch_spark.functions.webpcodec import (
-                decode_webp_lossless,
-            )
-
-            d = decode_webp_lossless(raw)
-            if d is not None:  # VP8L: full pixel decode
-                px, c = d
-                return "webp", dims[0], dims[1], px.reshape(-1), c
-            return "webp", dims[0], dims[1], None, 0  # lossy VP8: dims only
+            return "webp", dims[0], dims[1], None, 0  # dims only: no pixel decode
         avi = parse_avi_header(raw)
         if avi:
             # container dims; the frames come from frame_sample
@@ -753,10 +742,10 @@ def extract_image_features(media: DataFrame) -> DataFrame:
 def resize_stub(media: DataFrame, max_side: int) -> DataFrame:
     """Resize: payload → payload (binary→binary mapInPandas). Real
     end-to-end for the synthetic format, 8-bit gray/RGB/RGBA PNG,
-    24-bit BMP (re-emitted as BMP), and GIF and lossless WEBP (decoded
-    to pixels, re-emitted as PNG — a documented format conversion:
-    there is no stdlib GIF/VP8L re-encode). Variants we cannot decode
-    to pixels (JPEG, palette/16-bit PNG, lossy-VP8 WEBP) raise
+    24-bit BMP (re-emitted as BMP), and GIF (decoded to pixels,
+    re-emitted as PNG — a documented format conversion: there is no
+    stdlib GIF re-encode). Variants we cannot decode to pixels (JPEG,
+    palette/16-bit PNG, WEBP) raise
     NotImplementedError — a silent pass-through would be a
     resize that quietly did nothing. Unknown blobs pass through."""
 
@@ -777,9 +766,7 @@ def resize_stub(media: DataFrame, max_side: int) -> DataFrame:
                     )
                 step = max(1, max(w, h) // max_side)
                 img = px[: w * h * c].reshape(h, w, c)[::step, ::step]
-                if fmt in ("png", "gif", "webp"):
-                    # webp (VP8L) re-emits as PNG — a documented format
-                    # conversion, like GIF: no stdlib VP8L encoder
+                if fmt in ("png", "gif"):
                     out.append((int(mid), encode_png(img)))
                 elif fmt == "bmp":
                     out.append((int(mid), encode_bmp(img)))

@@ -27,6 +27,11 @@ from theoremsearch_spark import sidecar
 from theoremsearch_spark.functions.widen import widen_small_input as _widen
 from theoremsearch_spark.operators.relational import t
 from theoremsearch_spark.query import collect_chunks, local_frame
+from theoremsearch_spark.streaming.incremental import (
+    _touched_buckets,
+    _write_keyindex,
+    _write_tombstones,
+)
 
 N_QUERY_VECS = 5
 LSH_BITS = 8
@@ -241,39 +246,8 @@ def ann_ivf_topk(
     tiny and its probe lists are computed driver-side in numpy.
     """
     spark = emb.sparkSession
-    n = emb.count()
-    stride = max(1, n // min(n, KMEANS_SAMPLE))
-    sample = (
-        emb.filter(F.col("vec_id") % stride == 0)
-        .orderBy("vec_id")
-        .limit(KMEANS_SAMPLE)
-        .select("embedding")
-        .collect()
-    )
-    X = np.array([r["embedding"] for r in sample], dtype=np.float64)
-    C = _kmeans_spherical(X, min(n_centroids, len(X)))
-
-    # corpus assignment: one X @ C.T matmul + argmax per Arrow batch
-    # (the minhash_sig_udf pattern). An earlier version built a
-    # per-centroid codegen struct array and array_max'd it — fine at 16
-    # centroids, but the expression tree (and codegen'd method size)
-    # grows LINEARLY with n_centroids, and the thousands of cells a
-    # 10^12-row corpus needs (cells-as-partitions) would blow up plan
-    # size/codegen limits. The vectorized matmul is O(1) plan nodes at
-    # any centroid count; centroids ship once per executor as a
-    # broadcast. The vector's own norm is constant across cell scores,
-    # so argmax over dot(v, unit-centroid) IS the cosine argmax — no
-    # normalization needed corpus-side.
-    from pyspark.sql.functions import pandas_udf
-
-    C_bc = spark.sparkContext.broadcast(C)
-
-    @pandas_udf("int")
-    def cell_of(embs: pd.Series) -> pd.Series:
-        X = np.vstack(embs.to_numpy()).astype(np.float64)
-        return pd.Series((X @ C_bc.value.T).argmax(axis=1).astype(np.int32))
-
-    cells = _widen(emb).withColumn("cell", cell_of("embedding"))
+    _, C = _train_centroids(emb, n_centroids)
+    cells = _assign_cells(_widen(emb), C)
 
     # query probes: numpy, driver-side
     Q = np.array(list(queries_pdf["qvec"]), dtype=np.float64)
@@ -308,10 +282,35 @@ def q_ann_ivf_topk(spark, sf_dir):
     return ann_ivf_topk(emb, qp, dim, k=10).orderBy("query_id", "rnk")
 
 
+def _train_centroids(emb: DataFrame, n_centroids: int) -> tuple[int, np.ndarray]:
+    """(corpus size, unit centroids): the coarse quantizer, trained
+    driver-side on a deterministic stride sample of at most
+    KMEANS_SAMPLE vectors."""
+    n = emb.count()
+    stride = max(1, n // min(n, KMEANS_SAMPLE))
+    sample = (
+        emb.filter(F.col("vec_id") % stride == 0)
+        .orderBy("vec_id")
+        .limit(KMEANS_SAMPLE)
+        .select("embedding")
+        .collect()
+    )
+    X = np.array([r["embedding"] for r in sample], dtype=np.float64)
+    return n, _kmeans_spherical(X, min(n_centroids, len(X)))
+
+
 def _assign_cells(emb: DataFrame, C: np.ndarray) -> DataFrame:
-    """Attach the IVF cell id: one `X @ C.T` argmax per Arrow batch
-    against the broadcast centroids — plan size independent of
-    centroid count (see ann_ivf_topk's inline rationale)."""
+    """Attach the IVF cell id: one `X @ C.T` matmul + argmax per Arrow
+    batch (the minhash_sig_udf pattern). An earlier version built a
+    per-centroid codegen struct array and array_max'd it — fine at 16
+    centroids, but the expression tree (and codegen'd method size)
+    grows LINEARLY with n_centroids, and the thousands of cells a
+    10^12-row corpus needs (cells-as-partitions) would blow up plan
+    size/codegen limits. The vectorized matmul is O(1) plan nodes at
+    any centroid count; centroids ship once per executor as a
+    broadcast. The vector's own norm is constant across cell scores,
+    so argmax over dot(v, unit-centroid) IS the cosine argmax — no
+    normalization needed corpus-side."""
     from pyspark.sql.functions import pandas_udf
 
     C_bc = emb.sparkSession.sparkContext.broadcast(C)
@@ -398,18 +397,11 @@ def _sq8_dequantize(df: DataFrame) -> DataFrame:
     return df.withColumn("embedding", unpack("emb8", "q_scale", "q_offset"))
 
 
-# vec_id → latest-generation key index, hash-partitioned into vb= dirs
-# (the streaming/incremental.py `ub=` keyindex pattern): an upserting
-# batch discovers its PRIOR versions by reading only the buckets its
-# ids hash into, so tombstones stay O(actually-updated ids) — never
-# O(ingested ids) — and the serve-time broadcast stays bounded.
-ANN_KEY_BUCKETS = 64
-
-
-def _vec_bucket(col):
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(ANN_KEY_BUCKETS)).cast("int")
-
-
+# vec_id key index per generation, in the text root's key-index layout
+# (streaming/incremental.py `_write_keyindex`, `vb=` bucket dirs): an
+# upserting batch discovers its PRIOR versions by reading only the
+# buckets its ids hash into, so tombstones stay O(actually-updated ids)
+# — never O(ingested ids) — and the serve-time mask stays bounded.
 # keyindex/gen=G/vb=B and tombstones/gen=G rows, partition columns
 # included; readers declare them, so no footer-inference job runs
 _KEYINDEX_SCHEMA = T.StructType([
@@ -424,17 +416,11 @@ _TOMBSTONE_SCHEMA = T.StructType([
 ])
 
 
-def _write_keyindex(frame: DataFrame, path: str) -> None:
+def _write_vec_keyindex(frame: DataFrame, path: str) -> None:
     """One generation's key index: the frame's vec_ids, stored as long
-    (the type readers declare), in `vb=` bucket dirs."""
-    (
-        frame.select(F.col("vec_id").cast("long").alias("vec_id"))
-        .withColumn("vb", _vec_bucket("vec_id"))
-        .repartition("vb")
-        .write.mode("overwrite")
-        .partitionBy("vb")
-        .parquet(path)
-    )
+    (the type readers declare)."""
+    ids = frame.select(F.col("vec_id").cast("long").alias("vec_id"))
+    _write_keyindex(ids, "vec_id", "vb", path)
 
 
 def _read_ivf_meta(out_dir: str) -> dict:
@@ -491,18 +477,7 @@ def build_ann_index(
 
     if quantize not in (None, "sq8"):
         raise ValueError(f"unknown quantize={quantize!r} (supported: 'sq8')")
-    spark = emb.sparkSession
-    n = emb.count()
-    stride = max(1, n // min(n, KMEANS_SAMPLE))
-    sample = (
-        emb.filter(F.col("vec_id") % stride == 0)
-        .orderBy("vec_id")
-        .limit(KMEANS_SAMPLE)
-        .select("embedding")
-        .collect()
-    )
-    X = np.array([r["embedding"] for r in sample], dtype=np.float64)
-    C = _kmeans_spherical(X, min(n_centroids, len(X)))
+    n, C = _train_centroids(emb, n_centroids)
 
     # a rebuild starts from nothing: per-gen writes would otherwise
     # leave a previous lifecycle's higher-numbered gen dirs around
@@ -528,7 +503,7 @@ def build_ann_index(
         )
 
     def write_keyindex():
-        _write_keyindex(emb, f"{out_dir}/keyindex/gen=0")
+        _write_vec_keyindex(emb, f"{out_dir}/keyindex/gen=0")
 
     # the two writes are independent jobs over the same input — run
     # them concurrently so the key-index job back-fills executor slots
@@ -608,17 +583,11 @@ def _latest_versions(spark, out_dir: str, ids_df: DataFrame, n_gens: int) -> Dat
     """(vec_id, gen) of each id's LATEST committed generation, for the
     ids in `ids_df` only — discovered by reading just the `vb=` key
     buckets the ids hash into, across committed keyindex generations
-    (≤ ANN_KEY_BUCKETS tiny ints to the driver, then a partition-dir
+    (≤ KEY_BUCKETS tiny ints to the driver, then a partition-dir
     read: O(ids/B) of the key index, never a corpus scan)."""
-    touched = {
-        r["vb"]
-        for r in ids_df.select(_vec_bucket("vec_id").alias("vb"))
-        .distinct()
-        .collect()
-    }
     paths = [
         p
-        for b in sorted(touched)
+        for b in _touched_buckets(ids_df, "vec_id")
         for p in _committed_gen_dirs(out_dir, "keyindex", n_gens, leaf=f"vb={b}")
     ]
     if not paths:
@@ -639,40 +608,30 @@ def _latest_versions(spark, out_dir: str, ids_df: DataFrame, n_gens: int) -> Dat
 
 
 def _live_prior_versions(spark, out_dir: str, ids_df: DataFrame, n_gens: int) -> DataFrame:
-    """(vec_id, gen) of each id's latest committed version that is
-    STILL SERVING (not already fully tombstoned by an earlier upsert or
-    delete) — the rows a new upsert/delete must tombstone."""
+    """Tombstone rows (vec_id, upto_gen) for each id's latest committed
+    version that is STILL SERVING (not already fully tombstoned by an
+    earlier upsert or delete) — the rows a new upsert/delete writes
+    (`_tombstone_prior`)."""
     latest = _latest_versions(spark, out_dir, ids_df, n_gens)
     tomb = _visible_tombstones(spark, out_dir, n_gens)
-    if tomb is None:
-        return latest
-    return (
-        latest.join(F.broadcast(tomb), "vec_id", "left")
-        .filter(F.col("upto_gen").isNull() | (F.col("gen") > F.col("upto_gen")))
-        .select("vec_id", "gen")
-    )
+    if tomb is not None:
+        latest = latest.join(F.broadcast(tomb), "vec_id", "left").filter(
+            F.col("upto_gen").isNull() | (F.col("gen") > F.col("upto_gen"))
+        )
+    return latest.select("vec_id", F.col("gen").alias("upto_gen"))
 
 
-def _write_tombstones(spark, out_dir: str, ids_df: DataFrame, gen: int) -> int:
+def _tombstone_prior(spark, out_dir: str, ids_df: DataFrame, gen: int) -> int:
     """Tombstone the live prior versions of `ids_df` as `tombstones/gen=G`
-    rows (vec_id, upto_gen) and return how many were written. The
-    prior-version plan runs ONCE — the write — and the count comes from
-    the written files' parquet footers, so the touched key buckets and
-    the tombstones are read once per call. An empty result leaves no
-    gen=G dir, so a commit without tombstones never publishes a torn
-    attempt's rows."""
-    import shutil
-
-    from theoremsearch_spark.positions import _footer_row_count
-
-    path = f"{out_dir}/tombstones/gen={gen}"
-    _live_prior_versions(spark, out_dir, ids_df, gen).select(
-        "vec_id", F.col("gen").alias("upto_gen")
-    ).write.mode("overwrite").parquet(path)
-    n = _footer_row_count(path) or 0
-    if not n:
-        shutil.rmtree(path, ignore_errors=True)
-    return n
+    and return how many were written. The prior-version plan runs ONCE
+    — the write — and the count comes from the written files
+    (`incremental._write_tombstones`). An empty result leaves no gen=G
+    dir, so a commit without tombstones never publishes a torn attempt's
+    rows."""
+    return _write_tombstones(
+        _live_prior_versions(spark, out_dir, ids_df, gen),
+        f"{out_dir}/tombstones/gen={gen}",
+    )
 
 
 def add_to_ann_index(
@@ -742,12 +701,12 @@ def add_to_ann_index(
             )
 
         def write_keyindex():
-            _write_keyindex(ids_new, f"{out_dir}/keyindex/gen={gen}")
+            _write_vec_keyindex(ids_new, f"{out_dir}/keyindex/gen={gen}")
 
         def find_stale():
             # prior-version lookup reads only COMMITTED generations'
             # key buckets — independent of this gen's in-flight writes
-            replaced["n"] = _write_tombstones(spark, out_dir, ids_new, gen)
+            replaced["n"] = _tombstone_prior(spark, out_dir, ids_new, gen)
 
         # the three pre-commit steps touch disjoint outputs and only
         # committed inputs — overlapping their jobs (guide §2.6) hides
@@ -781,7 +740,7 @@ def delete_from_ann_index(spark, out_dir: str, vec_ids) -> dict:
     )
     meta = _read_ivf_meta(out_dir)
     gen = int(meta["generations"])
-    n_del = _write_tombstones(spark, out_dir, ids_df, gen)
+    n_del = _tombstone_prior(spark, out_dir, ids_df, gen)
     if n_del:
         meta["generations"] = gen + 1
         meta["n_vectors"] = int(meta["n_vectors"]) - int(n_del)
@@ -815,16 +774,13 @@ def compact_ann_index(spark, out_dir: str, last_n: int | None = None) -> dict:
     double-serve a row: the staged generation becomes visible only
     when it replaces the renamed-away span."""
     import os
-    import re
     import shutil
 
     meta = _read_ivf_meta(out_dir)
     n_gens = int(meta["generations"])
     existing = sorted(
-        int(m.group(1))
-        for name in os.listdir(f"{out_dir}/cells")
-        if (m := re.fullmatch(r"gen=(\d+)", name)) and int(m.group(1)) < n_gens
-    ) if os.path.isdir(f"{out_dir}/cells") else []
+        int(p.rsplit("=", 1)[1]) for p in _committed_gen_dirs(out_dir, "cells", n_gens)
+    )
     if last_n is None or last_n >= len(existing):
         merge_gens = existing
         full = True
@@ -833,14 +789,14 @@ def compact_ann_index(spark, out_dir: str, last_n: int | None = None) -> dict:
             return {"compacted": False, "reason": "last_n < 2 merges nothing"}
         merge_gens = existing[-last_n:]
         full = False
-    tomb = _visible_tombstones(spark, out_dir, n_gens)
-    if tomb is None and len(merge_gens) <= 1:
+    mask = _tombstone_mask(spark, out_dir, n_gens)
+    if mask is None and len(merge_gens) <= 1:
         return {"compacted": False, "reason": "single generation, no tombstones"}
     cell_paths = [f"{out_dir}/cells/gen={g}" for g in merge_gens]
     if not cell_paths:
         return {"compacted": False, "reason": "no committed cells"}
     cells = spark.read.option("basePath", f"{out_dir}/cells").parquet(*cell_paths)
-    live = cells if tomb is None else _exclude_tombstoned(cells, tomb)
+    live = cells if mask is None else _exclude_tombstoned_mask(cells, mask)
     n_live = live.count()
     target = n_gens - 1
     stage = f"{out_dir}/.compact"
@@ -852,7 +808,7 @@ def compact_ann_index(spark, out_dir: str, last_n: int | None = None) -> dict:
         .partitionBy("cell")
         .parquet(f"{stage}/cells/gen={target}")
     )
-    _write_keyindex(live, f"{stage}/keyindex/gen={target}")
+    _write_vec_keyindex(live, f"{stage}/keyindex/gen={target}")
     old = f"{out_dir}/.compact.old"
     shutil.rmtree(old, ignore_errors=True)
     os.makedirs(old)
@@ -901,8 +857,8 @@ def live_cells(spark, out_dir: str) -> DataFrame:
     cells = spark.read.option("basePath", f"{out_dir}/cells").parquet(*paths)
     if meta.get("quantize") == "sq8":
         cells = _sq8_dequantize(cells)  # reader view; storage stays int8
-    tomb = _visible_tombstones(spark, out_dir, n_gens)
-    return cells if tomb is None else _exclude_tombstoned(cells, tomb)
+    mask = _tombstone_mask(spark, out_dir, n_gens)
+    return cells if mask is None else _exclude_tombstoned_mask(cells, mask)
 
 
 def _tombstone_mask_artifact(tomb: DataFrame):
@@ -912,8 +868,8 @@ def _tombstone_mask_artifact(tomb: DataFrame):
     into two binary buffers; the driver receives one compact blob per
     partition — never a Row per tombstone — and merge-sorts the
     O(churn) arrays. The vector-store analog of the text engine's
-    PackedDocIdSet serve prep (streaming/incremental._tombstone_artifact):
-    broadcast ONCE by the chunked server, shared by every chunk."""
+    PackedDocIdSet serve prep (streaming/incremental._tombstone_artifact),
+    broadcast by `_tombstone_mask`."""
 
     def pack(batches):
         ids, upto = [], []
@@ -937,12 +893,28 @@ def _tombstone_mask_artifact(tomb: DataFrame):
     return ids[o], upto[o]
 
 
+def _tombstone_mask(spark, out_dir: str, n_gens: int):
+    """The committed generations' tombstones as a BROADCAST packed mask
+    (`_tombstone_mask_artifact`), or None when there are none — built
+    once per serve or compaction, never re-shipped per chunk."""
+    tomb = _visible_tombstones(spark, out_dir, n_gens)
+    mask = None if tomb is None else _tombstone_mask_artifact(tomb)
+    return None if mask is None else spark.sparkContext.broadcast(mask)
+
+
+def _serve_prep(spark, out_dir: str) -> tuple:
+    """(index meta, tombstone mask | None): an ANN search's prep, run
+    once per call and shared by every chunk of a batched one."""
+    meta = _read_ivf_meta(out_dir)
+    return meta, _tombstone_mask(spark, out_dir, int(meta["generations"]))
+
+
 def _exclude_tombstoned_mask(cand: DataFrame, mask_bc) -> DataFrame:
-    """Row-death rule applied from the broadcast packed mask (decoded
-    arrays live once per executor on the broadcast object): a row dies
-    when its id has a tombstone with upto_gen ≥ the row's gen — same
-    semantics as the `_exclude_tombstoned` broadcast join, without
-    re-shipping a local-relation tombstone table in every chunk job."""
+    """The row-death rule, applied from the broadcast packed mask
+    (decoded arrays live once per executor on the broadcast object): a
+    row dies when its id has a tombstone with upto_gen ≥ the row's gen.
+    Every reader of cells (search, live_cells, compaction) excludes
+    tombstoned rows through here."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("boolean")
@@ -959,19 +931,6 @@ def _exclude_tombstoned_mask(cand: DataFrame, mask_bc) -> DataFrame:
     return cand.filter(live("vec_id", "gen"))
 
 
-def _exclude_tombstoned(cand: DataFrame, tomb: DataFrame) -> DataFrame:
-    """Drop candidate rows superseded by the tombstone set: a row dies
-    when its id has a tombstone with upto_gen ≥ the row's gen. Max-
-    aggregated per id first (an id re-upserted N times has N tombstone
-    rows), then broadcast — tombstones are O(updated ids)."""
-    t_max = tomb.groupBy("vec_id").agg(F.max("upto_gen").alias("upto_gen"))
-    return (
-        cand.join(F.broadcast(t_max), "vec_id", "left")
-        .filter(F.col("upto_gen").isNull() | (F.col("gen") > F.col("upto_gen")))
-        .drop("upto_gen")
-    )
-
-
 def ann_ivf_search(
     spark, out_dir: str, queries_pdf, k: int = 10, n_probe: int = N_PROBE,
     where: str | None = None,
@@ -985,8 +944,8 @@ def ann_ivf_search(
     dirs — point-lookup physics for vectors. Scoring is the same
     codegen cosine + per-query window top-k as the in-memory path.
     Generations layered by add/delete are honored: candidates are
-    anti-filtered against the broadcast tombstone set before scoring,
-    so stale/deleted versions never reach the top-k.
+    filtered through the broadcast tombstone mask before scoring, so
+    stale/deleted versions never reach the top-k.
 
     `where` is a SQL predicate over the index's stored metadata columns
     (filter-before-rank, P11 applied to vectors): it lands directly on
@@ -1007,19 +966,15 @@ def ann_ivf_search(
     gains a `wscore` column; `ann_rescored_topk` is the exact oracle
     for the same formula.
 
-    `_prep`: (meta, tombstones) computed ONCE by
-    `ann_ivf_search_batched` and shared across its chunks — the
+    `_prep`: (meta, tombstone mask) from `_serve_prep`, computed ONCE
+    by `ann_ivf_search_batched` and shared across its chunks — the
     serve-prep-runs-once discipline the text side's chunked serving
-    established (topk_all_generations max_batch). The tombstone slot is
-    either a DataFrame (joined JVM-side) or a BROADCAST of the packed
+    established (topk_all_generations max_batch); an unchunked call
+    computes its own. The mask is a BROADCAST of the packed
     (ids, upto_gen) arrays (`_tombstone_mask_artifact`) — packed once,
     shipped once, decoded once per executor; never re-localized per
     chunk."""
-    if _prep is not None:
-        meta, tomb = _prep
-    else:
-        meta = _read_ivf_meta(out_dir)
-        tomb = _visible_tombstones(spark, out_dir, int(meta["generations"]))
+    meta, mask = _prep if _prep is not None else _serve_prep(spark, out_dir)
     n_gens = int(meta["generations"])
     C = np.array(meta["centroids"], dtype=np.float64)
 
@@ -1058,13 +1013,8 @@ def ann_ivf_search(
         # filter-before-rank: lands on the scan node, Catalyst pushes
         # it into the parquet reader of the probed cells
         cells = cells.filter(where)
-    if tomb is not None:
-        from pyspark.broadcast import Broadcast
-
-        if isinstance(tomb, Broadcast):
-            cells = _exclude_tombstoned_mask(cells, tomb)
-        else:
-            cells = _exclude_tombstoned(cells, tomb)
+    if mask is not None:
+        cells = _exclude_tombstoned_mask(cells, mask)
     # ship the UNIT query vectors: cosine then needs only the candidate
     # norm per row (_cosine_unitq) — the query norm is divided out here
     # once instead of per candidate row by codegen
@@ -1143,14 +1093,11 @@ def ann_ivf_search_batched(
     which also fills `chunk_times`."""
     if not max_batch or len(queries_pdf) <= max_batch:
         return ann_ivf_search(spark, out_dir, queries_pdf, k=k, **search_kwargs)
-    meta = _read_ivf_meta(out_dir)
-    tomb = _visible_tombstones(spark, out_dir, int(meta["generations"]))
-    mask = _tombstone_mask_artifact(tomb) if tomb is not None else None
-    mask_bc = spark.sparkContext.broadcast(mask) if mask is not None else None
+    prep = _serve_prep(spark, out_dir)
     return collect_chunks(
         spark,
         lambda chunk: ann_ivf_search(
-            spark, out_dir, chunk, k=k, _prep=(meta, mask_bc), **search_kwargs
+            spark, out_dir, chunk, k=k, _prep=prep, **search_kwargs
         ),
         queries_pdf, max_batch, max_inflight, chunk_times,
     )

@@ -141,13 +141,7 @@ def build_positions(
     # sidecar (∝ corpus: 4.4 M rows at sf0.1) just to report a number.
     # A root the local walk cannot see (a non-local filesystem) falls
     # back to that Spark count rather than reporting 0 rows.
-    n = _footer_row_count(f"{out_dir}/positions")
-    if n is None:
-        n = (
-            docs.sparkSession.read.schema(POSITIONS_SCHEMA)
-            .parquet(f"{out_dir}/positions")
-            .count()
-        )
+    n = _written_row_count(docs.sparkSession, f"{out_dir}/positions", POSITIONS_SCHEMA)
     return {"position_rows": int(n), "buckets": int(n_buckets)}
 
 
@@ -167,6 +161,14 @@ def _footer_row_count(root: str) -> int | None:
                 seen = True
                 total += pq.ParquetFile(os.path.join(dirpath, f)).metadata.num_rows
     return total if seen else None
+
+
+def _written_row_count(spark: SparkSession, root: str, schema: T.StructType) -> int:
+    """Rows just written under `root`: the footer sum, or — where the
+    walk sees no file — a Spark count of `root` read with `schema`
+    (declared: no footer-inference job)."""
+    n = _footer_row_count(root)
+    return n if n is not None else spark.read.schema(schema).parquet(root).count()
 
 
 _VOCAB_SCHEMA = T.StructType([T.StructField("t", T.StringType(), False)])

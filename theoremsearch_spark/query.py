@@ -1409,19 +1409,15 @@ def _docs_touching(
     holds a doc with `doc_id >> shift` in the sorted `keys`, filtered to
     the keys' id span (pushed to row-group statistics). Dirs without an
     `_id_ranges.json` manifest (docs tables a caller built) are read
-    whole. When every dir records the same schema the read declares it,
-    so no footer-inference job runs. No keys, or manifests proving no
-    file holds one, give a statically empty frame (Filter(false) folds
-    to an empty relation: zero file reads). Columns a docs table lacks
-    are left out."""
+    whole, with the schema `_docs_reader` declares. No keys, or
+    manifests proving no file holds one, give a statically empty frame
+    (Filter(false) folds to an empty relation: zero file reads).
+    Columns a docs table lacks are left out."""
     import bisect
     import os
 
     recs = [_load_id_ranges(g.docs) for g in view.gens]
-    schemas = [r and T.StructType.fromJson(r["schema"]) for r in recs]
-    reader = spark.read
-    if schemas[0] is not None and all(s == schemas[0] for s in schemas):
-        reader = reader.schema(schemas[0])
+    reader = _docs_reader(spark, recs)
     paths: list[str] = []
     for g, rec in zip(view.gens, recs) if keys else ():
         if rec is None:
@@ -1440,6 +1436,16 @@ def _docs_touching(
             F.col("doc_id").between(keys[0] << shift, ((keys[-1] + 1) << shift) - 1)
         )
     return docs.select("doc_id", *[c for c in cols if c in docs.columns])
+
+
+def _docs_reader(spark: SparkSession, recs: list[dict | None]):
+    """A reader for docs dirs with these `_id_ranges.json` records: it
+    declares the schema when every record holds the same one, so no
+    footer-inference job runs; otherwise it infers."""
+    schemas = [r and T.StructType.fromJson(r["schema"]) for r in recs]
+    if schemas[0] is not None and all(s == schemas[0] for s in schemas):
+        return spark.read.schema(schemas[0])
+    return spark.read
 
 
 def _load_id_ranges(docs_dir: str) -> dict | None:

@@ -80,96 +80,114 @@ def _tombstone_paths(out_dir: str, gen_ids) -> list[str]:
     ]
 
 
-# url-hash key-index bucket count per generation. Recorded in each
-# generation's manifest (`key_buckets`), so changing the constant only
-# affects NEW generations — readers use the recorded per-gen value.
+# bucket count of every key index: the text root's url index (`ub=`
+# dirs) and the ANN vec_id index (`vb=` dirs, functions/similarity.py)
 KEY_BUCKETS = 64
 
 
-def _url_bucket(col, n_buckets: int):
-    return F.pmod(F.xxhash64(col), F.lit(int(n_buckets))).cast("int")
+def _key_bucket(col):
+    """The key-index bucket of a key column — the one bucket rule of
+    both engines' key indexes."""
+    return F.pmod(F.xxhash64(col), F.lit(KEY_BUCKETS)).cast("int")
 
 
-def _write_keyindex(docs_df: DataFrame, path: str, n_buckets: int = KEY_BUCKETS) -> None:
-    """Persist a generation's url→doc key index: tombstone-shaped rows
-    (doc_id, url, doc_len, terms) hash-partitioned into `ub=<n>` dirs by
-    `pmod(xxhash64(url), n_buckets)` — the same key-hash-bucket layout
-    as sources/sinks.upsert_parquet. An ingesting micro-batch then reads
-    ONLY the buckets its urls hash into (O(u/B) of the corpus instead of
-    an O(corpus) docs scan per batch — the reference analog is a keyed
-    DELETE, not a table scan: /root/reference/ec2/parse_arxiv_papers/
-    __main__.py:269-283). Cost: one extra bounded write per generation
-    (≈ the term_tfs column again), amortized over every future batch
-    that would otherwise rescan this generation."""
-    rows = _tombstone_rows(docs_df).withColumn(
-        "ub", _url_bucket(F.col("url"), n_buckets)
+def _write_keyindex(rows: DataFrame, key: str, part: str, path: str) -> None:
+    """Persist a generation's key index: `rows` hash-partitioned into
+    `<part>=<n>` dirs by `_key_bucket(key)` — the key-hash-bucket layout
+    of sources/sinks.upsert_parquet. A later write then finds a key's
+    prior versions by reading ONLY the buckets its keys hash into
+    (`_touched_buckets`): O(keys / KEY_BUCKETS) of the index instead of
+    an O(corpus) scan per batch — the reference analog is a keyed
+    DELETE, not a table scan (/root/reference/ec2/parse_arxiv_papers/
+    __main__.py:269-283)."""
+    (
+        rows.withColumn(part, _key_bucket(F.col(key)))
+        .repartition(part)
+        .write.mode("overwrite")
+        .partitionBy(part)
+        .parquet(path)
     )
-    rows.repartition("ub").write.mode("overwrite").partitionBy("ub").parquet(path)
 
 
-def _prior_version_rows(
+def _touched_buckets(keys: DataFrame, key: str) -> list[int]:
+    """The key-index buckets the `key` values of `keys` hash into:
+    ≤ KEY_BUCKETS tiny ints to the driver."""
+    return sorted(
+        r["b"]
+        for r in keys.select(_key_bucket(F.col(key)).alias("b")).distinct().collect()
+    )
+
+
+def _write_tombstones(rows: DataFrame, path: str) -> int:
+    """Write tombstone `rows` to `path` and return how many were
+    written, counted from the written files (`positions.
+    _written_row_count`: footers, or a Spark count where the footer walk
+    sees no file — never a silent 0). A dir holding no row is removed,
+    so no generation carries an empty tombstones dir (serving would run
+    the tombstone-artifact job over it for nothing). Both engines write
+    their tombstones through here."""
+    import shutil
+
+    from theoremsearch_spark.positions import _written_row_count
+
+    rows.write.mode("overwrite").parquet(path)
+    n = _written_row_count(rows.sparkSession, path, rows.schema)
+    if not n:
+        shutil.rmtree(path, ignore_errors=True)
+    return n
+
+
+def _live_prior_versions(
     spark: SparkSession, out_dir: str, gens: list[dict], urls_df: DataFrame
 ) -> DataFrame | None:
-    """Tombstone-shaped rows (doc_id, url, doc_len, terms) of every LIVE
-    doc version whose url is in `urls_df`. Generations that wrote a key
-    index are read via exactly the `ub=` bucket dirs the batch's urls
-    hash into (partition-level pruning, no docs-table access);
-    generations without one (roots whose generations a caller built by
-    hand) fall back to the column-pruned docs scan. Returns None ONLY when
-    there are no prior index generations; "live generations exist but
-    none of the requested urls' hash buckets are on disk" is a valid
-    EMPTY result (a small generation materializes only the ub= dirs its
-    urls fall in), not an error — conflating the two made deletes of
-    never-ingested urls crash or succeed depending on which bucket the
-    url hashed to."""
+    """Tombstone rows (TOMBSTONE_SCHEMA) of every LIVE doc version whose
+    url is in `urls_df` — the rows an upsert or delete must tombstone.
+    Read from the key indexes of the committed index generations, only
+    the `ub=` dirs the urls hash into (no docs-table access), then
+    anti-joined once against the committed tombstones: a version an
+    earlier batch tombstoned must not be tombstoned AGAIN — a duplicate
+    would survive a tiered compaction that resolves only the merged
+    generations' tombstones and then double-subtract that doc from the
+    serving stat corrections.
+
+    None ONLY when there are no index generations. A bucket dir absent
+    on disk is not an error (a small generation materializes only the
+    ub= dirs its urls fall in); an index generation without a key index
+    is refused by name — skipping it would leave a second version of
+    its docs serving."""
     import os
 
-    live = [g for g in gens if not g.get("delete_only")]
+    from theoremsearch_spark.query import local_frame
+
+    live = [g["gen"] for g in gens if not g.get("delete_only")]
     if not live:
         return None
-    with_ki = [
-        g for g in live if os.path.isdir(f"{out_dir}/gen_{g['gen']}/keyindex")
-    ]
-    without = [g for g in live if g not in with_ki]
-    parts: list[DataFrame] = []
-    if with_ki:
-        # ≤ max(key_buckets) tiny ints to the driver — which bucket dirs
-        # this batch's urls can possibly live in, per recorded bucket count
-        moduli = sorted({int(g.get("key_buckets", KEY_BUCKETS)) for g in with_ki})
-        touched: dict[int, set[int]] = {
-            m: {
-                r["ub"]
-                for r in urls_df.select(
-                    _url_bucket(F.col("url"), m).alias("ub")
-                ).distinct().collect()
-            }
-            for m in moduli
-        }
-        paths = [
-            p
-            for g in with_ki
-            for b in sorted(touched[int(g.get("key_buckets", KEY_BUCKETS))])
-            if os.path.isdir(p := f"{out_dir}/gen_{g['gen']}/keyindex/ub={b}")
-        ]
-        if paths:
-            parts.append(
-                spark.read.parquet(*paths)
-                .join(F.broadcast(urls_df), "url")
-                .select("doc_id", "url", "doc_len", "terms")
+    for g in live:
+        if not os.path.isdir(f"{out_dir}/gen_{g}/keyindex"):
+            raise ValueError(
+                f"generation {g} under {out_dir} has no keyindex/, so the prior "
+                "versions of its docs cannot be found; compact it into a "
+                "generation that has one, or re-ingest the root"
             )
-    if without:
-        old = spark.read.parquet(
-            *[_docs_path(out_dir, g["gen"]) for g in without]
-        )
-        parts.append(_tombstone_rows(old.join(F.broadcast(urls_df), "url")))
-    if not parts:
-        from theoremsearch_spark.query import local_frame
-
+    touched = _touched_buckets(urls_df, "url")
+    paths = [
+        p
+        for g in live
+        for b in touched
+        if os.path.isdir(p := f"{out_dir}/gen_{g}/keyindex/ub={b}")
+    ]
+    if not paths:
         return local_frame(spark, TOMBSTONE_SCHEMA)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    rows = (
+        spark.read.schema(TOMBSTONE_SCHEMA).parquet(*paths)
+        .join(F.broadcast(urls_df), "url")
+        .select(*TOMBSTONE_SCHEMA.fieldNames())
+    )
+    tomb_paths = _tombstone_paths(out_dir, [g["gen"] for g in gens])
+    if tomb_paths:
+        dead = spark.read.schema(TOMBSTONE_SCHEMA).parquet(*tomb_paths)
+        rows = rows.join(dead.select("doc_id"), "doc_id", "left_anti")
+    return rows
 
 
 def commit_generation(
@@ -181,7 +199,6 @@ def commit_generation(
     id_end: int | None = None,
     delete_only: bool = False,
     filter_cols: list[str] | None = None,
-    key_buckets: int | None = None,
 ) -> None:
     """`id_end` = exclusive doc_id high-water mark of this generation.
     Defaults to base + n_docs (dense streamed batches). Compaction MUST
@@ -205,8 +222,6 @@ def commit_generation(
         rec["delete_only"] = True
     if filter_cols is not None:
         rec["filter_cols"] = list(filter_cols)
-    if key_buckets is not None:
-        rec["key_buckets"] = int(key_buckets)
     sidecar.write_json(f"{out_dir}/gens/gen_{gen}.json", rec)
 
 
@@ -301,11 +316,14 @@ def compact_generations(
         gens = all_gens
     if not [g for g in gens if not g.get("delete_only")]:
         return {"compacted": False, "generations": len(all_gens)}
+    from theoremsearch_spark.query import _docs_reader, _load_id_ranges
+
     docs = None
     for g in gens:
         if g.get("delete_only"):
             continue
-        part = spark.read.parquet(_docs_path(out_dir, g["gen"]))
+        path = _docs_path(out_dir, g["gen"])
+        part = _docs_reader(spark, [_load_id_ranges(path)]).parquet(path)
         docs = part if docs is None else docs.unionByName(part)
     # Tombstone resolution — only the MERGED generations' tombstones are
     # touched (no cross-generation file surgery, so the one-rename
@@ -343,9 +361,11 @@ def compact_generations(
     )
     from theoremsearch_spark.stats import write_id_range_manifest
 
+    from theoremsearch_spark.positions import _written_row_count
+
     write_id_range_manifest(f"{new_dir}/docs", docs.schema)
     docs = spark.read.schema(docs.schema).parquet(f"{new_dir}/docs")
-    n = docs.count()
+    n = _written_row_count(spark, f"{new_dir}/docs", docs.schema)
     # preserve filter-term indexing across the rewrite: when every
     # merged generation RECORDED its filter_cols, re-derive the same
     # posting lists (the intersection — they should be identical) for
@@ -368,10 +388,9 @@ def compact_generations(
     # carry the url key index forward: the compacted generation answers
     # future upsert batches' prior-version lookups from bucket reads too.
     # Hand-built roots whose docs never stored url/term_tfs can't build
-    # one — they stay on the pruned-docs-scan fallback.
-    has_keyindex = {"url", "term_tfs"} <= set(docs.columns)
-    if has_keyindex:
-        _write_keyindex(docs, f"{new_dir}/keyindex")
+    # one (and cannot be upserted into or deleted from)
+    if {"url", "term_tfs"} <= set(docs.columns):
+        _write_keyindex(_tombstone_rows(docs), "url", "ub", f"{new_dir}/keyindex")
     # ALWAYS record what the compacted index actually carries — when the
     # merged generations were unrecorded (hand-built roots whose
     # filter_terms never persisted to their docs tables), the rebuild
@@ -379,14 +398,13 @@ def compact_generations(
     # later filtered query fail LOUDLY at the serving guard instead of
     # silently returning empty/partial results
     if carried is not None:
-        carried.write.mode("overwrite").parquet(f"{new_dir}/tombstones")
+        _write_tombstones(carried, f"{new_dir}/tombstones")
     commit_generation(
         out_dir, new_gen, base=0, n_docs=n, replaces=[g["gen"] for g in gens],
         # post-drop count understates the id range — preserve the inputs'
         # high-water mark so future batch ids never collide with live docs
         id_end=max(int(g["id_end"]) for g in gens),
         filter_cols=built_fcols,
-        key_buckets=KEY_BUCKETS if has_keyindex else None,
     )
     return {"compacted": True, "generation": new_gen, "n_docs": n,
             "replaced": [g["gen"] for g in gens]}
@@ -490,6 +508,7 @@ TOMBSTONE_SCHEMA = T.StructType(
         T.StructField("terms", T.ArrayType(T.StringType(), True), True),
     ]
 )
+_URL_SCHEMA = T.StructType([T.StructField("url", T.StringType(), True)])
 
 
 def _tombstone_rows(docs_df: DataFrame) -> DataFrame:
@@ -530,27 +549,21 @@ def delete_documents(spark: SparkSession, out_dir: str, urls) -> dict:
 
     import pandas as pd
 
+    from theoremsearch_spark.query import local_frame
+
     urls = list(urls)
     if not urls:
         return {"generation": None, "deleted": 0}
     gens = sorted(_generations(spark, out_dir), key=lambda g: g["gen"])
     if not gens:
         raise ValueError(f"no committed generations under {out_dir}")
-    url_df = spark.createDataFrame(pd.DataFrame({"url": urls}))
-    # same pruned lookup as upsert ingestion: key-index bucket reads for
-    # generations that have one, docs-scan fallback otherwise
-    dead = _prior_version_rows(spark, out_dir, gens, url_df)
+    url_df = local_frame(spark, _URL_SCHEMA, pd.DataFrame({"url": urls}))
+    dead = _live_prior_versions(spark, out_dir, gens, url_df)
     if dead is None:
         raise ValueError(f"only delete-only generations under {out_dir}")
-    # already-tombstoned versions must not be re-corrected
-    tomb_paths = _tombstone_paths(out_dir, [g["gen"] for g in gens])
-    if tomb_paths:
-        prior = spark.read.schema(TOMBSTONE_SCHEMA).parquet(*tomb_paths).select("doc_id")
-        dead = dead.join(prior, "doc_id", "left_anti")
     new_gen = _next_negative_gen(out_dir)
     gen_dir = f"{out_dir}/gen_{new_gen}"
-    dead.write.mode("overwrite").parquet(f"{gen_dir}/tombstones")
-    n_dead = spark.read.schema(TOMBSTONE_SCHEMA).parquet(f"{gen_dir}/tombstones").count()
+    n_dead = _write_tombstones(dead, f"{gen_dir}/tombstones")
     if not n_dead:
         # nothing newly dead → no generation: empty delete-only commits
         # would grow the manifest forever, one per no-op run
@@ -561,6 +574,56 @@ def delete_documents(spark: SparkSession, out_dir: str, urls) -> dict:
         id_end=_next_free_doc_id(out_dir), delete_only=True,
     )
     return {"generation": new_gen, "deleted": n_dead}
+
+
+def _append_generation(
+    spark: SparkSession,
+    out_dir: str,
+    gen: int,
+    documents: DataFrame,
+    *,
+    filter_cols: list[str] | None = None,
+    positions: bool = False,
+    **build_kwargs,
+) -> None:
+    """Write the (non-empty) `documents` as generation `gen` of the root
+    at `out_dir` and commit it: out_dir/gen_<gen>/{docs,index,keyindex}
+    with doc_ids from the root's next free id, plus a positions sidecar
+    when `positions`. Upsert semantics (the reference's replace-document
+    — DELETE WHERE paper_id IN batch + insert, /root/reference/ec2/
+    parse_arxiv_papers/__main__.py:269-283): the live prior versions of
+    every url the batch re-ingests are TOMBSTONED in gen_<gen>/tombstones.
+    A tombstone row carries (doc_id, doc_len, distinct terms) so serving
+    corrects N/avgdl/df exactly without re-reading old docs — LSM
+    delete-tombstone physics; compaction drops the bodies. `filter_cols`
+    are indexed as filter-term posting lists and recorded."""
+    from theoremsearch_spark.build import build_index
+    from theoremsearch_spark.stats import ID_RANGES_MANIFEST, prepare_docs
+
+    gens = _generations(spark, out_dir)
+    # resolved first, so a root whose prior versions cannot be found is
+    # refused before anything is written
+    dead = _live_prior_versions(spark, out_dir, gens, documents.select("url").distinct())
+    base = _next_free_doc_id(out_dir)
+    gen_dir = f"{out_dir}/gen_{gen}"
+    docs = prepare_docs(documents, gen_dir, id_base=base)
+    # prepare_docs has verified that the ids tile [base, base + n)
+    # densely, so the recorded per-file spans sum to n — no count job
+    spans = sidecar.require_json(f"{gen_dir}/docs/{ID_RANGES_MANIFEST}")["files"]
+    n = sum(int(f["hi"]) - int(f["lo"]) + 1 for f in spans)
+    docs, fcols = _with_filter_terms(docs, filter_cols)
+    build_index(docs, f"{gen_dir}/index", resume=False, **build_kwargs)
+    if positions:
+        # per-generation positions sidecar: phrase_topk_all_generations
+        # verifies adjacency without doc fetch when EVERY committed
+        # generation carries one
+        from theoremsearch_spark.positions import build_positions
+
+        build_positions(docs, f"{gen_dir}/index")
+    _write_keyindex(_tombstone_rows(docs), "url", "ub", f"{gen_dir}/keyindex")
+    if dead is not None:
+        _write_tombstones(dead, f"{gen_dir}/tombstones")
+    commit_generation(out_dir, gen, base, n, filter_cols=fcols)
 
 
 def incremental_index(
@@ -574,10 +637,11 @@ def incremental_index(
 ):
     """Stream documents (parquet files landing in input_dir) into an
     ever-growing index at out_dir. Each micro-batch becomes one
-    generation: out_dir/gen_<id>/{docs,index} — append-only, atomic per
-    batch, replayable from the streaming checkpoint. doc_ids are offset
-    by the running corpus size (gens manifest), so generations share one
-    id space and merge at query time like salted segments do.
+    generation (`_append_generation`): out_dir/gen_<id>/{docs,index} —
+    append-only, atomic per batch, replayable from the streaming
+    checkpoint. doc_ids are offset by the root's id high-water mark
+    (gens manifest), so generations share one id space and merge at
+    query time like salted segments do.
 
     `filter_cols`: metadata columns indexed as filter-term posting lists
     (col=value — reference R3), recorded in each generation's manifest;
@@ -585,9 +649,6 @@ def incremental_index(
     rejects filters any generation didn't index. Unknown column names
     are rejected HERE, at ingest time: silently narrowing would only
     surface days later as an unanswerable filter."""
-    from theoremsearch_spark.build import build_index
-    from theoremsearch_spark.stats import prepare_docs
-
     known = {f.name for f in DOCUMENTS_SCHEMA.fields} - {"html", "text"}
     bad = [c for c in (filter_cols or ()) if c not in known]
     if bad:
@@ -604,54 +665,9 @@ def incremental_index(
         # (its docs live inside the compacted generation)
         if any(g["gen"] == batch_id for g in _raw_generations(out_dir)):
             return  # replay of a committed batch — idempotent skip
-        gens = _generations(spark, out_dir)
-        base = _next_free_doc_id(out_dir)
-        gen_dir = f"{out_dir}/gen_{batch_id}"
-        docs = prepare_docs(batch_df, gen_dir, id_base=base)
-        n = docs.count()
-        docs, fcols = _with_filter_terms(docs, filter_cols)
-        build_index(docs, f"{gen_dir}/index", resume=False, **build_kwargs)
-        if positions:
-            # per-generation positions sidecar: phrase_topk_all_
-            # generations verifies adjacency without doc fetch when
-            # EVERY committed generation carries one
-            from theoremsearch_spark.positions import build_positions
-
-            build_positions(docs, f"{gen_dir}/index")
-        # url→doc key index for THIS generation: future batches that
-        # re-ingest any of these urls read only the hash buckets their
-        # urls land in, never this generation's docs table
-        _write_keyindex(docs, f"{gen_dir}/keyindex")
-        # upsert semantics (the reference's S12 replace-document —
-        # DELETE WHERE paper_id IN batch + insert, /root/reference/
-        # ec2/parse_arxiv_papers/__main__.py:269-283): a re-ingested
-        # url TOMBSTONES its older doc versions. The tombstone row
-        # carries (doc_id, doc_len, distinct terms) so serving can
-        # correct N/avgdl/df exactly without re-reading old docs —
-        # LSM delete-tombstone physics; compaction drops the bodies.
-        # Prior versions come from the generations' url-hash KEY
-        # INDEXES (O(u/B) bucket reads per batch), not a docs scan —
-        # an O(corpus) pass per micro-batch at 100 TB otherwise.
-        batch_urls = docs.select("url").distinct()
-        dead = _prior_version_rows(spark, out_dir, gens, batch_urls)
-        if dead is not None:
-            # anti-join prior tombstones: a doc version tombstoned by an
-            # earlier batch must not be tombstoned AGAIN — a duplicate
-            # would survive a tiered compaction that resolves only the
-            # merged generations' tombstone files and then double-
-            # subtract that doc from the serving stat corrections
-            prior_paths = _tombstone_paths(out_dir, [g["gen"] for g in gens])
-            if prior_paths:
-                prior = (
-                    spark.read.schema(TOMBSTONE_SCHEMA)
-                    .parquet(*prior_paths)
-                    .select("doc_id")
-                )
-                dead = dead.join(prior, "doc_id", "left_anti")
-            dead.write.mode("overwrite").parquet(f"{gen_dir}/tombstones")
-        commit_generation(
-            out_dir, batch_id, base, n, filter_cols=fcols,
-            key_buckets=KEY_BUCKETS,
+        _append_generation(
+            spark, out_dir, batch_id, batch_df,
+            filter_cols=filter_cols, positions=positions, **build_kwargs,
         )
 
     stream = (
