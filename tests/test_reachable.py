@@ -23,11 +23,6 @@ EXEMPT = {
     # its own plans
     f"{PKG}.plans": "package of plans.inspect",
     f"{PKG}.plans.inspect": "test-support plan inspection",
-    # the HTML heading/numbering/label unit extractor: the harness unit
-    # entries (operators/unit_queries.py) chunk plain text by token
-    # windows instead, so only tests/test_units.py runs it. Open item:
-    # serve it from an entry or delete it with its tests.
-    f"{PKG}.units": "test-only, open item",
 }
 
 

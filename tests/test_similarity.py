@@ -574,6 +574,7 @@ def test_ann_delete_evaluates_prior_versions_once(spark, emb_frames, tmp_path):
         delete_from_ann_index,
     )
     from theoremsearch_spark.query import local_frame
+    from theoremsearch_spark.streaming.incremental import _listed_buckets
 
     emb, _ = emb_frames
     out = str(tmp_path / "ivf_del_jobs")
@@ -584,7 +585,8 @@ def test_ann_delete_evaluates_prior_versions_once(spark, emb_frames, tmp_path):
 
     def plan_once():
         ids_df = local_frame(spark, _VEC_IDS_SCHEMA, pd.DataFrame({"vec_id": ids}))
-        _live_prior_versions(spark, out, ids_df, gen).write.parquet(
+        buckets = _listed_buckets(ids_df, "vec_id")
+        _live_prior_versions(spark, out, ids_df, gen, buckets).write.parquet(
             str(tmp_path / "plan_once")
         )
 

@@ -370,6 +370,7 @@ def test_upsert_ingest_reads_only_url_buckets(spark, upsert_index):
         _generations,
         _key_bucket,
         _live_prior_versions,
+        _touched_buckets,
     )
 
     out = upsert_index["out"]
@@ -382,7 +383,7 @@ def test_upsert_ingest_reads_only_url_buckets(spark, upsert_index):
     # (2 stored versions each: gen0 stale and tombstoned + gen1 current)
     urls = full["url"].iloc[:5].tolist() + full["url"].iloc[100:102].tolist()
     urls_df = spark.createDataFrame(pd.DataFrame({"url": urls}))
-    rows = _live_prior_versions(spark, out, gens, urls_df)
+    rows = _live_prior_versions(spark, out, gens, urls_df, _touched_buckets(urls_df, "url"))
 
     touched = {
         r["ub"]
@@ -473,6 +474,7 @@ def test_compacted_generation_carries_keyindex(spark, upsert_index):
     from theoremsearch_spark.streaming.incremental import (
         _generations,
         _live_prior_versions,
+        _touched_buckets,
         compact_generations,
     )
 
@@ -493,7 +495,7 @@ def test_compacted_generation_carries_keyindex(spark, upsert_index):
     urls_df = spark.createDataFrame(
         pd.DataFrame({"url": upsert_index["full"]["url"].iloc[100:103].tolist()})
     )
-    rows = _live_prior_versions(spark, copy, gens, urls_df)
+    rows = _live_prior_versions(spark, copy, gens, urls_df, _touched_buckets(urls_df, "url"))
     assert all("/keyindex/ub=" in f for f in rows.inputFiles())
     # post-compaction: exactly one live version per url remains stored
     assert rows.count() == 3
@@ -1330,7 +1332,9 @@ def test_write_path_job_counts(spark, tmp_path):
     index with a declared schema and anti-joins the tombstones once,
     tombstones are counted from their footers, the generation size
     comes from the verified id spans, and compaction reads the merged
-    docs with their recorded schema."""
+    docs with their recorded schema. prepare_docs proves its row count
+    from the id-span footers, build_index reads its postings with the
+    declared schema, and a delete finds its key buckets on the driver."""
     from tests.test_serve_fixed_costs import jobs_launched
     from theoremsearch_spark.streaming.incremental import (
         compact_generations,
@@ -1355,5 +1359,7 @@ def test_write_path_job_counts(spark, tmp_path):
     counts = {"upsert": n_upsert, "delete": n_delete, "compact": n_compact}
     print("write-path jobs", counts)
     # 31, 8 and 28 jobs when ingest counted its docs, the lookup
-    # inferred the key-index schema and a delete re-read its tombstones
-    assert n_upsert <= 29 and n_delete <= 6 and n_compact <= 26, counts
+    # inferred the key-index schema and a delete re-read its tombstones;
+    # 28, 5 and 24 with prepare_docs' count job, the inferred postings
+    # read and the touched-bucket distinct on deletes
+    assert n_upsert <= 25 and n_delete <= 3 and n_compact <= 23, counts

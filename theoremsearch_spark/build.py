@@ -511,8 +511,9 @@ def build_index(
             "two distinct terms share an id; widen the id or rehash"
         )
 
-    # manifest: per-bucket lineage + metrics from the blocks just written
-    written = spark.read.parquet(f"{out_dir}/postings").filter(
+    # manifest: per-bucket lineage + metrics from the blocks just written,
+    # read with their declared schema (no footer-inference job)
+    written = spark.read.schema(POSTINGS_SCHEMA).parquet(f"{out_dir}/postings").filter(
         F.col("bucket").isin([int(x) for x in pending])
     )
     manifest = (

@@ -28,6 +28,7 @@ from theoremsearch_spark.functions.widen import widen_small_input as _widen
 from theoremsearch_spark.operators.relational import t
 from theoremsearch_spark.query import collect_chunks, local_frame
 from theoremsearch_spark.streaming.incremental import (
+    _listed_buckets,
     _touched_buckets,
     _write_keyindex,
     _write_tombstones,
@@ -579,15 +580,18 @@ def _visible_tombstones(spark, out_dir: str, n_gens: int) -> DataFrame | None:
     return tomb.groupBy("vec_id").agg(F.max("upto_gen").alias("upto_gen"))
 
 
-def _latest_versions(spark, out_dir: str, ids_df: DataFrame, n_gens: int) -> DataFrame:
+def _latest_versions(
+    spark, out_dir: str, ids_df: DataFrame, n_gens: int, buckets: list[int]
+) -> DataFrame:
     """(vec_id, gen) of each id's LATEST committed generation, for the
     ids in `ids_df` only — discovered by reading just the `vb=` key
-    buckets the ids hash into, across committed keyindex generations
-    (≤ KEY_BUCKETS tiny ints to the driver, then a partition-dir
-    read: O(ids/B) of the key index, never a corpus scan)."""
+    `buckets` the ids hash into (`_touched_buckets`, or
+    `_listed_buckets` for a driver-side list: ≤ KEY_BUCKETS tiny ints),
+    across committed keyindex generations (a partition-dir read:
+    O(ids/B) of the key index, never a corpus scan)."""
     paths = [
         p
-        for b in _touched_buckets(ids_df, "vec_id")
+        for b in buckets
         for p in _committed_gen_dirs(out_dir, "keyindex", n_gens, leaf=f"vb={b}")
     ]
     if not paths:
@@ -607,12 +611,14 @@ def _latest_versions(spark, out_dir: str, ids_df: DataFrame, n_gens: int) -> Dat
     )
 
 
-def _live_prior_versions(spark, out_dir: str, ids_df: DataFrame, n_gens: int) -> DataFrame:
+def _live_prior_versions(
+    spark, out_dir: str, ids_df: DataFrame, n_gens: int, buckets: list[int]
+) -> DataFrame:
     """Tombstone rows (vec_id, upto_gen) for each id's latest committed
     version that is STILL SERVING (not already fully tombstoned by an
     earlier upsert or delete) — the rows a new upsert/delete writes
     (`_tombstone_prior`)."""
-    latest = _latest_versions(spark, out_dir, ids_df, n_gens)
+    latest = _latest_versions(spark, out_dir, ids_df, n_gens, buckets)
     tomb = _visible_tombstones(spark, out_dir, n_gens)
     if tomb is not None:
         latest = latest.join(F.broadcast(tomb), "vec_id", "left").filter(
@@ -621,15 +627,18 @@ def _live_prior_versions(spark, out_dir: str, ids_df: DataFrame, n_gens: int) ->
     return latest.select("vec_id", F.col("gen").alias("upto_gen"))
 
 
-def _tombstone_prior(spark, out_dir: str, ids_df: DataFrame, gen: int) -> int:
-    """Tombstone the live prior versions of `ids_df` as `tombstones/gen=G`
-    and return how many were written. The prior-version plan runs ONCE
-    — the write — and the count comes from the written files
+def _tombstone_prior(
+    spark, out_dir: str, ids_df: DataFrame, gen: int, buckets: list[int]
+) -> int:
+    """Tombstone the live prior versions of `ids_df` (key `buckets` as
+    in `_latest_versions`) as `tombstones/gen=G` and return how many
+    were written. The prior-version plan runs ONCE — the write — and
+    the count comes from the written files
     (`incremental._write_tombstones`). An empty result leaves no gen=G
     dir, so a commit without tombstones never publishes a torn attempt's
     rows."""
     return _write_tombstones(
-        _live_prior_versions(spark, out_dir, ids_df, gen),
+        _live_prior_versions(spark, out_dir, ids_df, gen, buckets),
         f"{out_dir}/tombstones/gen={gen}",
     )
 
@@ -706,7 +715,9 @@ def add_to_ann_index(
         def find_stale():
             # prior-version lookup reads only COMMITTED generations'
             # key buckets — independent of this gen's in-flight writes
-            replaced["n"] = _tombstone_prior(spark, out_dir, ids_new, gen)
+            replaced["n"] = _tombstone_prior(
+                spark, out_dir, ids_new, gen, _touched_buckets(ids_new, "vec_id")
+            )
 
         # the three pre-commit steps touch disjoint outputs and only
         # committed inputs — overlapping their jobs (guide §2.6) hides
@@ -740,7 +751,7 @@ def delete_from_ann_index(spark, out_dir: str, vec_ids) -> dict:
     )
     meta = _read_ivf_meta(out_dir)
     gen = int(meta["generations"])
-    n_del = _tombstone_prior(spark, out_dir, ids_df, gen)
+    n_del = _tombstone_prior(spark, out_dir, ids_df, gen, _listed_buckets(ids_df, "vec_id"))
     if n_del:
         meta["generations"] = gen + 1
         meta["n_vectors"] = int(meta["n_vectors"]) - int(n_del)

@@ -3,13 +3,12 @@
 The reference's searchable row is the extracted unit, not the document
 (`theorem(theorem_id, paper_id, name, body, label)`,
 /root/reference/rds_schema.sql:21-31; extractor shape
-/root/reference/ec2/parse_papers/latex_parse.py:395-417). The HTML
-extractor with headings/numbering/labels lives in
-theoremsearch_spark/units.py (pytest-locked); the driver's `documents`
-table is plain text, so the harness unit rule is deterministic
+ec2/parse_papers/latex_parse.py:395-417 of the same reference). The
+`documents` table is plain text, so the unit rule is deterministic
 token-window chunking — fully SQL-expressible, giving a DuckDB oracle
 for BOTH the one-row→many-rows explode (U3) and unit-level BM25
-rank-identity.
+rank-identity. A unit is indexed by the same `build_index` as a
+document, keyed by its composite unit_id.
 
 The Spark side is pure JVM column work: split → transform/slice →
 posexplode — no Python, no shuffle for the explode itself.

@@ -122,6 +122,8 @@ def prepare_docs(
              footer metadata + partition planning) → cumulative offsets
       job 2  extract+tokenize+assign in a single mapInPandas:
              doc_id = offset[partition] + row_index_within_partition
+    then the written files' parquet footers prove the ids dense and the
+    row count right, and give the `_id_ranges.json` spans — no job.
 
     Determinism: Spark's file-partition planning is a pure function of
     (files, maxPartitionBytes conf), and row order within a parquet
@@ -240,59 +242,45 @@ def prepare_docs(
     docs = src.mapInPandas(extract_assign, schema=out_schema)
     docs.write.mode("overwrite").parquet(f"{out_dir}/docs")
     out = spark.read.schema(out_schema).parquet(f"{out_dir}/docs")
-    n_written = out.count()  # parquet-footer count — no data read
     expected = acc - int(id_base)
-    if n_written != expected:
-        raise RuntimeError(
-            f"doc_id assignment drift: counted {expected} rows but wrote "
-            f"{n_written} — partition planning changed between jobs"
-        )
-    # count alone cannot see duplicate ids (right total, wrong values),
-    # and min/max misses compensating duplicate+gap drift in interior
-    # partitions. Exact check with ZERO data read: each task writes a
-    # consecutive ascending id run, so every parquet row group's
-    # (min, max, rows) must satisfy rows == max-min+1 and the sorted
-    # row-group intervals must tile [id_base, id_base+expected) exactly.
-    # Any cross-partition duplicate overlaps two intervals; any gap
-    # breaks the tiling — both caught from footer statistics alone.
-    # The same footer walk yields the per-FILE id-range manifest
-    # (_id_ranges.json) that serving's metadata lookups use for
-    # file-level pruning — see query.doc_rows.
-    if expected:
-        _assert_dense_ids_from_footers(out, f"{out_dir}/docs", int(id_base), expected)
-        write_id_range_manifest(f"{out_dir}/docs", out_schema)
+    # Exact check with ZERO data read: each task writes a consecutive
+    # ascending id run, so every parquet row group's (min, max, rows)
+    # must satisfy rows == max-min+1 and the sorted row-group intervals
+    # must tile [id_base, id_base+expected) exactly. That proves the row
+    # count too (no count job): any cross-partition duplicate overlaps
+    # two intervals, any gap or missing row breaks the tiling. The same
+    # footer walk yields the per-FILE id-range manifest (_id_ranges.json)
+    # that serving's metadata lookups use for file-level pruning — see
+    # query.doc_rows.
+    groups = footer_id_groups(f"{out_dir}/docs")
+    if groups is None:
+        _assert_dense_ids_by_aggregate(out, int(id_base), expected)
+    else:
+        _assert_ids_tile(groups, int(id_base), expected)
+        if expected:
+            write_id_range_manifest(f"{out_dir}/docs", out_schema, groups)
     return out
 
 
 ID_RANGES_MANIFEST = "_id_ranges.json"
 
 
-def write_id_range_manifest(docs_path: str, schema: T.StructType) -> bool:
-    """Record each parquet file's [min, max] doc_id span (footer stats
-    only — zero data read) and the table's `schema` as `_id_ranges.json`
-    inside the docs dir (underscore prefix: invisible to Spark's parquet
-    listing); lookups read the table with that schema instead of
-    inferring it from footers, a Spark job per read. Because
-    prepare_docs writes ids ascending per task, files cover disjoint
-    contiguous ranges — the manifest turns a k·Q-hit metadata lookup
-    into reads of ONLY the files containing hit ids, instead of a
-    global [min, max] span scan that degenerates to the whole table
-    when hits spread across the id space (they do, at large Q). The
-    overwrite write that replaces the docs also deletes the manifest,
-    so a stale manifest cannot survive a rewrite. Returns False (no
-    manifest) when any file lacks min/max statistics.
-
-    At 10^12 docs the manifest is millions of entries — still a
-    driver-tractable sidecar (tens of MB), and the ranges are sorted so
-    lookup stays a binary search; past that, store it as a parquet
-    table and broadcast-join instead."""
+def footer_id_groups(path: str) -> dict[str, list[tuple[int, int, int]]] | None:
+    """Each parquet file of the docs dir `path` → its row groups'
+    (min doc_id, max doc_id, rows), from footer statistics alone (zero
+    data read). None when a row group lacks min/max statistics, or when
+    the walk sees no file (the dir is not on the local filesystem): the
+    caller then checks with Spark."""
     import glob as _glob
     import os
 
     import pyarrow.parquet as pq
 
-    files = []
-    for f in sorted(_glob.glob(f"{docs_path}/*.parquet")):
+    paths = sorted(_glob.glob(f"{path}/*.parquet"))
+    if not paths:
+        return None
+    files = {}
+    for f in paths:
         md = pq.ParquetFile(f).metadata
         if not md.num_row_groups:
             continue
@@ -300,14 +288,44 @@ def write_id_range_manifest(docs_path: str, schema: T.StructType) -> bool:
             i for i in range(md.num_columns)
             if md.row_group(0).column(i).path_in_schema == "doc_id"
         )
-        lo = hi = None
+        groups = []
         for rg in range(md.num_row_groups):
             st = md.row_group(rg).column(idx).statistics
             if st is None or not st.has_min_max:
-                return False
-            lo = int(st.min) if lo is None else min(lo, int(st.min))
-            hi = int(st.max) if hi is None else max(hi, int(st.max))
-        files.append({"file": os.path.basename(f), "lo": lo, "hi": hi})
+                return None
+            groups.append((int(st.min), int(st.max), int(md.row_group(rg).num_rows)))
+        files[os.path.basename(f)] = groups
+    return files
+
+
+def write_id_range_manifest(
+    docs_path: str, schema: T.StructType, groups: dict | None
+) -> bool:
+    """Record each parquet file's [min, max] doc_id span (from the
+    footer walk `groups`, `footer_id_groups`) and the table's `schema`
+    as `_id_ranges.json` inside the docs dir (underscore prefix:
+    invisible to Spark's parquet listing); lookups read the table with
+    that schema instead of inferring it from footers, a Spark job per
+    read. Because prepare_docs writes ids ascending per task, files
+    cover disjoint contiguous ranges — the manifest turns a k·Q-hit
+    metadata lookup into reads of ONLY the files containing hit ids,
+    instead of a global [min, max] span scan that degenerates to the
+    whole table when hits spread across the id space (they do, at large
+    Q). The overwrite write that replaces the docs also deletes the
+    manifest, so a stale manifest cannot survive a rewrite. Returns
+    False (no manifest) when `groups` is None (a file without min/max
+    statistics).
+
+    At 10^12 docs the manifest is millions of entries — still a
+    driver-tractable sidecar (tens of MB), and the ranges are sorted so
+    lookup stays a binary search; past that, store it as a parquet
+    table and broadcast-join instead."""
+    if groups is None:
+        return False
+    files = [
+        {"file": f, "lo": min(g[0] for g in gs), "hi": max(g[1] for g in gs)}
+        for f, gs in groups.items()
+    ]
     # as Spark reads parquet back: every column nullable
     read_schema = T.StructType([T.StructField(f.name, f.dataType, True) for f in schema])
     sidecar.write_json(
@@ -317,33 +335,9 @@ def write_id_range_manifest(docs_path: str, schema: T.StructType) -> bool:
     return True
 
 
-def _assert_dense_ids_from_footers(df: DataFrame, path: str, id_base: int, expected: int) -> None:
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    intervals: list[tuple[int, int, int]] = []
-    for f in sorted(_glob.glob(f"{path}/*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        idx = next(
-            i for i in range(md.num_columns)
-            if md.row_group(0).column(i).path_in_schema == "doc_id"
-        ) if md.num_row_groups else 0
-        for rg in range(md.num_row_groups):
-            col = md.row_group(rg).column(idx)
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                # stats disabled — fall back to a (weaker) range aggregate
-                rng = df.agg(
-                    F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-                ).collect()[0]
-                if int(rng["lo"]) != id_base or int(rng["hi"]) != id_base + expected - 1:
-                    raise RuntimeError("doc_id assignment drift (range check)")
-                return
-            intervals.append((int(st.min), int(st.max), int(md.row_group(rg).num_rows)))
-    intervals.sort()
+def _assert_ids_tile(groups: dict, id_base: int, expected: int) -> None:
     pos = id_base
-    for lo, hi, n in intervals:
+    for lo, hi, n in sorted(g for gs in groups.values() for g in gs):
         if lo != pos or hi - lo + 1 != n:
             raise RuntimeError(
                 f"doc_id assignment drift: row-group ids [{lo}, {hi}] ({n} rows) "
@@ -356,6 +350,21 @@ def _assert_dense_ids_from_footers(df: DataFrame, path: str, id_base: int, expec
             f"doc_id assignment drift: ids cover [{id_base}, {pos}) but "
             f"expected [{id_base}, {id_base + expected})"
         )
+
+
+def _assert_dense_ids_by_aggregate(docs: DataFrame, id_base: int, expected: int) -> None:
+    """The check where footers cannot give it: the written row count,
+    and (weaker than the tiling) the id range, in one aggregate job."""
+    r = docs.agg(
+        F.count("*").alias("n"), F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
+    ).collect()[0]
+    if int(r["n"]) != expected:
+        raise RuntimeError(
+            f"doc_id assignment drift: counted {expected} rows but wrote "
+            f"{r['n']} — partition planning changed between jobs"
+        )
+    if expected and (int(r["lo"]) != id_base or int(r["hi"]) != id_base + expected - 1):
+        raise RuntimeError("doc_id assignment drift (range check)")
 
 
 def doc_stats(docs: DataFrame) -> tuple[int, float]:

@@ -110,12 +110,20 @@ def _write_keyindex(rows: DataFrame, key: str, part: str, path: str) -> None:
 
 
 def _touched_buckets(keys: DataFrame, key: str) -> list[int]:
-    """The key-index buckets the `key` values of `keys` hash into:
-    ≤ KEY_BUCKETS tiny ints to the driver."""
+    """The key-index buckets the `key` values of `keys` hash into, by an
+    executor-side distinct: ≤ KEY_BUCKETS tiny ints to the driver."""
     return sorted(
         r["b"]
         for r in keys.select(_key_bucket(F.col(key)).alias("b")).distinct().collect()
     )
+
+
+def _listed_buckets(keys: DataFrame, key: str) -> list[int]:
+    """`_touched_buckets` for a driver-side key list (a `query.
+    local_frame`): Spark folds the bucket projection into the local
+    relation, so collecting it runs no job, and the dedup happens
+    here. A delete's keys arrive as such a list."""
+    return sorted({r[0] for r in keys.select(_key_bucket(F.col(key))).collect()})
 
 
 def _write_tombstones(rows: DataFrame, path: str) -> int:
@@ -138,7 +146,11 @@ def _write_tombstones(rows: DataFrame, path: str) -> int:
 
 
 def _live_prior_versions(
-    spark: SparkSession, out_dir: str, gens: list[dict], urls_df: DataFrame
+    spark: SparkSession,
+    out_dir: str,
+    gens: list[dict],
+    urls_df: DataFrame,
+    buckets: list[int],
 ) -> DataFrame | None:
     """Tombstone rows (TOMBSTONE_SCHEMA) of every LIVE doc version whose
     url is in `urls_df` — the rows an upsert or delete must tombstone.
@@ -154,7 +166,8 @@ def _live_prior_versions(
     on disk is not an error (a small generation materializes only the
     ub= dirs its urls fall in); an index generation without a key index
     is refused by name — skipping it would leave a second version of
-    its docs serving."""
+    its docs serving. `buckets` are the key-index buckets of those urls
+    (`_touched_buckets`, or `_listed_buckets` for a driver-side list)."""
     import os
 
     from theoremsearch_spark.query import local_frame
@@ -169,11 +182,10 @@ def _live_prior_versions(
                 "versions of its docs cannot be found; compact it into a "
                 "generation that has one, or re-ingest the root"
             )
-    touched = _touched_buckets(urls_df, "url")
     paths = [
         p
         for g in live
-        for b in touched
+        for b in buckets
         if os.path.isdir(p := f"{out_dir}/gen_{g}/keyindex/ub={b}")
     ]
     if not paths:
@@ -359,11 +371,12 @@ def compact_generations(
         .write.mode("overwrite")
         .parquet(f"{new_dir}/docs")
     )
-    from theoremsearch_spark.stats import write_id_range_manifest
-
     from theoremsearch_spark.positions import _written_row_count
+    from theoremsearch_spark.stats import footer_id_groups, write_id_range_manifest
 
-    write_id_range_manifest(f"{new_dir}/docs", docs.schema)
+    write_id_range_manifest(
+        f"{new_dir}/docs", docs.schema, footer_id_groups(f"{new_dir}/docs")
+    )
     docs = spark.read.schema(docs.schema).parquet(f"{new_dir}/docs")
     n = _written_row_count(spark, f"{new_dir}/docs", docs.schema)
     # preserve filter-term indexing across the rewrite: when every
@@ -558,7 +571,7 @@ def delete_documents(spark: SparkSession, out_dir: str, urls) -> dict:
     if not gens:
         raise ValueError(f"no committed generations under {out_dir}")
     url_df = local_frame(spark, _URL_SCHEMA, pd.DataFrame({"url": urls}))
-    dead = _live_prior_versions(spark, out_dir, gens, url_df)
+    dead = _live_prior_versions(spark, out_dir, gens, url_df, _listed_buckets(url_df, "url"))
     if dead is None:
         raise ValueError(f"only delete-only generations under {out_dir}")
     new_gen = _next_negative_gen(out_dir)
@@ -602,8 +615,11 @@ def _append_generation(
 
     gens = _generations(spark, out_dir)
     # resolved first, so a root whose prior versions cannot be found is
-    # refused before anything is written
-    dead = _live_prior_versions(spark, out_dir, gens, documents.select("url").distinct())
+    # refused before anything is written; a root's first batch has no
+    # prior versions to look up, so it runs no bucket job
+    urls = documents.select("url").distinct()
+    buckets = _touched_buckets(urls, "url") if gens else []
+    dead = _live_prior_versions(spark, out_dir, gens, urls, buckets)
     base = _next_free_doc_id(out_dir)
     gen_dir = f"{out_dir}/gen_{gen}"
     docs = prepare_docs(documents, gen_dir, id_base=base)
